@@ -54,6 +54,16 @@ _BAND_REF_SEC_END = {
 }
 
 
+# Ingest-time artifacts priced as setup lines, in output order. Each is
+# declared next to its builder (``@artifact(setup=..., used_by=...)``);
+# this list only fixes the order of the JSON keys under "setup".
+SETUP_ARTIFACTS = (
+    "ann_ivf_index ann_pq_index ann_ivfpq_index dedup_postings dedup_pairs "
+    "image_fingerprints audio_fingerprints image_nd_clusters audio_nd_clusters "
+    "video_frames video_nd_clusters trade_adjacency trade_edges stream_tiles"
+).split()
+
+
 def _band_probe(spark, queries, sf_dir: str) -> dict:
     """Median-of-3 wall seconds for each band-reference key, plus the
     band factor (median over keys of measured/pinned) when running at
@@ -138,130 +148,12 @@ def main() -> int:
             failures[f"setup:{name}"] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"SETUP-FAIL {name}: {exc}", file=sys.stderr, flush=True)
 
-    names = set(queries)
-    if names & {"v_ann_ivf", "v_ann_ivf_anchor", "v_ann_ivf_batch"}:
-        from delta_lake_stock_pipeline_spark.operators.similarity import _ivf_index
+    from delta_lake_stock_pipeline_spark.artifacts import PRICED
 
-        _setup("ann_ivf_index", lambda: _ivf_index(spark, sf_dir))
-    if names & {"v_ann_pq", "v_ann_pq_anchor"}:
-        from delta_lake_stock_pipeline_spark.operators.similarity import _pq_index
-
-        _setup("ann_pq_index", lambda: _pq_index(spark, sf_dir))
-    if names & {"v_ann_ivfpq", "v_ann_ivfpq_anchor"}:
-        from delta_lake_stock_pipeline_spark.operators.similarity import _ivfpq_index
-
-        _setup("ann_ivfpq_index", lambda: _ivfpq_index(spark, sf_dir))
-    # Gate on the keys that actually CONSUME each artifact (not the d_
-    # prefix): an isolated `SPARK_GRAFT_BENCH_ONLY=d_keep_latest` rerun
-    # must not pay the posting build for an events-table query.
-    posts_keys = {
-        "d_ngram_jaccard",
-        "d_minhash_lsh",
-        "d_minhash_lsh_anchor",
-        "d_dup_clusters",
-        "d_dup_clusters_sql",
-    }
-    pairs_keys = {"d_dup_clusters", "d_dup_clusters_sql"}
-    if names & posts_keys:
-        from delta_lake_stock_pipeline_spark.operators.dedup import _shingle_posts
-
-        _setup("dedup_postings", lambda: _shingle_posts(spark, sf_dir).count())
-    if names & pairs_keys:
-        from delta_lake_stock_pipeline_spark.operators.dedup import _dup_pairs
-
-        _setup("dedup_pairs", lambda: _dup_pairs(spark, sf_dir))
-    # Fingerprint artifact tables first (consumed by the neardup /
-    # incremental / consensus keys AND by the cluster builds below, so
-    # the mapInPandas decode+hash cost lands here exactly once).
-    if names & {
-        "m_image_neardup",
-        "m_image_incremental",
-        "m_av_consensus",
-        "m_image_dup_clusters",
-        "m_image_keeper",
-    }:
-        from delta_lake_stock_pipeline_spark.operators.multimodal import (
-            _ahash_table,
-        )
-
-        _setup("image_fingerprints", lambda: _ahash_table(spark, sf_dir))
-    if names & {
-        "m_audio_neardup",
-        "m_audio_incremental",
-        "m_av_consensus",
-        "m_audio_dup_clusters",
-        "m_audio_keeper",
-    }:
-        from delta_lake_stock_pipeline_spark.operators.multimodal import (
-            _afp_table,
-        )
-
-        _setup("audio_fingerprints", lambda: _afp_table(spark, sf_dir))
-    if names & {"m_image_dup_clusters", "m_image_keeper"}:
-        from delta_lake_stock_pipeline_spark.operators.multimodal import (
-            _nd_clusters,
-        )
-
-        _setup("image_nd_clusters", lambda: _nd_clusters(spark, sf_dir))
-    if names & {"m_audio_dup_clusters", "m_audio_keeper"}:
-        from delta_lake_stock_pipeline_spark.operators.multimodal import (
-            _and_clusters,
-        )
-
-        _setup("audio_nd_clusters", lambda: _and_clusters(spark, sf_dir))
-    if names & {
-        "m_video_neardup",
-        "m_video_incremental",
-        "m_video_dup_clusters",
-        "m_video_keeper",
-    }:
-        from delta_lake_stock_pipeline_spark.operators.multimodal import (
-            _vframes_table,
-        )
-
-        _setup("video_frames", lambda: _vframes_table(spark, sf_dir))
-    if names & {"m_video_dup_clusters", "m_video_keeper"}:
-        from delta_lake_stock_pipeline_spark.operators.multimodal import (
-            _vnd_clusters,
-        )
-
-        _setup("video_nd_clusters", lambda: _vnd_clusters(spark, sf_dir))
-    # The graph family shares one distinct trading-pair relation (and,
-    # for the node-labeled loops, one symmetric edge list) per session
-    # (round-10 optimization): price the builds once, here.
-    if names & {"g_pagerank", "g_kcore", "g_bfs_hops", "g_common_neighbors"}:
-        from delta_lake_stock_pipeline_spark.operators.graph import (
-            _cs_pairs_cached,
-        )
-
-        _setup("trade_adjacency", lambda: _cs_pairs_cached(spark, sf_dir))
-    if names & {"g_pagerank", "g_kcore", "g_bfs_hops"}:
-        from delta_lake_stock_pipeline_spark.operators.graph import (
-            _trade_edges_cached,
-        )
-
-        _setup("trade_edges", lambda: _trade_edges_cached(spark, sf_dir))
-    # The executed-streaming replays share one (ts, event_id) tile split
-    # of the events fixture per session (round-10 optimization): build it
-    # here so the one-time cost doesn't land on whichever replay key runs
-    # first (same pricing rationale as the ANN/dedup artifacts above).
-    if names & {
-        "s_cdc_upsert",
-        "s_stream_dedup",
-        "s_stream_sessions",
-        "s_stream_join",
-        "s_stream_late",
-        "s_stateful_counts",
-        "s_stream_enrich",
-        "s_stream_topk",
-        "s_stream_restart",
-        "s_stream_join_outer",
-    }:
-        from delta_lake_stock_pipeline_spark.streaming.windows import (
-            _tile_files,
-        )
-
-        _setup("stream_tiles", lambda: _tile_files(spark, sf_dir))
+    for name in SETUP_ARTIFACTS:
+        art = PRICED[name]
+        if art.used_by & set(queries):
+            _setup(name, lambda: art.prime(spark, sf_dir))
 
     band_start = _band_probe(spark, queries, sf_dir)
 
@@ -315,21 +207,9 @@ def main() -> int:
     if failures:
         out["failures"] = failures
     print(json.dumps(out))
-    from delta_lake_stock_pipeline_spark.operators.dedup import clear_posts_cache
-    from delta_lake_stock_pipeline_spark.operators.formats import clear_roundtrip_dirs
-    from delta_lake_stock_pipeline_spark.operators.multimodal import clear_nd_cache
-    from delta_lake_stock_pipeline_spark.operators.similarity import clear_ann_dirs
-    from delta_lake_stock_pipeline_spark.operators.storage_lifecycle import (
-        clear_lifecycle_dirs,
-    )
-    from delta_lake_stock_pipeline_spark.streaming.windows import clear_mv_dirs
+    from delta_lake_stock_pipeline_spark.artifacts import clear_all
 
-    clear_roundtrip_dirs()
-    clear_lifecycle_dirs()
-    clear_posts_cache()
-    clear_nd_cache()
-    clear_mv_dirs()
-    clear_ann_dirs()
+    clear_all()
     spark.stop()
     return 1 if failures else 0
 

@@ -17,8 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact, clear_all
 from ..sources.fixtures import load_table
-from ._session_cache import DataFrameSessionCache
 
 # Near-dup parameters: 3-token shingles, Jaccard threshold tuned to the
 # fixture's engineered near-dups (prefix-copied docs).
@@ -34,43 +34,21 @@ _MINHASH_K = 16
 _LSH_BANDS = 4
 
 
-_posts_cache = DataFrameSessionCache("shingle_posts")
-
-# Checkpointed near-dup pair table; shared by the two clustering forms so
-# the shingle self-join runs once per session+scale.
-_pairs_cache = DataFrameSessionCache("dup_pairs")
-
-# MinHash signature table (|docs| x 16 longs), reused across calls.
-_sig_cache = DataFrameSessionCache("minhash_sigs")
-
-# SimHash table (|docs| x 2 longs), shared by d_simhash and its anchor.
-_simhash_cache = DataFrameSessionCache("simhash")
+clear_posts_cache = clear_all  # old name, kept because perfbench/run.py imports it
 
 
-def clear_posts_cache() -> None:
-    """Drop every cached posting/pair/signature table. Call when done with a
-    session (tests/conftest and bench do) -- otherwise the persisted blocks
-    live until the owning session stops."""
-    _posts_cache.clear()
-    _pairs_cache.clear()  # checkpoint blocks die with the session
-    _sig_cache.clear()
-    _simhash_cache.clear()
-
-
-def _dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified near-dup pair list, materialized ONCE per session+scale
-    (localCheckpoint truncates the shingle-pipeline lineage so neither
-    consumer re-derives it)."""
-    return _pairs_cache.get_or_create(
-        spark,
-        sf_dir,
-        lambda: ngram_jaccard_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(),
-        persist=False,
-    )
-
-
+@artifact(
+    setup="dedup_postings",
+    used_by=(
+        "d_ngram_jaccard",
+        "d_minhash_lsh",
+        "d_minhash_lsh_anchor",
+        "d_dup_clusters",
+        "d_dup_clusters_sql",
+    ),
+    # The build only persists; pricing it means materializing the blocks.
+    force=DataFrame.count,
+)
 def _shingle_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct 3-token shingles as ROWS ``(doc_id, source, shingle, h)``
     with ``h = xxhash64(shingle)`` precomputed (all downstream joins and
@@ -83,16 +61,25 @@ def _shingle_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic; a window/lead formulation fixed that but paid a full
     sort-shuffle on doc_id -- this form has NO shuffle before ``distinct``).
 
-    The relation is cached per (session, sf_dir): every dedup query reuses
-    it, and within one query it feeds signature, candidate, and
+    The relation is persisted per (session, sf_dir): every dedup query
+    reuses it, and within one query it feeds signature, candidate, and
     verification branches -- uncached, Spark would recompute the explode
     for each branch (measured 45 s -> dominated d_minhash_lsh at sf0.1).
     At 100 TB the equivalent is materializing the posting table once.
+    Caching only pays off with several consumers: a single-consumer
+    relation is cheaper recomputed (measured for the contamination gram
+    posting, which deliberately is not an artifact).
     """
-    return _posts_cache.get_or_create(
-        spark,
-        sf_dir,
-        lambda: _posts_of(load_table(spark, sf_dir, "documents")),
+    return _posts_of(load_table(spark, sf_dir, "documents")).persist()
+
+
+@artifact(setup="dedup_pairs", used_by=("d_dup_clusters", "d_dup_clusters_sql"))
+def _dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The verified near-dup pair list, materialized ONCE per session+scale
+    (localCheckpoint truncates the shingle-pipeline lineage so neither
+    clustering form re-derives it)."""
+    return (
+        ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
     )
 
 
@@ -274,6 +261,29 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@artifact
+def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (|docs| x 16 longs) MinHash signature table. It is referenced
+    twice by the band self-join (and transitively by everything after);
+    persisting it lets each side read the 50k-row signature table instead
+    of re-running the posting aggregation -- the difference between one
+    and three full passes over the posting rows, measured 78 s -> 15 s at
+    sf0.1. As an artifact (not a bare ``.persist()``) repeated calls in
+    one session reuse ONE materialization and ``clear_all`` frees it -- a
+    per-call persist leaked storage blocks until session stop."""
+    return (
+        _shingle_posts(spark, sf_dir)
+        .groupBy("doc_id", "source")
+        .agg(
+            *[
+                F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"mh{i}")
+                for i in range(_MINHASH_K)
+            ]
+        )
+        .persist()
+    )
+
+
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup candidates, verified with exact Jaccard.
 
@@ -297,25 +307,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forbids the classic wrapping a*x+b form.
     posts = _shingle_posts(spark, sf_dir)
     rows_per_band = _MINHASH_K // _LSH_BANDS
-    # The signature relation is referenced twice by the band self-join (and
-    # transitively by everything after); persist it so each side reads the
-    # 50k-row signature table instead of re-running the posting aggregation.
-    # Cheap (|docs| x 16 longs) and the difference between one and three
-    # full passes over the posting rows -- measured 78 s -> 15 s at sf0.1.
-    # Session-cached (not a bare .persist()) so repeated calls in one
-    # session reuse ONE materialization and clear_posts_cache frees it --
-    # a per-call persist leaked storage blocks until session stop.
-    sig = _sig_cache.get_or_create(
-        spark,
-        sf_dir,
-        lambda: posts.groupBy("doc_id", "source").agg(
-            *[
-                F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"mh{i}")
-                for i in range(_MINHASH_K)
-            ]
-        ),
-    )
-    bands = sig.select(
+    bands = _minhash_sigs(spark, sf_dir).select(
         "doc_id",
         "source",
         F.posexplode(
@@ -479,45 +471,46 @@ def simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bit-majority is expressed as 64 conditional aggregates over exploded
     tokens -- pure JVM expressions, one shuffle on doc_id.
 
-    Session-cached: since round 4 the relation has TWO consumers
+    The table is a persisted artifact: since round 4 it has TWO consumers
     (d_simhash and d_simhash_anchor), which is the cache rule's break-even
     (single-consumer persists measured as a net loss).
     """
+    return _simhash_table(spark, sf_dir).orderBy("doc_id")
 
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        # repartition pre-explode: parallelize the 64-expression partial
-        # agg (single-file scan would otherwise run it in one task).
-        toks = docs.repartition(32, "doc_id").select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split(F.lower("text"), " "))).alias(
-                "tok"
-            ),
-        ).withColumn("h", F.xxhash64("tok"))
-        # For each bit: +1 if set else -1; simhash bit = (sum >= 0).
-        bit_sums = toks.groupBy("doc_id").agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-                    ).otherwise(-1)
-                ).alias(f"b{i}")
-                for i in range(64)
-            ]
-        )
-        simhash = None
-        for i in range(64):
-            bit = F.when(
-                F.col(f"b{i}") >= 0, F.shiftleft(F.lit(1).cast("long"), i)
-            ).otherwise(F.lit(0).cast("long"))
-            simhash = bit if simhash is None else (simhash.bitwiseOR(bit))
-        return bit_sums.select(
-            "doc_id",
-            simhash.alias("simhash"),
-            F.shiftrightunsigned(simhash, 48).alias("band16"),
-        )
 
-    return _simhash_cache.get_or_create(spark, sf_dir, build).orderBy("doc_id")
+@artifact
+def _simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    # repartition pre-explode: parallelize the 64-expression partial
+    # agg (single-file scan would otherwise run it in one task).
+    toks = docs.repartition(32, "doc_id").select(
+        "doc_id",
+        F.explode(F.array_distinct(F.split(F.lower("text"), " "))).alias(
+            "tok"
+        ),
+    ).withColumn("h", F.xxhash64("tok"))
+    # For each bit: +1 if set else -1; simhash bit = (sum >= 0).
+    bit_sums = toks.groupBy("doc_id").agg(
+        *[
+            F.sum(
+                F.when(
+                    F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
+                ).otherwise(-1)
+            ).alias(f"b{i}")
+            for i in range(64)
+        ]
+    )
+    simhash = None
+    for i in range(64):
+        bit = F.when(
+            F.col(f"b{i}") >= 0, F.shiftleft(F.lit(1).cast("long"), i)
+        ).otherwise(F.lit(0).cast("long"))
+        simhash = bit if simhash is None else (simhash.bitwiseOR(bit))
+    return bit_sums.select(
+        "doc_id",
+        simhash.alias("simhash"),
+        F.shiftrightunsigned(simhash, 48).alias("band16"),
+    ).persist()
 
 
 def simhash_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact, clear_all
 from ..session import scratch_mkdtemp
 from ..sources.fixtures import load_table
 
@@ -33,43 +34,23 @@ _ORDERS_DDL = (
     "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"
 )
 
-# (applicationId, sf_dir, fmt) -> written directory
-_written: dict[tuple[str, str, str], str] = {}
+clear_roundtrip_dirs = clear_all  # old name, kept because perfbench/run.py imports it
 
 
-def clear_roundtrip_dirs() -> None:
-    """Delete every round-trip temp directory this process wrote. Call when
-    done with a session (tests/conftest does, next to the dedup cache
-    clear) -- otherwise each session leaks two orders-table copies under
-    the system temp dir. Root guard as in ``clear_lifecycle_dirs``:
-    never rmtree above the entry's own scratch dir."""
-    import shutil
-
-    from ..session import scratch_root
-
-    root = scratch_root()
-    for path in _written.values():
-        parent = os.path.dirname(path)
-        shutil.rmtree(path if parent == root else parent, ignore_errors=True)
-    _written.clear()
-
-
+@artifact
 def _roundtrip_path(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     """Write ``orders`` through the ``fmt`` sink once per session+fixture."""
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    if key not in _written:
-        path = os.path.join(scratch_mkdtemp(prefix=f"spark_{fmt}_rt_"), "orders")
-        writer = load_table(spark, sf_dir, "orders").write
-        if fmt == "csv":
-            writer.option("header", "true").csv(path)
-        elif fmt == "orc":
-            writer.orc(path)
-        elif fmt == "xml":
-            writer.format("xml").option("rowTag", "order").save(path)
-        else:
-            writer.json(path)
-        _written[key] = path
-    return _written[key]
+    path = os.path.join(scratch_mkdtemp(prefix=f"spark_{fmt}_rt_"), "orders")
+    writer = load_table(spark, sf_dir, "orders").write
+    if fmt == "csv":
+        writer.option("header", "true").csv(path)
+    elif fmt == "orc":
+        writer.orc(path)
+    elif fmt == "xml":
+        writer.format("xml").option("rowTag", "order").save(path)
+    else:
+        writer.json(path)
+    return path
 
 
 def _orders_aggregate(df: DataFrame) -> DataFrame:
@@ -142,31 +123,29 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _orders_aggregate(df)
 
 
+@artifact
 def _binary_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write the first 8 documents' utf-8 bytes as individual ``.bin``
     files once per session+fixture -- driver-side, 8 bounded files (a
     fixture rendering of an object-store image/audio bucket; real buckets
     are written by producers, not the engine)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "binfiles")
-    if key not in _written:
-        # text IS NOT NULL on BOTH sides (write here, oracle WHERE): a
-        # NULL among doc_id<8 would otherwise be written as the literal
-        # bytes "None" while the oracle emits NULL md5/octet_length -- a
-        # guaranteed driver mismatch instead of fixture-dependent luck.
-        rows = (
-            load_table(spark, sf_dir, "documents")
-            .filter((F.col("doc_id") < 8) & F.col("text").isNotNull())
-            .select("doc_id", "text")
-            .orderBy("doc_id")
-            .collect()
-        )
-        path = os.path.join(scratch_mkdtemp(prefix="spark_bin_rt_"), "docs")
-        os.makedirs(path)
-        for r in rows:
-            with open(os.path.join(path, f"{int(r[0]):04d}.bin"), "wb") as fh:
-                fh.write(r[1].encode("utf-8"))
-        _written[key] = path
-    return _written[key]
+    # text IS NOT NULL on BOTH sides (write here, oracle WHERE): a
+    # NULL among doc_id<8 would otherwise be written as the literal
+    # bytes "None" while the oracle emits NULL md5/octet_length -- a
+    # guaranteed driver mismatch instead of fixture-dependent luck.
+    rows = (
+        load_table(spark, sf_dir, "documents")
+        .filter((F.col("doc_id") < 8) & F.col("text").isNotNull())
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .collect()
+    )
+    path = os.path.join(scratch_mkdtemp(prefix="spark_bin_rt_"), "docs")
+    os.makedirs(path)
+    for r in rows:
+        with open(os.path.join(path, f"{int(r[0]):04d}.bin"), "wb") as fh:
+            fh.write(r[1].encode("utf-8"))
+    return path
 
 
 def binary_files_source(spark: SparkSession, sf_dir: str) -> DataFrame:

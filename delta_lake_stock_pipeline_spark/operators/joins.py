@@ -22,10 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact
 from ..sources.fixtures import load_table
-
-# applicationId -> scoped child session for bloom_pruned_join (see there).
-_bloom_sessions: dict[str, SparkSession] = {}
 
 
 def broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,6 +577,31 @@ def asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@artifact
+def _bloom_session(spark: SparkSession) -> SparkSession:
+    """Child session for ``bloom_pruned_join``: it shares the SparkContext
+    (and therefore executors and cache) but owns an INDEPENDENT SQL conf,
+    so (a) the bloom confs never leak to concurrent queries on the
+    caller's session, and (b) any later transformation of the returned
+    frame re-plans under the SAME scoped confs instead of silently losing
+    the bloom injection (round-2 advice, joins.py:312). One per
+    application, so repeated calls (bench, plan gates, blanket audits)
+    reuse ONE child SessionState instead of accumulating a new JVM
+    session per call."""
+    child = spark.newSession()
+    for k, v in {
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        # Fixture scans are ~MBs; lift the 10 GB application-side floor so
+        # the injection rule fires at demo scale.
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+        # Keep the creation side out of broadcast range so the join shuffles
+        # (the rule skips broadcast-able creation sides by design).
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }.items():
+        child.conf.set(k, v)
+    return child
+
+
 def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle join with a Catalyst-injected runtime bloom filter: the
     selective dimension side (urgent orders) builds a ``bloom_filter_agg``
@@ -595,36 +618,7 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan gate: tests/test_plans.py asserts ``bloom_filter_agg`` /
     ``might_contain`` in the optimized plan. Oracle: the plain join SQL.
     """
-    scoped = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        # Fixture scans are ~MBs; lift the 10 GB application-side floor so
-        # the injection rule fires at demo scale.
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        # Keep the creation side out of broadcast range so the join shuffles
-        # (the rule skips broadcast-able creation sides by design).
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    # Child session: shares the SparkContext (and therefore executors and
-    # cache) but owns an INDEPENDENT SQL conf, so (a) the bloom confs never
-    # leak to concurrent queries on the caller's session, and (b) any later
-    # transformation of the returned frame re-plans under the SAME scoped
-    # confs instead of silently losing the bloom injection (round-2 advice,
-    # joins.py:312). Memoized per application so repeated calls (bench,
-    # plan gates, blanket audits) reuse ONE child SessionState instead of
-    # accumulating a new JVM session per call.
-    app_id = spark.sparkContext.applicationId
-    # Evict entries from dead contexts (a process that restarts its
-    # SparkSession gets a new applicationId; stale children would pin dead
-    # JVM SessionState forever), then memoize race-tolerantly: concurrent
-    # first calls may both build a child, setdefault keeps exactly one.
-    for stale in [k for k in _bloom_sessions if k != app_id]:
-        _bloom_sessions.pop(stale, None)
-    child = _bloom_sessions.get(app_id)
-    if child is None:
-        candidate = spark.newSession()
-        for k, v in scoped.items():
-            candidate.conf.set(k, v)
-        child = _bloom_sessions.setdefault(app_id, candidate)
+    child = _bloom_session(spark)
     lineitem = load_table(child, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )

@@ -26,7 +26,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact, clear_all
 from ..sources.fixtures import load_table
+
+clear_nd_cache = clear_all  # old name, kept because perfbench/run.py imports it
 
 _FRAME_FPS = 2
 _MAX_FRAMES = 16
@@ -585,69 +588,71 @@ def image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session cache for the image-dedup component labels: the contraction
-# over the sf0.1 pair graph (one 1,634-image chained component) is the
-# family's one-time artifact, shared by m_image_dup_clusters and
-# m_image_keeper -- the _dup_pairs/_shingle_posts precedent. Keyed by
-# (applicationId, sf_dir); bench.py prices the build as a setup line and
-# clears via clear_nd_cache().
-_ND_CACHE: dict = {}
-
-
-def clear_nd_cache() -> None:
-    _ND_CACHE.clear()
-
-
+@artifact(
+    setup="image_fingerprints",
+    used_by=(
+        "m_image_neardup",
+        "m_image_incremental",
+        "m_av_consensus",
+        "m_image_dup_clusters",
+        "m_image_keeper",
+    ),
+)
 def _ahash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached aHash fingerprints of the twin-augmented corpus --
-    consumed by five keys (image neardup/incremental/clusters/keeper and
-    the consensus matrix), so the mapInPandas decode+hash pipeline runs
-    ONCE per session instead of per key. At 100 TB this IS the persisted
-    fingerprint artifact table the maintenance loop owns; bench.py
-    prices the build as a setup line."""
-    key = (spark.sparkContext.applicationId, sf_dir, "ahash")
-    if key not in _ND_CACHE:
-        _ND_CACHE[key] = _ahash_of(
-            _pgm_of(_neardup_corpus(spark, sf_dir))
-        ).localCheckpoint()
-    return _ND_CACHE[key]
+    """aHash fingerprints of the twin-augmented corpus -- consumed by five
+    keys (image neardup/incremental/clusters/keeper and the consensus
+    matrix), so the mapInPandas decode+hash pipeline runs ONCE per
+    session instead of per key. At 100 TB this IS the persisted
+    fingerprint artifact table the maintenance loop owns."""
+    return _ahash_of(_pgm_of(_neardup_corpus(spark, sf_dir))).localCheckpoint()
 
 
+@artifact(
+    setup="audio_fingerprints",
+    used_by=(
+        "m_audio_neardup",
+        "m_audio_incremental",
+        "m_av_consensus",
+        "m_audio_dup_clusters",
+        "m_audio_keeper",
+    ),
+)
 def _afp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached audio fingerprints of the twin-augmented corpus --
-    the audio twin of ``_ahash_table`` (neardup/incremental/clusters/
-    keeper/consensus consumers)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "afp")
-    if key not in _ND_CACHE:
-        media = _neardup_corpus(spark, sf_dir).select(
-            "doc_id", F.encode("text", "utf-8").alias("payload")
-        )
-        _ND_CACHE[key] = _afp_of(media).localCheckpoint()
-    return _ND_CACHE[key]
+    """Audio fingerprints of the twin-augmented corpus -- the audio twin of
+    ``_ahash_table`` (neardup/incremental/clusters/keeper/consensus
+    consumers)."""
+    media = _neardup_corpus(spark, sf_dir).select(
+        "doc_id", F.encode("text", "utf-8").alias("payload")
+    )
+    return _afp_of(media).localCheckpoint()
 
 
+# The image-dedup component labels: the contraction over the sf0.1 pair
+# graph (one 1,634-image chained component) is the family's one-time
+# artifact, shared by m_image_dup_clusters and m_image_keeper -- the
+# _dup_pairs/_shingle_posts precedent.
+@artifact(
+    setup="image_nd_clusters", used_by=("m_image_dup_clusters", "m_image_keeper")
+)
 def _nd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "image")
-    if key not in _ND_CACHE:
-        from .dedup import largestar_components
+    from .dedup import largestar_components
 
-        pairs = image_neardup(spark, sf_dir).select("doc_a", "doc_b")
-        _ND_CACHE[key] = largestar_components(pairs).localCheckpoint()
-    return _ND_CACHE[key]
+    pairs = image_neardup(spark, sf_dir).select("doc_a", "doc_b")
+    return largestar_components(pairs).localCheckpoint()
 
 
+@artifact(
+    setup="audio_nd_clusters", used_by=("m_audio_dup_clusters", "m_audio_keeper")
+)
 def _and_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio twin of ``_nd_clusters``: star-contraction labels over the
     verified ``m_audio_neardup`` pair graph (sf0.1: 3,599 pairs, 472
-    labeled clips with one 463-clip near-clique), cached per session and
-    shared by the audio clusters and keeper keys."""
-    key = (spark.sparkContext.applicationId, sf_dir, "audio")
-    if key not in _ND_CACHE:
-        from .dedup import largestar_components
+    labeled clips with one 463-clip near-clique), shared by the audio
+    clusters and keeper keys."""
+    from .dedup import largestar_components
 
-        pairs = audio_neardup(spark, sf_dir).select("doc_a", "doc_b")
-        _ND_CACHE[key] = largestar_components(pairs).localCheckpoint()
-    return _ND_CACHE[key]
+    pairs = audio_neardup(spark, sf_dir).select("doc_a", "doc_b")
+    return largestar_components(pairs).localCheckpoint()
 
 
 def image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2036,38 +2041,40 @@ ORACLES["m_video_neardup"] = """
 """
 
 
+@artifact(
+    setup="video_frames",
+    used_by=(
+        "m_video_neardup",
+        "m_video_incremental",
+        "m_video_dup_clusters",
+        "m_video_keeper",
+    ),
+)
 def _vframes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached per-frame signature table of the twin-augmented
-    video corpus -- the video twin of ``_ahash_table``/``_afp_table``
-    (round-10 optimization): consumed by ``m_video_neardup``,
-    ``m_video_incremental`` and the ``_vnd_clusters`` build, so the HOF
-    framing projection over the corpus runs ONCE per session instead of
-    once per key. At 100 TB this IS the persisted frame-signature index
-    the pairing joins against; bench.py prices the build as a setup
-    line."""
-    key = (spark.sparkContext.applicationId, sf_dir, "vframes")
-    if key not in _ND_CACHE:
-        _ND_CACHE[key] = _video_frames_of(
-            _video_corpus(spark, sf_dir)
-        ).localCheckpoint()
-    return _ND_CACHE[key]
+    """Per-frame signature table of the twin-augmented video corpus -- the
+    video twin of ``_ahash_table``/``_afp_table`` (round-10 optimization):
+    consumed by ``m_video_neardup``, ``m_video_incremental`` and the
+    ``_vnd_clusters`` build, so the HOF framing projection over the
+    corpus runs ONCE per session instead of once per key. At 100 TB this
+    IS the persisted frame-signature index the pairing joins against."""
+    return _video_frames_of(_video_corpus(spark, sf_dir)).localCheckpoint()
 
 
+@artifact(
+    setup="video_nd_clusters", used_by=("m_video_dup_clusters", "m_video_keeper")
+)
 def _vnd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video twin of ``_nd_clusters``: star-contraction labels over the
-    verified ``m_video_neardup`` pair graph, cached per session and
-    shared by the video clusters and keeper keys. Unlike the audio leg's
-    near-clique, the exact-frame pair graph is all 2-node twin
-    components on the fixtures -- the easy topology; the shared core is
-    used for uniformity (and because a real corpus's re-encode chains
-    A~B~C make the closure non-trivial immediately)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "video")
-    if key not in _ND_CACHE:
-        from .dedup import largestar_components
+    verified ``m_video_neardup`` pair graph, shared by the video clusters
+    and keeper keys. Unlike the audio leg's near-clique, the exact-frame
+    pair graph is all 2-node twin components on the fixtures -- the easy
+    topology; the shared core is used for uniformity (and because a real
+    corpus's re-encode chains A~B~C make the closure non-trivial
+    immediately)."""
+    from .dedup import largestar_components
 
-        pairs = video_neardup(spark, sf_dir).select("doc_a", "doc_b")
-        _ND_CACHE[key] = largestar_components(pairs).localCheckpoint()
-    return _ND_CACHE[key]
+    pairs = video_neardup(spark, sf_dir).select("doc_a", "doc_b")
+    return largestar_components(pairs).localCheckpoint()
 
 
 def video_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact, clear_all, own_dir
 from ..functions.vector import cosine, dot, norm
 from ..session import scratch_root
 from ..sources.fixtures import load_table
@@ -31,28 +32,25 @@ _ANN_PLANES = 8
 _DIM = 64
 
 
-# (applicationId, sf_dir, vec_id) -> query vector. A bounded query
-# PARAMETER fetched per session, like the k-means centroids: before
-# round 11 every v_ key (and both sides of every anchor) re-ran the
-# one-row filter+first() job -- ~10 keys x 1-2 scheduler round-trips of
-# identical work per sweep (guide §1.2). The fixture is immutable per
-# sf_dir, so the parameter cannot go stale within a session.
-_qvec_cache: dict[tuple[str, str, int], list[float]] = {}
+clear_ann_dirs = clear_all  # old name, kept because perfbench/run.py imports it
 
 
-def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
+# A bounded query PARAMETER fetched once per application, like the k-means
+# centroids: before round 11 every v_ key (and both sides of every anchor)
+# re-ran the one-row filter+first() job -- ~10 keys x 1-2 scheduler
+# round-trips of identical work per sweep (guide §1.2). The fixture is
+# immutable per sf_dir, so the parameter cannot go stale within a session.
+@artifact
+def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
     """Fetch one query vector driver-side (a query *parameter*, not data
-    flow -- one row crosses the driver boundary; cached per session)."""
-    key = (spark.sparkContext.applicationId, sf_dir, vec_id)
-    if key not in _qvec_cache:
-        row = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == vec_id)
-            .select("embedding")
-            .first()
-        )
-        _qvec_cache[key] = list(row[0])
-    return _qvec_cache[key]
+    flow -- one row crosses the driver boundary)."""
+    row = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == vec_id)
+        .select("embedding")
+        .first()
+    )
+    return list(row[0])
 
 
 def _lit_vec(vals: list[float]):
@@ -473,7 +471,7 @@ def _sweep_stale_tmps(base: str) -> None:
     max_age_s = 24 * 3600.0
     own_pid = str(os.getpid())
     # Session-scoped final dirs (round-10): a crashed session cannot
-    # clear_ann_dirs() its own builds, so siblings of ``base`` past the
+    # clear_all() its own builds, so siblings of ``base`` past the
     # age cap are reaped here before a new build -- never ``base`` itself
     # and never anything fresher than the cap (which no live session
     # reaches).
@@ -517,56 +515,23 @@ def _sweep_stale_tmps(base: str) -> None:
             shutil.rmtree(tmp, ignore_errors=True)
 
 
-# (applicationId, sf_dir) -> (index_path, trained_centroids). The index is
-# the session's ingest-time artifact; every ann_ivf query reuses it.
-_ivf_cache: dict[tuple[str, str], tuple[str, list[list[float]]]] = {}
-
-# Index base dirs built BY THIS PROCESS, for clear_ann_dirs(). Session-
-# scoping (round-10 optimization-round contract): every bench/oracle
-# invocation must compute its artifacts from the parquet inputs, so the
-# on-disk index dirs are keyed by applicationId (fresh per session) and
-# reaped at bench/suite end -- nothing persists across runs. A crashed
-# session's leftovers are reaped by the 24 h age cap in
-# ``_sweep_stale_tmps``.
-_ann_dirs: list[str] = []
+# The ANN indexes are session-scoped (round-10 optimization-round
+# contract): every bench/oracle invocation must compute its artifacts from
+# the parquet inputs, so the on-disk index dirs are keyed by applicationId
+# (fresh per session), owned by their artifact and reaped by clear_all()
+# -- nothing persists across runs. A crashed session's leftovers are
+# reaped by the 24 h age cap in ``_sweep_stale_tmps``.
 
 
-import weakref
-
-# SparkSession -> {index path: DataFrame handle}. Metadata reuse only,
-# the fixtures.load_table rationale: every ``spark.read.parquet`` costs
-# ~150-300 ms of single-threaded driver footer/listing work, and each
-# ANN query key re-paid it per index read. The scan stays lazy --
-# execution reads the index files every time; index dirs are immutable
-# once atomically renamed into place and session-scoped anyway. Keyed by
-# the session OBJECT so a child session plans under its own confs.
-_idx_df_cache: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+@artifact
 def _read_index(spark: SparkSession, path: str) -> DataFrame:
-    per_session = _idx_df_cache.setdefault(spark, {})
-    if path not in per_session:
-        per_session[path] = spark.read.parquet(path)
-    return per_session[path]
-
-
-def clear_ann_dirs() -> None:
-    """Delete every ANN index dir this process built (bench/conftest call
-    this next to the other operator-cache clears). Root guard: only dirs
-    registered by our own builders are touched, each two levels below the
-    scratch root."""
-    import shutil
-
-    for path in _ann_dirs:
-        shutil.rmtree(path, ignore_errors=True)
-    _ann_dirs.clear()
-    _ivf_cache.clear()
-    _pq_index_cache.clear()
-    _ivfpq_index_cache.clear()
-    _qvec_cache.clear()
-    _idx_df_cache.clear()
+    """Scan handle of an index dir. Metadata reuse only, the
+    fixtures.load_table rationale: every ``spark.read.parquet`` costs
+    ~150-300 ms of single-threaded driver footer/listing work, and each
+    ANN query key re-paid it per index read. The scan stays lazy --
+    execution reads the index files every time; index dirs are immutable
+    once atomically renamed into place."""
+    return spark.read.parquet(path)
 
 
 def _mark_builder(tmp: str) -> None:
@@ -577,6 +542,9 @@ def _mark_builder(tmp: str) -> None:
         fh.write(str(os.getpid()))
 
 
+@artifact(
+    setup="ann_ivf_index", used_by=("v_ann_ivf", "v_ann_ivf_anchor", "v_ann_ivf_batch")
+)
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[list[float]]]:
     """Build (once per session+sf_dir) the IVF index: train centroids with
     spherical-k-means Lloyd iterations, then write the corpus partitioned
@@ -597,10 +565,6 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[list[float]]
     concurrent builders can't observe a half-index.
     """
     import json
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ivf_cache:
-        return _ivf_cache[key]
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     tag = hashlib.sha1(
@@ -665,9 +629,8 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[list[float]]
 
     with open(meta) as fh:
         centroids = json.load(fh)
-    _ann_dirs.append(base)
-    _ivf_cache[key] = (idx, centroids)
-    return _ivf_cache[key]
+    own_dir(base)
+    return idx, centroids
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -948,12 +911,6 @@ _PQ_TRAIN_ITERS = 12
 _PQ_SAMPLE = 512  # training-sample bound (vec_id < _PQ_SAMPLE)
 _PQ_SHORTLIST = 100  # ADC shortlist reranked exactly
 
-# (applicationId, sf_dir) -> (M, K, SUB) float64 codebooks.
-_pq_cache: dict[tuple[str, str], "np.ndarray"] = {}
-# (applicationId, sf_dir) -> (codes_path, codebooks).
-_pq_index_cache: dict[tuple[str, str], tuple[str, "np.ndarray"]] = {}
-
-
 def _pq_normalize(mat: "np.ndarray") -> "np.ndarray":
     """Row-normalize to unit L2; zero-norm rows stay zero (the same guard
     as the int8 path -- cosine against them is undefined, ADC scores 0)."""
@@ -961,6 +918,7 @@ def _pq_normalize(mat: "np.ndarray") -> "np.ndarray":
     return np.divide(mat, norms, out=np.zeros_like(mat), where=norms > 0.0)
 
 
+@artifact
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "np.ndarray":
     """Train the PQ codebooks on a BOUNDED deterministic sample (vec_id <
     _PQ_SAMPLE) collected driver-side -- codebooks are always trained on a
@@ -972,9 +930,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "np.ndarray":
     subvectors, _PQ_TRAIN_ITERS Lloyd iterations, L2 metric over the
     row-NORMALIZED sample (so ADC inner products approximate cosine).
     Pure float64 numpy -- bit-deterministic for a given fixture."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _pq_cache:
-        return _pq_cache[key]
     rows = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < _PQ_SAMPLE)
@@ -1008,7 +963,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "np.ndarray":
                 if len(members):  # empty cluster keeps its centroid
                     cents[c] = members.mean(axis=0)
         books[s] = cents
-    _pq_cache[key] = books
     return books
 
 
@@ -1063,6 +1017,7 @@ def _pq_adc_col(codes_col: F.Column, books: "np.ndarray", qvec: list[float]) -> 
     return score
 
 
+@artifact(setup="ann_pq_index", used_by=("v_ann_pq", "v_ann_pq_anchor"))
 def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, "np.ndarray"]:
     """Build (once per corpus) the PQ index artifact: the codebooks plus a
     parquet of ``(vec_id, label, pq_codes)`` -- 4 bytes of code per vector
@@ -1073,10 +1028,6 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, "np.ndarray"]:
     cross-run reuse per the bench contract) with atomic tmp-dir+rename
     builds."""
     import json
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _pq_index_cache:
-        return _pq_index_cache[key]
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     tag = hashlib.sha1(
@@ -1110,9 +1061,8 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, "np.ndarray"]:
 
     with open(meta) as fh:
         books = np.asarray(json.load(fh), dtype=np.float64)
-    _ann_dirs.append(base)
-    _pq_index_cache[key] = (idx, books)
-    return _pq_index_cache[key]
+    own_dir(base)
+    return idx, books
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,10 +1112,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> ivfpq codes path.
-_ivfpq_index_cache: dict[tuple[str, str], str] = {}
-
-
+@artifact(setup="ann_ivfpq_index", used_by=("v_ann_ivfpq", "v_ann_ivfpq_anchor"))
 def _ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per corpus) the IVF-PQ artifact -- FAISS's production
     index layout: the PQ codes table written PARTITIONED BY the IVF
@@ -1173,10 +1120,6 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     query prunes to nprobe partition directories AND reads 64x-compressed
     rows -- the two savings multiply. Reuses the trained IVF centroids and
     PQ codebooks; session-scoped and atomically built like its parents."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ivfpq_index_cache:
-        return _ivfpq_index_cache[key]
-
     src = os.path.join(sf_dir, "embeddings.parquet")
     tag = hashlib.sha1(
         f"{spark.sparkContext.applicationId}:{src}"
@@ -1213,8 +1156,7 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
 
             shutil.rmtree(tmp, ignore_errors=True)
 
-    _ann_dirs.append(base)
-    _ivfpq_index_cache[key] = idx
+    own_dir(base)
     return idx
 
 

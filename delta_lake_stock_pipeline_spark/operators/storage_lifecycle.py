@@ -20,11 +20,11 @@ same operations behave on a 100 TB table.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact, clear_all
 from ..session import scratch_mkdtemp
 from ..sources.fixtures import load_table
 from ..storage import (
@@ -40,54 +40,30 @@ _PART_COLS = ["o_orderpriority"]
 _DELETE_COND = "o_totalprice < 20000"
 _UPD_MOD = 97
 
-# (applicationId, sf_dir) -> mutated table path; the lifecycle writes once
-# per session+fixture and every call reads the committed versions.
-_tables: dict[tuple[str, str], str] = {}
+clear_lifecycle_dirs = clear_all  # old name, kept because perfbench/run.py imports it
 
 
-def clear_lifecycle_dirs() -> None:
-    """Delete every lifecycle scratch table this process wrote (conftest
-    calls this next to the other operator-cache clears). Most cached
-    paths are <scratch-dir>/<table> so the rmtree target is the parent
-    mkdtemp dir -- but ``_bucketed_db`` caches the mkdtemp dir ITSELF,
-    whose parent is the shared ``.tmp`` scratch root. Deleting that
-    parent nuked the whole root (every live Spark local dir, the ANN
-    index caches, concurrent processes' scratch) at each cleanup -- the
-    round-10 bug that presented as the "/tmp cleaner" striking inside
-    the repo. Guard: never rmtree above the entry's own scratch dir."""
-    from ..session import scratch_root
-
-    root = scratch_root()
-    for path in _tables.values():
-        parent = os.path.dirname(path)
-        shutil.rmtree(path if parent == root else parent, ignore_errors=True)
-    _tables.clear()
-    _bucketed_dbs.clear()
-
-
+@artifact
 def _mutated_table(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _tables:
-        path = os.path.join(scratch_mkdtemp(prefix="spark_lifecycle_"), "orders")
-        orders = load_table(spark, sf_dir, "orders")
-        # v0: full write partitioned by priority.
-        write_partitioned(orders, path, _PART_COLS)
-        # v1: DELETE (partition-pruned copy-on-write).
-        delete_where(spark, path, _DELETE_COND, _PART_COLS)
-        # v2: MERGE upsert -- keys drawn from the ORIGINAL fixture, so some
-        # update rows re-insert orders the DELETE removed (the interesting
-        # upsert case), price doubled to make updates visible.
-        upd = orders.filter(F.col("o_orderkey") % _UPD_MOD == 0).withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
-        )
-        merge_into(spark, path, upd, ["o_orderkey"], _PART_COLS)
-        # v3: OPTIMIZE + Z-order on o_custkey -- content-preserving by
-        # contract, and because the live read below goes through this
-        # version, the driver's value hash independently PROVES compaction
-        # changed no row.
-        optimize(spark, path, _PART_COLS, zorder_by="o_custkey")
-        _tables[key] = path
-    return _tables[key]
+    path = os.path.join(scratch_mkdtemp(prefix="spark_lifecycle_"), "orders")
+    orders = load_table(spark, sf_dir, "orders")
+    # v0: full write partitioned by priority.
+    write_partitioned(orders, path, _PART_COLS)
+    # v1: DELETE (partition-pruned copy-on-write).
+    delete_where(spark, path, _DELETE_COND, _PART_COLS)
+    # v2: MERGE upsert -- keys drawn from the ORIGINAL fixture, so some
+    # update rows re-insert orders the DELETE removed (the interesting
+    # upsert case), price doubled to make updates visible.
+    upd = orders.filter(F.col("o_orderkey") % _UPD_MOD == 0).withColumn(
+        "o_totalprice", F.col("o_totalprice") * 2
+    )
+    merge_into(spark, path, upd, ["o_orderkey"], _PART_COLS)
+    # v3: OPTIMIZE + Z-order on o_custkey -- content-preserving by
+    # contract, and because the live read below goes through this
+    # version, the driver's value hash independently PROVES compaction
+    # changed no row.
+    optimize(spark, path, _PART_COLS, zorder_by="o_custkey")
+    return path
 
 
 def _rollup(df: DataFrame) -> DataFrame:
@@ -124,6 +100,7 @@ _EVO_MOD = 31
 _EVO_BAND = 10000
 
 
+@artifact
 def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
     """Two-commit schema-evolution table: v0 writes ``orders`` under
     ``batch=base``; v1 APPENDS a subset under ``batch=delta`` carrying an
@@ -132,29 +109,26 @@ def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
     `mergeSchema` extension). The v1 commit carries v0's partitions by
     manifest reference (``base_snapshot``), so the append rewrites zero
     base bytes -- the 100 TB-honest append shape."""
-    key = ("evo", spark.sparkContext.applicationId, sf_dir)
-    if key not in _tables:
-        path = os.path.join(scratch_mkdtemp(prefix="spark_lifecycle_"), "orders_evo")
-        orders = load_table(spark, sf_dir, "orders")
-        base = orders.withColumn("batch", F.lit("base"))
-        write_partitioned(base, path, ["batch"])
-        delta = (
-            orders.filter(F.col("o_orderkey") % _EVO_MOD == 0)
-            .withColumn("batch", F.lit("delta"))
-            .withColumn(
-                "o_price_band",
-                F.floor(F.col("o_totalprice") / _EVO_BAND).cast("int"),
-            )
+    path = os.path.join(scratch_mkdtemp(prefix="spark_lifecycle_"), "orders_evo")
+    orders = load_table(spark, sf_dir, "orders")
+    base = orders.withColumn("batch", F.lit("base"))
+    write_partitioned(base, path, ["batch"])
+    delta = (
+        orders.filter(F.col("o_orderkey") % _EVO_MOD == 0)
+        .withColumn("batch", F.lit("delta"))
+        .withColumn(
+            "o_price_band",
+            F.floor(F.col("o_totalprice") / _EVO_BAND).cast("int"),
         )
-        write_partitioned(
-            delta,
-            path,
-            ["batch"],
-            operation="APPEND",
-            base_snapshot=snapshot_of(path, 0),
-        )
-        _tables[key] = path
-    return _tables[key]
+    )
+    write_partitioned(
+        delta,
+        path,
+        ["batch"],
+        operation="APPEND",
+        base_snapshot=snapshot_of(path, 0),
+    )
+    return path
 
 
 def schema_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,6 +153,7 @@ def schema_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@artifact
 def _bucketed_db(spark: SparkSession, sf_dir: str) -> str:
     """Once per session+fixture: a catalog database at an explicit temp
     LOCATION (so a vanilla driver session never writes a spark-warehouse
@@ -187,30 +162,23 @@ def _bucketed_db(spark: SparkSession, sf_dir: str) -> str:
     that key shuffle-free."""
     import hashlib as _hashlib
 
-    key = ("bucketed", spark.sparkContext.applicationId, sf_dir)
-    if key not in _tables:
-        from ..storage import write_bucketed
+    from ..storage import write_bucketed
 
-        tag = _hashlib.md5(
-            f"{spark.sparkContext.applicationId}:{sf_dir}".encode()
-        ).hexdigest()[:10]
-        db = f"spark_graft_bucketed_{tag}"
-        loc = scratch_mkdtemp(prefix="spark_bucketed_")
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        )
-        write_bucketed(orders, f"{db}.orders_b", "o_orderkey")
-        write_bucketed(li, f"{db}.lineitem_b", "l_orderkey")
-        _tables[key] = loc
-        _bucketed_dbs[key] = db
-    return _bucketed_dbs[key]
-
-
-_bucketed_dbs: dict[tuple, str] = {}
+    tag = _hashlib.md5(
+        f"{spark.sparkContext.applicationId}:{sf_dir}".encode()
+    ).hexdigest()[:10]
+    db = f"spark_graft_bucketed_{tag}"
+    loc = scratch_mkdtemp(prefix="spark_bucketed_")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    write_bucketed(orders, f"{db}.orders_b", "o_orderkey")
+    write_bucketed(li, f"{db}.lineitem_b", "l_orderkey")
+    return db
 
 
 def bucketed_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -141,10 +141,15 @@ def scratch_mkdtemp(prefix: str) -> str:
     mkdtemp would land in /tmp -- the directory this sandbox's cleaner
     deletes MID-RUN (see get_spark). Every engine scratch dir (format
     round-trips, lifecycle tables, streaming replays) routes through
-    this instead."""
+    this instead. A dir made inside an artifact build belongs to that
+    artifact (``artifacts.own_dir``)."""
     import tempfile
 
-    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+    from .artifacts import own_dir
+
+    path = tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+    own_dir(path)
+    return path
 
 
 def stop_spark_if_local(spark: SparkSession) -> None:

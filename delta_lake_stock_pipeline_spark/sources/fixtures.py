@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..artifacts import artifact
+
 # Every driver fixture table (TESTDATA.md).
 TABLES = (
     "region",
@@ -35,27 +37,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-# SparkSession -> {(sf_dir, name): the loaded DataFrame HANDLE}. This is
-# metadata reuse, not data caching: every ``spark.read.parquet`` call
-# re-reads the file footer and re-lists on the DRIVER (~150-300 ms/call
-# measured at local[32]), and before round 10's optimization pass every
-# one of ~264 bench keys paid it per table touched -- tens of seconds of
-# identical single-threaded driver work per sweep (guide §7.3's class).
-# The returned DataFrame is an immutable lazy scan: execution still reads
-# the parquet input every time, exactly as a catalog-registered table
-# would behave. Fixtures are immutable per sf_dir, so the handle can
-# never go stale within a session. Keyed by the SESSION OBJECT (weakly),
-# not applicationId: child sessions from ``newSession()`` share the
-# application but own independent SQL confs, and a DataFrame must plan
-# under ITS session's confs (j_bloom_pruned's scoped child would
-# otherwise lose its bloom-injection confs to a parent-session handle).
-import weakref
-
-_df_cache: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -96,10 +77,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 stacklevel=2,
             )
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    per_session = _df_cache.setdefault(spark, {})
-    cached = per_session.get((sf_dir, name))
-    if cached is not None:
-        return cached
+    return _scan(spark, sf_dir, name)
+
+
+@artifact
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's DataFrame HANDLE, one per (session, fixture, table).
+    This is metadata reuse, not data caching: every ``spark.read.parquet``
+    call re-reads the file footer and re-lists on the DRIVER (~150-300
+    ms/call measured at local[32]), once per table touched by each of
+    ~264 bench keys. The handle is an immutable lazy scan: execution
+    still reads the parquet input every time, exactly as a
+    catalog-registered table would behave, and fixtures are immutable
+    per sf_dir, so it can never go stale within a session."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # Depending on Spark version/conf timing the nanos column surfaces as
@@ -111,7 +101,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif isinstance(ts_type, T.TimestampNTZType):
             # NTZ -> LTZ is wall-clock-preserving under the UTC session zone.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    per_session[(sf_dir, name)] = df
     return df
 
 

@@ -22,8 +22,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact, clear_all
 from ..session import scratch_mkdtemp
 from ..sources.fixtures import load_table
+from . import runtime
 
 
 @contextlib.contextmanager
@@ -198,61 +200,7 @@ def click_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-# (applicationId, sf_dir) -> materialized rollup / CDC table path; each
-# streaming maintenance runs once per session+fixture, reads hit the
-# committed table.
-_mv_tables: dict[tuple[str, str], str] = {}
-_cdc_tables: dict[tuple[str, str], str] = {}
-_dedup_out: dict[tuple[str, str], str] = {}
-_sess_out: dict[tuple[str, str], str] = {}
-_join_out: dict[tuple[str, str], str] = {}
-_late_out: dict[tuple[str, str], str] = {}
-_stateful_out: dict[tuple[str, str], str] = {}
-_enrich_out: dict[tuple[str, str], str] = {}
-_topk_out: dict[tuple[str, str], str] = {}
-_restart_out: dict[tuple[str, str], str] = {}
-_join_outer_out: dict[tuple[str, str], str] = {}
-
-
-def clear_mv_dirs() -> None:
-    """Delete every executed-streaming scratch dir this process wrote
-    (conftest/bench call this next to the other operator-cache clears).
-    Root guard as in ``clear_lifecycle_dirs``: never rmtree above the
-    entry's own scratch dir (the parent of a direct scratch-root child
-    is the SHARED root)."""
-    from ..session import scratch_root
-
-    root = scratch_root()
-    for cache in (
-        _mv_tables,
-        _cdc_tables,
-        _dedup_out,
-        _sess_out,
-        _join_out,
-        _late_out,
-        _stateful_out,
-        _enrich_out,
-        _topk_out,
-        _restart_out,
-        _join_outer_out,
-    ):
-        for entry in cache.values():
-            # _late_out/_join_outer_out store (out_dir, cutoff_ts);
-            # the rest bare paths.
-            path = entry[0] if isinstance(entry, tuple) else entry
-            parent = os.path.dirname(path)
-            shutil.rmtree(
-                path if parent == root else parent, ignore_errors=True
-            )
-        cache.clear()
-    # Session tile/span caches (round-10 optimization): the tile scratch
-    # dirs are direct children of the scratch root, so rmtree the entry
-    # itself (same root guard rationale as above).
-    for path in _tile_scratch.values():
-        if os.path.dirname(path) == root:
-            shutil.rmtree(path, ignore_errors=True)
-    for cache in (_tile_scratch, _tile_files_cache, _tiles_cache, _span_cache):
-        cache.clear()
+clear_mv_dirs = clear_all  # old name, kept because perfbench/run.py imports it
 
 
 def _write_ordered_files(dfs, src: str) -> None:
@@ -310,71 +258,101 @@ def _write_ordered_batches(df: DataFrame, src: str, order_cols, n: int = 3):
     _write_ordered_files(_time_tiles(df, order_cols, n), src)
 
 
-# Session caches shared by every replay key (keyed (applicationId,
-# sf_dir[, n]), same lifetime/clear discipline as the output caches
-# below). Before round 10's optimization pass, EVERY replay key re-ran
-# the global ntile sort, re-wrote the same three tile files, and
-# re-collected min/max(ts) -- ~10 keys x (1 sort + 3 write jobs + a
-# collect) of identical work per bench sweep (guide §1.2/§2.4).
-# _tiles_cache holds DataFrames, so it keys by the SESSION OBJECT
-# (weakly) like fixtures._df_cache: a newSession() child shares the
-# applicationId but must plan under its own SQL confs (r10 advice). The
-# file/scratch/span caches hold plain paths/values -- safe to share
-# across child sessions, so they stay applicationId-keyed.
-import weakref
-
-_tiles_cache: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_tile_files_cache: dict[tuple[str, str, int], list[str]] = {}
-_tile_scratch: dict[tuple[str, str, int], str] = {}
-_span_cache: dict[tuple[str, str], tuple] = {}
-
-
-def _tiles_cached(spark: SparkSession, sf_dir: str, n: int = 3) -> list[DataFrame]:
+# Artifacts shared by every replay key. Before round 10's optimization
+# pass, EVERY replay key re-ran the global ntile sort, re-wrote the same
+# three tile files, and re-collected min/max(ts) -- ~10 keys x (1 sort + 3
+# write jobs + a collect) of identical work per bench sweep (guide
+# §1.2/§2.4).
+@artifact
+def _tiles_cached(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     """The canonical (ts, event_id) time tiles of the events fixture,
     localCheckpointed once per (session, fixture)."""
-    per_session = _tiles_cache.setdefault(spark, {})
-    key = (sf_dir, n)
-    if key not in per_session:
-        per_session[key] = _time_tiles(
-            load_table(spark, sf_dir, "events"), ["ts", "event_id"], n
-        )
-    return per_session[key]
+    return _time_tiles(load_table(spark, sf_dir, "events"), ["ts", "event_id"])
 
 
-def _tile_files(spark: SparkSession, sf_dir: str, n: int = 3) -> list[str]:
+@artifact(
+    setup="stream_tiles",
+    used_by=(
+        "s_cdc_upsert",
+        "s_stream_dedup",
+        "s_stream_sessions",
+        "s_stream_join",
+        "s_stream_late",
+        "s_stateful_counts",
+        "s_stream_enrich",
+        "s_stream_topk",
+        "s_stream_restart",
+        "s_stream_join_outer",
+    ),
+)
+def _tile_files(spark: SparkSession, sf_dir: str) -> list[str]:
     """Single-file parquet materializations of the canonical tiles,
-    written once per (session, fixture) and COPIED byte-for-byte into
+    written once per application and fixture and COPIED byte-for-byte into
     each replay's source dir by ``_write_ordered_files`` -- the replay
-    input is identical to a per-key write, minus ~n write jobs per key."""
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    if key not in _tile_files_cache:
-        scratch = scratch_mkdtemp(prefix="spark_tile_files_")
-        paths = []
-        for i, tile in enumerate(_tiles_cached(spark, sf_dir, n)):
-            sub = os.path.join(scratch, f"t{i}")
-            tile.coalesce(1).write.parquet(sub)
-            part = next(
-                f for f in sorted(os.listdir(sub)) if f.endswith(".parquet")
-            )
-            paths.append(os.path.join(sub, part))
-        _tile_scratch[key] = scratch
-        _tile_files_cache[key] = paths
-    return _tile_files_cache[key]
+    input is identical to a per-key write, minus ~3 write jobs per key."""
+    scratch = scratch_mkdtemp(prefix="spark_tile_files_")
+    paths = []
+    for i, tile in enumerate(_tiles_cached(spark, sf_dir)):
+        sub = os.path.join(scratch, f"t{i}")
+        tile.coalesce(1).write.parquet(sub)
+        part = next(f for f in sorted(os.listdir(sub)) if f.endswith(".parquet"))
+        paths.append(os.path.join(sub, part))
+    return paths
 
 
+@artifact
 def _events_span(spark: SparkSession, sf_dir: str) -> tuple:
     """(min ts, max ts) of the events fixture, collected once per
-    (session, fixture) -- sentinel placement metadata, not a data path."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _span_cache:
-        _span_cache[key] = tuple(
-            load_table(spark, sf_dir, "events")
-            .agg(F.min("ts"), F.max("ts"))
-            .collect()[0]
+    application and fixture -- sentinel placement metadata, not a data
+    path."""
+    return tuple(
+        load_table(spark, sf_dir, "events")
+        .agg(F.min("ts"), F.max("ts"))
+        .collect()[0]
+    )
+
+
+def _replay(
+    spark: SparkSession, prefix: str, batches, query, output_mode: str = "append"
+) -> str:
+    """Replay ``batches`` (``_write_ordered_files`` entries) as time-ordered
+    micro-batch files in a fresh scratch dir, run ``query`` over the file
+    stream to completion, and return the dir its emissions landed in."""
+    scratch = scratch_mkdtemp(prefix=prefix)
+    src, out, ckpt = (os.path.join(scratch, d) for d in ("src", "out", "ckpt"))
+    _write_ordered_files(batches, src)
+    with _replay_shuffle_partitions(spark):
+        runtime.run_available_now(
+            query(runtime.events_stream(spark, src)), ckpt, out, output_mode
         )
-    return _span_cache[key]
+    return out
+
+
+def _sentinels(spark: SparkSession, max_ts, types=("click",)) -> list[DataFrame]:
+    """Two far-future single-event batches (+40d, +80d past ``max_ts``), one
+    row per event type in ``types``, each a distinct synthetic user that
+    joins nothing: they drag the watermark forward so the final real
+    windows flush (state cleanup lags one batch, so the first sentinel
+    needs the second to finalize)."""
+    import datetime
+
+    return [
+        _local_events(
+            spark,
+            [
+                (
+                    10**9 + 10 * i + j,
+                    max_ts + datetime.timedelta(days=days),
+                    10**9 + 10 * i + j,
+                    etype,
+                    0.0,
+                    "{}",
+                )
+                for j, etype in enumerate(types)
+            ],
+        )
+        for i, days in enumerate([40, 80])
+    ]
 
 
 _EVENT_COL_TYPES = (
@@ -434,38 +412,29 @@ def incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     store. Runs once per (session, fixture); the history manifest records
     the expected MATERIALIZE + MERGE commit per batch."""
     from ..storage import read_table
-    from . import runtime
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _mv_tables:
-        scratch = scratch_mkdtemp(prefix="spark_incr_mv_")
-        try:
-            src = os.path.join(scratch, "src")
-            tbl = os.path.join(scratch, "tbl")
-            ckpt = os.path.join(scratch, "ckpt")
-            events = load_table(spark, sf_dir, "events")
-            for i in range(3):
-                events.filter(F.col("event_id") % 3 == i).coalesce(
-                    1
-                ).write.mode("append").parquet(src)
-            with _replay_shuffle_partitions(spark):
-                runtime.materialize_daily_rollup(
-                    runtime.events_stream(spark, src),
-                    tbl,
-                    ckpt,
-                    delay="3650 days",
-                )
-            _mv_tables[key] = tbl
-        except BaseException:
-            # A failed replay never registers in the cache dict, so
-            # clear_mv_dirs could not reap it -- reap here instead.
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
     return (
-        read_table(spark, _mv_tables[key])
+        read_table(spark, _mv_table(spark, sf_dir))
         .select("event_date", "event_type", "n_events", "total_value")
         .orderBy("event_date", "event_type")
     )
+
+
+@artifact
+def _mv_table(spark: SparkSession, sf_dir: str) -> str:
+    """The committed ``incremental_mv`` table."""
+    scratch = scratch_mkdtemp(prefix="spark_incr_mv_")
+    src, tbl, ckpt = (os.path.join(scratch, d) for d in ("src", "tbl", "ckpt"))
+    events = load_table(spark, sf_dir, "events")
+    for i in range(3):
+        events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    with _replay_shuffle_partitions(spark):
+        runtime.materialize_daily_rollup(
+            runtime.events_stream(spark, src), tbl, ckpt, delay="3650 days"
+        )
+    return tbl
 
 
 def cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -488,34 +457,30 @@ def cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no (user_id, ts) ties at any SF (checked), so latest-wins is a
     total order on both engines. Runs once per (session, fixture)."""
     from ..storage import read_table
-    from . import runtime
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _cdc_tables:
-        scratch = scratch_mkdtemp(prefix="spark_cdc_upsert_")
-        try:
-            src = os.path.join(scratch, "src")
-            tbl = os.path.join(scratch, "tbl")
-            ckpt = os.path.join(scratch, "ckpt")
-            _write_ordered_files(_tile_files(spark, sf_dir), src)
-            with _replay_shuffle_partitions(spark):
-                runtime.stream_upsert_to_table(
-                    runtime.events_stream(spark, src),
-                    tbl,
-                    key_cols=["user_id"],
-                    partition_cols=["event_type"],
-                    checkpoint_dir=ckpt,
-                    order_col="ts",
-                )
-            _cdc_tables[key] = tbl
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
     return (
-        read_table(spark, _cdc_tables[key])
+        read_table(spark, _cdc_table(spark, sf_dir))
         .select("user_id", "event_id", "ts", "event_type", "value")
         .orderBy("user_id")
     )
+
+
+@artifact
+def _cdc_table(spark: SparkSession, sf_dir: str) -> str:
+    """The committed ``cdc_upsert`` table."""
+    scratch = scratch_mkdtemp(prefix="spark_cdc_upsert_")
+    src, tbl, ckpt = (os.path.join(scratch, d) for d in ("src", "tbl", "ckpt"))
+    _write_ordered_files(_tile_files(spark, sf_dir), src)
+    with _replay_shuffle_partitions(spark):
+        runtime.stream_upsert_to_table(
+            runtime.events_stream(spark, src),
+            tbl,
+            key_cols=["user_id"],
+            partition_cols=["event_type"],
+            checkpoint_dir=ckpt,
+            order_col="ts",
+        )
+    return tbl
 
 
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -536,37 +501,23 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate, NOT the stream's history -- the property that distinguishes
     this from plain ``dropDuplicates`` at 100 TB. Runs once per
     (session, fixture); emissions land in parquet via foreachBatch."""
-    from . import runtime
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _dedup_out:
-        scratch = scratch_mkdtemp(prefix="spark_stream_dedup_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            b1, b2, b3 = _tiles_cached(spark, sf_dir)
-            f1, _f2, _f3 = _tile_files(spark, sf_dir)
-            dups = b1.filter(F.col("event_id") % 5 == 0)
-            _write_ordered_files(
-                [f1, b2.unionByName(dups), b3.unionByName(dups)], src
-            )
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.dedup_within_watermark(
-                        runtime.events_stream(spark, src)
-                    ),
-                    ckpt,
-                    out,
-                )
-            _dedup_out[key] = out
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
     return (
-        spark.read.parquet(_dedup_out[key])
+        spark.read.parquet(_dedup_out(spark, sf_dir))
         .select("user_id", "event_id", "ts", "event_type", "value")
         .orderBy("event_id")
+    )
+
+
+@artifact
+def _dedup_out(spark: SparkSession, sf_dir: str) -> str:
+    b1, b2, b3 = _tiles_cached(spark, sf_dir)
+    f1, _f2, _f3 = _tile_files(spark, sf_dir)
+    dups = b1.filter(F.col("event_id") % 5 == 0)
+    return _replay(
+        spark,
+        "spark_stream_dedup_",
+        [f1, b2.unionByName(dups), b3.unionByName(dups)],
+        runtime.dedup_within_watermark,
     )
 
 
@@ -589,54 +540,22 @@ def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     users), never stream history; each append emission is final (no
     retractions downstream). The one driver-side scalar is max(ts) for
     sentinel placement -- a replay-harness parameter, not data."""
-    import datetime
-
-    from . import runtime
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _sess_out:
-        scratch = scratch_mkdtemp(prefix="spark_stream_sess_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            _, max_ts = _events_span(spark, sf_dir)
-            sentinels = [
-                _local_events(
-                    spark,
-                    [
-                        (
-                            10**9 + i,
-                            max_ts + datetime.timedelta(days=days),
-                            10**9 + i,
-                            "click",
-                            0.0,
-                            "{}",
-                        )
-                    ],
-                )
-                for i, days in enumerate([40, 80])
-            ]
-            _write_ordered_files(
-                list(_tile_files(spark, sf_dir)) + sentinels, src
-            )
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.session_counts(
-                        runtime.events_stream(spark, src)
-                    ),
-                    ckpt,
-                    out,
-                )
-            _sess_out[key] = out
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
     return (
-        spark.read.parquet(_sess_out[key])
+        spark.read.parquet(_sessions_out(spark, sf_dir))
         .filter(F.col("user_id") < 10**9)
         .select("user_id", "session_start", "n_events", "total_value")
         .orderBy("user_id", "session_start")
+    )
+
+
+@artifact
+def _sessions_out(spark: SparkSession, sf_dir: str) -> str:
+    _, max_ts = _events_span(spark, sf_dir)
+    return _replay(
+        spark,
+        "spark_stream_sess_",
+        list(_tile_files(spark, sf_dir)) + _sentinels(spark, max_ts),
+        runtime.session_counts,
     )
 
 
@@ -657,30 +576,8 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: join state is bounded by (interval + watermark delay) x
     arrival rate per side -- never stream history; that bound is the whole
     reason the interval condition is mandatory at 100 TB."""
-    from . import runtime
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _join_out:
-        scratch = scratch_mkdtemp(prefix="spark_stream_join_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            _write_ordered_files(_tile_files(spark, sf_dir), src)
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.purchase_attribution(
-                        runtime.events_stream(spark, src)
-                    ),
-                    ckpt,
-                    out,
-                )
-            _join_out[key] = out
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
     return (
-        spark.read.parquet(_join_out[key])
+        spark.read.parquet(_join_out(spark, sf_dir))
         .select(
             "click_id",
             "purchase_id",
@@ -690,6 +587,16 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_value",
         )
         .orderBy("click_id", "purchase_id")
+    )
+
+
+@artifact
+def _join_out(spark: SparkSession, sf_dir: str) -> str:
+    return _replay(
+        spark,
+        "spark_stream_join_",
+        _tile_files(spark, sf_dir),
+        runtime.purchase_attribution,
     )
 
 
@@ -715,79 +622,50 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB -- state holds only windows newer than (max event time -
     horizon), so a deployment prices state as horizon x group arity,
     never stream history."""
-    import datetime
-
-    from . import runtime
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _late_out:
-        scratch = scratch_mkdtemp(prefix="spark_stream_late_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            _b1, b2, b3 = _tiles_cached(spark, sf_dir)
-            f1, f2, _f3 = _tile_files(spark, sf_dir)
-            min_ts, max_ts = _events_span(spark, sf_dir)
-            # Batch 3 evaluates rows against the watermark set at batch
-            # 2's end (max ts seen - 2-day delay); the injected rows'
-            # 1-day window must already have closed under it or the test
-            # proves nothing. The fixtures span 30 days so this holds
-            # with ~25 days of margin; a reshaped fixture fails loudly.
-            t2_max = b2.agg(F.max("ts")).collect()[0][0]
-            wm_at_b3 = t2_max - datetime.timedelta(days=2)
-            win_end = min_ts.replace(
-                hour=0, minute=0, second=0, microsecond=0
-            ) + datetime.timedelta(days=1)
-            if win_end >= wm_at_b3:
-                raise ValueError(
-                    f"late-row window end {win_end} not behind the "
-                    f"batch-3 watermark {wm_at_b3}; fixture too short"
-                )
-            late = _local_events(
-                spark,
-                [
-                    (2 * 10**9 + i, min_ts, 999_000 + i, "purchase", 77.77, "{}")
-                    for i in range(7)
-                ],
-            )
-            sentinels = [
-                _local_events(
-                    spark,
-                    [
-                        (
-                            10**9 + i,
-                            max_ts + datetime.timedelta(days=days),
-                            10**9 + i,
-                            "click",
-                            0.0,
-                            "{}",
-                        )
-                    ],
-                )
-                for i, days in enumerate([40, 80])
-            ]
-            _write_ordered_files(
-                [f1, f2, b3.unionByName(late)] + sentinels, src
-            )
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.tumbling_counts(
-                        runtime.events_stream(spark, src)
-                    ),
-                    ckpt,
-                    out,
-                )
-            _late_out[key] = (out, max_ts)
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
-    out, max_ts = _late_out[key]
+    _, max_ts = _events_span(spark, sf_dir)
+    out = _late_out(spark, sf_dir)
     return (
         spark.read.parquet(out)
         .filter(F.col("window_start") <= F.lit(max_ts))
         .select("window_start", "event_type", "n_events", "total_value")
         .orderBy("window_start", "event_type")
+    )
+
+
+@artifact
+def _late_out(spark: SparkSession, sf_dir: str) -> str:
+    import datetime
+
+    _b1, b2, b3 = _tiles_cached(spark, sf_dir)
+    f1, f2, _f3 = _tile_files(spark, sf_dir)
+    min_ts, max_ts = _events_span(spark, sf_dir)
+    # Batch 3 evaluates rows against the watermark set at batch 2's end
+    # (max ts seen - 2-day delay); the injected rows' 1-day window must
+    # already have closed under it or the test proves nothing. The
+    # fixtures span 30 days so this holds with ~25 days of margin; a
+    # reshaped fixture fails loudly.
+    t2_max = b2.agg(F.max("ts")).collect()[0][0]
+    wm_at_b3 = t2_max - datetime.timedelta(days=2)
+    win_end = min_ts.replace(
+        hour=0, minute=0, second=0, microsecond=0
+    ) + datetime.timedelta(days=1)
+    if win_end >= wm_at_b3:
+        raise ValueError(
+            f"late-row window end {win_end} not behind the "
+            f"batch-3 watermark {wm_at_b3}; fixture too short"
+        )
+    late = _local_events(
+        spark,
+        [
+            (2 * 10**9 + i, min_ts, 999_000 + i, "purchase", 77.77, "{}")
+            for i in range(7)
+        ],
+    )
+    return _replay(
+        spark,
+        "spark_stream_late_",
+        [f1, f2, b3.unionByName(late)] + _sentinels(spark, max_ts),
+        runtime.tumbling_counts,
     )
 
 
@@ -809,30 +687,18 @@ def stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle by key per batch; state is one (n, micros)
     pair per ACTIVE user (RocksDB-resident on a real cluster), sized by
     key cardinality, never stream length."""
-    from . import runtime
+    return _final_user_rows(spark, _stateful_out(spark, sf_dir))
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _stateful_out:
-        scratch = scratch_mkdtemp(prefix="spark_stateful_counts_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            _write_ordered_files(_tile_files(spark, sf_dir), src)
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.running_user_micros(
-                        runtime.events_stream(spark, src)
-                    ),
-                    ckpt,
-                    out,
-                    output_mode="update",
-                )
-            _stateful_out[key] = out
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
-    return _final_user_rows(spark, _stateful_out[key])
+
+@artifact
+def _stateful_out(spark: SparkSession, sf_dir: str) -> str:
+    return _replay(
+        spark,
+        "spark_stateful_counts_",
+        _tile_files(spark, sf_dir),
+        runtime.running_user_micros,
+        "update",
+    )
 
 
 def _final_user_rows(spark: SparkSession, out: str) -> DataFrame:
@@ -875,29 +741,8 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: complete mode's state holds EVERY group, so it is only
     priced for bounded-cardinality results (a dashboard keyed by users,
     never by events) -- the constraint this key documents by existing."""
-    from . import runtime
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _topk_out:
-        scratch = scratch_mkdtemp(prefix="spark_stream_topk_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            _write_ordered_files(_tile_files(spark, sf_dir), src)
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.top_spenders(runtime.events_stream(spark, src)),
-                    ckpt,
-                    out,
-                    output_mode="complete",
-                )
-            _topk_out[key] = out
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
     return (
-        spark.read.parquet(_topk_out[key])
+        spark.read.parquet(_topk_out(spark, sf_dir))
         .select(
             "user_id",
             "n_events",
@@ -906,6 +751,17 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy(F.col("total_value").desc(), "user_id")
+    )
+
+
+@artifact
+def _topk_out(spark: SparkSession, sf_dir: str) -> str:
+    return _replay(
+        spark,
+        "spark_stream_topk_",
+        _tile_files(spark, sf_dir),
+        runtime.top_spenders,
+        "complete",
     )
 
 
@@ -925,47 +781,37 @@ def stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: recovery cost is the checkpoint read (offsets + state
     store files), independent of stream history length."""
-    from . import runtime
+    return _final_user_rows(spark, _restart_out(spark, sf_dir))
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _restart_out:
-        scratch = scratch_mkdtemp(prefix="spark_stream_restart_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            f1, f2, f3 = _tile_files(spark, sf_dir)
-            _write_ordered_files([f1, f2], src)
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.running_user_micros(
-                        runtime.events_stream(spark, src)
-                    ),
-                    ckpt,
-                    out,
-                    output_mode="update",
-                )
-            # Land tile 3 only after query 1 has fully terminated, mtime
-            # stamped later than the first two so discovery order stays
-            # the log order (the _write_ordered_files epoch + 2 slots).
-            dst = os.path.join(src, "part-00002-tile.parquet")
-            shutil.copy(f3, dst)
-            t = 1_000_000_000 + 2 * 60
-            os.utime(dst, (t, t))
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.running_user_micros(
-                        runtime.events_stream(spark, src)
-                    ),
-                    ckpt,
-                    out,
-                    output_mode="update",
-                )
-            _restart_out[key] = out
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
-    return _final_user_rows(spark, _restart_out[key])
+
+@artifact
+def _restart_out(spark: SparkSession, sf_dir: str) -> str:
+    f1, f2, f3 = _tile_files(spark, sf_dir)
+    out = _replay(
+        spark,
+        "spark_stream_restart_",
+        [f1, f2],
+        runtime.running_user_micros,
+        "update",
+    )
+    # Land tile 3 only after query 1 has fully terminated, mtime stamped
+    # later than the first two so discovery order stays the log order
+    # (the _write_ordered_files epoch + 2 slots), then restart on the
+    # SAME checkpoint (``_replay``'s src/ckpt siblings of ``out``).
+    scratch = os.path.dirname(out)
+    src, ckpt = os.path.join(scratch, "src"), os.path.join(scratch, "ckpt")
+    dst = os.path.join(src, "part-00002-tile.parquet")
+    shutil.copy(f3, dst)
+    t = 1_000_000_000 + 2 * 60
+    os.utime(dst, (t, t))
+    with _replay_shuffle_partitions(spark):
+        runtime.run_available_now(
+            runtime.running_user_micros(runtime.events_stream(spark, src)),
+            ckpt,
+            out,
+            "update",
+        )
+    return out
 
 
 def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -989,58 +835,8 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical state bound to the inner form ((interval +
     delay) x arrival rate per side); the outer rows add zero state, only
     an emission at eviction time."""
-    import datetime
-
-    from . import runtime
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _join_outer_out:
-        scratch = scratch_mkdtemp(prefix="spark_stream_join_outer_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            _, max_ts = _events_span(spark, sf_dir)
-            sentinels = [
-                _local_events(
-                    spark,
-                    [
-                        (
-                            10**9 + 10 * i,
-                            max_ts + datetime.timedelta(days=days),
-                            10**9 + 10 * i,
-                            "click",
-                            0.0,
-                            "{}",
-                        ),
-                        (
-                            10**9 + 10 * i + 1,
-                            max_ts + datetime.timedelta(days=days),
-                            10**9 + 10 * i + 1,
-                            "purchase",
-                            0.0,
-                            "{}",
-                        ),
-                    ],
-                )
-                for i, days in enumerate([40, 80])
-            ]
-            _write_ordered_files(
-                list(_tile_files(spark, sf_dir)) + sentinels, src
-            )
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.purchase_attribution_outer(
-                        runtime.events_stream(spark, src)
-                    ),
-                    ckpt,
-                    out,
-                )
-            _join_outer_out[key] = (out, max_ts)
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
-    out, max_ts = _join_outer_out[key]
+    _, max_ts = _events_span(spark, sf_dir)
+    out = _join_outer_out(spark, sf_dir)
     return (
         spark.read.parquet(out)
         .filter(F.col("click_ts") <= F.lit(max_ts))
@@ -1053,6 +849,18 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_value",
         )
         .orderBy("click_id", "purchase_id")
+    )
+
+
+@artifact
+def _join_outer_out(spark: SparkSession, sf_dir: str) -> str:
+    _, max_ts = _events_span(spark, sf_dir)
+    return _replay(
+        spark,
+        "spark_stream_join_outer_",
+        list(_tile_files(spark, sf_dir))
+        + _sentinels(spark, max_ts, ("click", "purchase")),
+        runtime.purchase_attribution_outer,
     )
 
 
@@ -1073,43 +881,31 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast is the same decision as the batch ``j_broadcast``, and
     the per-micro-batch re-read is what lets a slowly-changing dim
     update without restarting the stream."""
-    from . import runtime
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _enrich_out:
-        scratch = scratch_mkdtemp(prefix="spark_stream_enrich_")
-        try:
-            src = os.path.join(scratch, "src")
-            out = os.path.join(scratch, "out")
-            ckpt = os.path.join(scratch, "ckpt")
-            events = load_table(spark, sf_dir, "events")
-            dim = (
-                events.select("user_id")
-                .distinct()
-                .withColumn(
-                    "user_segment",
-                    F.when(F.col("user_id") % 2 == 0, F.lit("even")).otherwise(
-                        F.lit("odd")
-                    ),
-                )
-            )
-            _write_ordered_files(_tile_files(spark, sf_dir), src)
-            with _replay_shuffle_partitions(spark):
-                runtime.run_available_now(
-                    runtime.enrich_with_static_dim(
-                        runtime.events_stream(spark, src), dim
-                    ),
-                    ckpt,
-                    out,
-                )
-            _enrich_out[key] = out
-        except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise
     return (
-        spark.read.parquet(_enrich_out[key])
+        spark.read.parquet(_enrich_out(spark, sf_dir))
         .select("event_id", "user_id", "ts", "event_type", "value", "user_segment")
         .orderBy("event_id")
+    )
+
+
+@artifact
+def _enrich_out(spark: SparkSession, sf_dir: str) -> str:
+    dim = (
+        load_table(spark, sf_dir, "events")
+        .select("user_id")
+        .distinct()
+        .withColumn(
+            "user_segment",
+            F.when(F.col("user_id") % 2 == 0, F.lit("even")).otherwise(
+                F.lit("odd")
+            ),
+        )
+    )
+    return _replay(
+        spark,
+        "spark_stream_enrich_",
+        _tile_files(spark, sf_dir),
+        lambda stream: runtime.enrich_with_static_dim(stream, dim),
     )
 
 

@@ -15,23 +15,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     spark = get_spark(app_name="tests", shuffle_partitions=8)
     yield spark
-    from delta_lake_stock_pipeline_spark.operators.dedup import clear_posts_cache
-    from delta_lake_stock_pipeline_spark.operators.formats import (
-        clear_roundtrip_dirs,
-    )
-    from delta_lake_stock_pipeline_spark.operators.storage_lifecycle import (
-        clear_lifecycle_dirs,
-    )
-    from delta_lake_stock_pipeline_spark.operators.similarity import (
-        clear_ann_dirs,
-    )
-    from delta_lake_stock_pipeline_spark.streaming.windows import clear_mv_dirs
+    from delta_lake_stock_pipeline_spark.artifacts import clear_all
 
-    clear_posts_cache()
-    clear_roundtrip_dirs()
-    clear_lifecycle_dirs()
-    clear_mv_dirs()
-    clear_ann_dirs()
+    clear_all()
     spark.stop()
 
 

@@ -2160,6 +2160,7 @@ def _brute_shingle_pairs(docs):
 )
 @settings(**{**_SETTINGS, "max_examples": 8})  # each example writes parquet
 def test_shingle_pair_measures_match_brute(spark, tmp_path_factory, docs):
+    from delta_lake_stock_pipeline_spark.artifacts import clear_all
     from delta_lake_stock_pipeline_spark.operators import dedup
 
     # Offset + stride the doc_ids so SEVERAL hit the excerpt residue
@@ -2176,7 +2177,7 @@ def test_shingle_pair_measures_match_brute(spark, tmp_path_factory, docs):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    dedup.clear_posts_cache()
+    clear_all()
     try:
         got_j = {
             (r["doc_a"], r["doc_b"], r["jaccard"])
@@ -2187,7 +2188,7 @@ def test_shingle_pair_measures_match_brute(spark, tmp_path_factory, docs):
             for r in dedup.containment_pairs(spark, d).collect()
         }
     finally:
-        dedup.clear_posts_cache()
+        clear_all()
     plain = [(ids[i], s, t) for i, (s, t) in enumerate(docs)]
     # containment_pairs augments the corpus with deterministic prefix
     # excerpts (dedup._excerpt_docs); mirror it for the containment brute.

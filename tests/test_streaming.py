@@ -494,35 +494,33 @@ def test_registered_streaming_lifecycle_keys_commit_incrementally(spark):
     s_cdc_upsert) must (a) replay the fixture as 3 micro-batches -- the
     version history shows the initial write plus one MERGE per later
     batch, proof the path is incremental, not a single overwrite -- and
-    (b) serve repeat calls from the session cache (the committed table,
-    not a re-run: same path object). Value parity with the batch twins is
+    (b) serve repeat calls from the committed table artifact (same path,
+    no new commit), not a re-run. Value parity with the batch twins is
     the oracle suite's job; this pins the EXECUTION shape."""
     from delta_lake_stock_pipeline_spark import storage
+    from delta_lake_stock_pipeline_spark.artifacts import clear_all
     from delta_lake_stock_pipeline_spark.streaming import windows as sw
 
-    sw.clear_mv_dirs()
+    clear_all()
     try:
-        sw.incremental_mv(spark, SF_DIR).collect()
-        sw.cdc_upsert(spark, SF_DIR).collect()
-        key = (spark.sparkContext.applicationId, SF_DIR)
-        for tables, first_op in (
-            (sw._mv_tables, "MATERIALIZE"),
-            (sw._cdc_tables, "STREAM WRITE"),
+        for query, table, first_op in (
+            (sw.incremental_mv, sw._mv_table, "MATERIALIZE"),
+            (sw.cdc_upsert, sw._cdc_table, "STREAM WRITE"),
         ):
-            tbl = tables[key]
+            query(spark, SF_DIR).collect()
+            tbl = table(spark, SF_DIR)
             ops = [
                 r["operation"]
                 for r in storage.history(spark, tbl).collect()
             ]
             assert ops[0].startswith(first_op), ops
             assert ops.count("MERGE") == 2, ops
-        # Repeat call must reuse the committed table, not re-stream.
-        before = dict(sw._mv_tables), dict(sw._cdc_tables)
-        sw.incremental_mv(spark, SF_DIR).collect()
-        sw.cdc_upsert(spark, SF_DIR).collect()
-        assert (dict(sw._mv_tables), dict(sw._cdc_tables)) == before
+            # Repeat call must reuse the committed table, not re-stream.
+            query(spark, SF_DIR).collect()
+            assert table(spark, SF_DIR) == tbl
+            assert storage.history(spark, tbl).count() == len(ops)
     finally:
-        sw.clear_mv_dirs()
+        clear_all()
 
 
 def test_python_datasource_stream_resumes_from_checkpoint(spark, tmp_path):

@@ -188,6 +188,7 @@ def dedup_probe(spark) -> None:
     and the span inverted index is the claim under test: both are bounded
     by sum-of-posting-list-squared, which the zipf-ish synthetic skew
     stresses harder than the uniform fixture."""
+    from delta_lake_stock_pipeline_spark.artifacts import clear_all
     from delta_lake_stock_pipeline_spark.operators import all_queries, dedup
 
     q = all_queries()
@@ -218,7 +219,7 @@ def dedup_probe(spark) -> None:
             # (a) the shared posting build, cold, best-of-2
             best = float("inf")
             for _ in range(2):
-                dedup.clear_posts_cache()
+                clear_all()
                 t0 = time.time()
                 dedup._shingle_posts(spark, d).count()
                 best = min(best, time.time() - t0)
@@ -231,7 +232,7 @@ def dedup_probe(spark) -> None:
                 sec = time_query(q[k], spark, d)
                 results.setdefault(k, []).append((n, sec))
                 print(f"{k:>22} n={n:>9,}  {sec:6.2f}s", flush=True)
-            dedup.clear_posts_cache()
+            clear_all()
             shutil.rmtree(d, ignore_errors=True)
         print("\nGrowth ratios (time ratio per size step):")
         for k, rows in results.items():
@@ -743,6 +744,7 @@ def r10_probe(spark) -> None:
       Cold = fingerprint build + admission; warm = admission against
       the cached fingerprint artifact (the per-batch production cost).
     """
+    from delta_lake_stock_pipeline_spark.artifacts import clear_all
     from delta_lake_stock_pipeline_spark.operators.aggregates import (
         column_profile,
     )
@@ -750,7 +752,6 @@ def r10_probe(spark) -> None:
         contamination_check_bpe,
     )
     from delta_lake_stock_pipeline_spark.operators.multimodal import (
-        clear_nd_cache,
         image_incremental,
     )
 
@@ -777,7 +778,7 @@ def r10_probe(spark) -> None:
             d = f"{BASE}/r10img_{n}"
             synth_documents(spark, n, f"{d}/documents.parquet")
             cold = time_query(
-                image_incremental, spark, d, n_runs=1, setup=clear_nd_cache
+                image_incremental, spark, d, n_runs=1, setup=clear_all
             )
             warm = time_query(image_incremental, spark, d, n_runs=1)
             print(
@@ -786,7 +787,7 @@ def r10_probe(spark) -> None:
                 flush=True,
             )
             shutil.rmtree(d, ignore_errors=True)
-            clear_nd_cache()
+            clear_all()
     finally:
         shutil.rmtree(BASE, ignore_errors=True)
 
@@ -930,6 +931,7 @@ def main() -> None:
             return
     spark = _probe_session()
 
+    from delta_lake_stock_pipeline_spark.artifacts import clear_all
     from delta_lake_stock_pipeline_spark.operators import all_queries
 
     q = all_queries()
@@ -967,10 +969,10 @@ def main() -> None:
                 # each run price the full build, and clearing after each
                 # size keeps persisted blocks from occupying executor
                 # memory once the size is done.
-                sec = time_query(q[k], spark, d, setup=dedup.clear_posts_cache)
+                sec = time_query(q[k], spark, d, setup=clear_all)
                 results.setdefault(k, []).append((n, sec))
                 print(f"{k:>20} n={n:>10,}  {sec:6.2f}s", flush=True)
-            dedup.clear_posts_cache()
+            clear_all()
             shutil.rmtree(d, ignore_errors=True)
 
         emb_keys = [
