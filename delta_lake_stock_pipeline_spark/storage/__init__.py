@@ -14,7 +14,8 @@ plain parquet with a versioned layout + JSONL manifest:
                       emulation), VACUUM, before/after health checks.
 
 Each version is an immutable directory ``v0000, v0001, ...`` under the
-table path; the manifest records (version, timestamp, operation, metrics).
+table path; the manifest records (version, timestamp, operation, metrics,
+snapshot, data schema), and reads plan from it alone (``table.py``).
 Readers resolve the latest version -- writers never mutate files a
 concurrent reader may hold open, the same isolation Delta's log provides.
 At 100 TB this layout is object-store friendly: no renames of data files,

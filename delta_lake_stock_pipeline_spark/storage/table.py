@@ -3,25 +3,39 @@
 Re-expresses the reference's Delta lifecycle on plain parquet (SURVEY.md
 §7.4 risk 2 fallback): each write lands an immutable version directory
 ``v0000, v0001, ...`` under the table path and appends one JSONL manifest
-entry ``{version, timestamp, operation, operationMetrics}`` -- the shape
-``DeltaTable.history()`` exposes (``maintenance.py:87-91``).
+entry ``{version, timestamp, operation, operationMetrics, snapshot,
+dataSchema}`` -- the shape ``DeltaTable.history()`` exposes
+(``maintenance.py:87-91``) plus what a reader needs: ``snapshot`` maps each
+partition dir of the table at that version to the version dir holding it,
+and ``dataSchema`` is the schema of the files the commit wrote: the written
+frame's schema minus the partition columns (``StructType.jsonValue()``; a
+RESTORE writes no files and records none).
 
-Isolation model: readers resolve a version directory once and only ever see
-its immutable files; writers only add new directories. That is the essential
-snapshot-isolation property of Delta's log, minus multi-writer commit
-arbitration (out of scope for a single-driver engine; the seam to swap in
-delta-spark is ``session.have_delta()``).
+Isolation model: the log is the only source of truth. A version exists iff
+it has a log entry, and a read plans from the log alone: the snapshot names
+the dirs, each dir is read with the ``dataSchema`` its own commit recorded
+(partition columns are typed by path discovery on the driver), so planning
+a read opens no data file and launches no Spark job. Version dirs are
+immutable and writers only add new ones, so a reader that resolved a
+version only ever sees its files. That is the essential snapshot-isolation
+property of Delta's log, minus multi-writer commit arbitration (out of
+scope for a single-driver engine; the seam to swap in delta-spark is
+``session.have_delta()``). A log entry without ``dataSchema`` (a log
+written before schemas were recorded) is read with schema inference.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
-from collections.abc import Sequence
+from collections.abc import Iterable, Mapping, Sequence
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.jsonl"
 # Non-version directory a CLONE of an emptied table uses to carry the
@@ -36,17 +50,62 @@ def _manifest_path(path: str) -> str:
     return os.path.join(path, MANIFEST)
 
 
-def _read_manifest(path: str) -> list[dict]:
+def _frozen(obj):
+    """Read-only deep view of parsed JSON: the parsed log is shared by
+    every caller, so no caller may mutate what the next one sees."""
+    if isinstance(obj, dict):
+        return MappingProxyType({k: _frozen(v) for k, v in obj.items()})
+    if isinstance(obj, list):
+        return tuple(_frozen(v) for v in obj)
+    return obj
+
+
+@functools.lru_cache(maxsize=64)
+def _parse_manifest(mp: str, size: int, mtime_ns: int, ino: int) -> tuple:
+    """Parse the first ``size`` bytes of the log; cached per file state, so
+    the log is parsed once per change however many reads consult it. An
+    unterminated last line that does not parse is a torn append (the
+    writer died mid-line) and is skipped: it was never committed."""
+    with open(mp, "rb") as f:
+        data = f.read(size)
+    lines = data.split(b"\n")
+    tail = lines.pop()  # b"" when the log ends with a newline
+    entries = [json.loads(line) for line in lines if line.strip()]
+    if tail.strip():
+        try:
+            entries.append(json.loads(tail))
+        except ValueError:
+            pass
+    return tuple(_frozen(e) for e in entries)
+
+
+def _read_manifest(path: str) -> tuple[Mapping, ...]:
     mp = _manifest_path(path)
-    if not os.path.exists(mp):
-        return []
-    with open(mp) as f:
-        return [json.loads(line) for line in f if line.strip()]
+    try:
+        st = os.stat(mp)
+    except FileNotFoundError:
+        return ()
+    return _parse_manifest(mp, st.st_size, st.st_mtime_ns, st.st_ino)
 
 
 def _append_manifest(path: str, entry: dict) -> None:
-    with open(_manifest_path(path), "a") as f:
-        f.write(json.dumps(entry) + "\n")
+    line = (json.dumps(entry) + "\n").encode()
+    with open(_manifest_path(path), "a+b") as f:
+        end = f.seek(0, os.SEEK_END)
+        if end:
+            f.seek(end - 1)
+            if f.read(1) != b"\n":
+                # Unterminated tail: a complete entry keeps its line, a torn
+                # one is cut off so this commit does not glue onto it.
+                f.seek(0)
+                cut = f.read().rfind(b"\n") + 1
+                f.seek(cut)
+                try:
+                    json.loads(f.read())
+                    line = b"\n" + line
+                except ValueError:
+                    f.truncate(cut)
+        f.write(line)
 
 
 def _version_dir(path: str, version: int) -> str:
@@ -65,11 +124,11 @@ def _partition_rel_dirs(version_root: str) -> list[str]:
     return sorted(rels)
 
 
-def _entry_for(path: str, version: int) -> dict | None:
+def _entry_for(path: str, version: int) -> Mapping:
     for e in _read_manifest(path):
         if e.get("version") == version:
             return e
-    return None
+    raise ValueError(f"nonexistent version {version} of {path}: it has no log entry")
 
 
 def snapshot_of(path: str, version: int) -> dict[str, int]:
@@ -78,12 +137,28 @@ def snapshot_of(path: str, version: int) -> dict[str, int]:
     writes map every partition to their own version; pruned MERGE/DELETE
     snapshots reference untouched partitions from earlier versions (the
     Delta-log model: a commit lists files, most carried over by reference).
-    Manifests written before snapshots existed fall back to "everything
-    lives in this version's dir"."""
-    entry = _entry_for(path, version)
-    if entry and "snapshot" in entry:
-        return {k: int(v) for k, v in entry["snapshot"].items()}
-    return {rel: version for rel in _partition_rel_dirs(_version_dir(path, version))}
+    Raises ValueError for a version the log does not hold."""
+    return {k: int(v) for k, v in _entry_for(path, version)["snapshot"].items()}
+
+
+def _data_schema(path: str, version: int) -> StructType | None:
+    """The data schema ``version``'s commit recorded for its own dir; None
+    for a log written before schemas were recorded."""
+    js = _entry_for(path, version).get("dataSchema")
+    if js is None:
+        return None
+    # fromJson takes plain dicts, not the log's read-only views.
+    return StructType.fromJson(json.loads(json.dumps(js, default=dict)))
+
+
+def _union_schema(schemas: Iterable[StructType]) -> StructType:
+    """Fields of all ``schemas`` by name, first occurrence first -- the
+    column set ``unionByName(allowMissingColumns=True)`` resolves."""
+    fields: dict = {}
+    for s in schemas:
+        for f in s.fields:
+            fields.setdefault(f.name, f)
+    return StructType(list(fields.values()))
 
 
 def snapshot_dirs(path: str, version: int) -> list[str]:
@@ -194,6 +269,9 @@ def write_partitioned(
             "operation": operation,
             "operationMetrics": metrics,
             "snapshot": snapshot,
+            "dataSchema": StructType(
+                [f for f in df.schema.fields if f.name not in partition_cols]
+            ).jsonValue(),
         },
     )
     return version
@@ -235,12 +313,10 @@ def read_table(
     manifest commit times) is time travel: old version dirs are immutable
     until VACUUM removes them.
 
-    Resolves the version's SNAPSHOT: after a pruned MERGE/DELETE the live
-    table is a union of partition dirs across version dirs (one read per
-    contributing version, each with its own ``basePath`` so partition
-    columns materialize; filters on partition columns still prune because
-    every listed path carries its partition values). Single-version
-    snapshots take the plain whole-dir scan."""
+    Resolves the version's SNAPSHOT from the log: after a pruned
+    MERGE/DELETE the live table is a union of partition dirs across version
+    dirs (see ``_read_rels``). Planning opens no data file and launches no
+    Spark job. A version the log does not hold raises ValueError."""
     if timestamp is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp, not both")
@@ -262,26 +338,7 @@ def read_table(
         if os.path.isdir(carrier):
             return spark.read.option("basePath", carrier).parquet(carrier).limit(0)
         raise FileNotFoundError(f"no data in any version at {path}")
-    by_ver: dict[int, list[str]] = {}
-    for rel, sv in snap.items():
-        by_ver.setdefault(sv, []).append(rel)
-    if len(by_ver) == 1:
-        (sv, rels), = by_ver.items()
-        vdir = _version_dir(path, sv)
-        if set(rels) == set(_partition_rel_dirs(vdir)):
-            return spark.read.parquet(vdir)
-    parts = []
-    for sv, rels in sorted(by_ver.items()):
-        vdir = _version_dir(path, sv)
-        paths = [os.path.join(vdir, rel) if rel else vdir for rel in sorted(rels)]
-        parts.append(spark.read.option("basePath", vdir).parquet(*paths))
-    df = parts[0]
-    for p in parts[1:]:
-        # allowMissingColumns = schema evolution on read: a snapshot can mix
-        # versions written before/after an added column (Delta reads such
-        # tables the same way -- absent columns are NULL).
-        df = df.unionByName(p, allowMissingColumns=True)
-    return df
+    return _read_rels(spark, path, snap, snap)
 
 
 def restore(path: str, version: int) -> int:
@@ -294,12 +351,6 @@ def restore(path: str, version: int) -> int:
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no versions at {path}")
-    if _entry_for(path, version) is None and not os.path.isdir(
-        _version_dir(path, version)
-    ):
-        # Without this, snapshot_of falls back to an EMPTY snapshot and the
-        # bad restore would commit an unreadable table.
-        raise ValueError(f"cannot restore {path} to nonexistent version {version}")
     target = snapshot_of(path, version)
     # A manifest entry can outlive its data (VACUUM removes version dirs,
     # not history): every directory the target snapshot references must
@@ -335,22 +386,37 @@ def restore(path: str, version: int) -> int:
 
 
 def _read_rels(
-    spark: SparkSession, path: str, snap: dict[str, int], rels: set[str]
+    spark: SparkSession, path: str, snap: dict[str, int], rels: Iterable[str]
 ) -> DataFrame | None:
-    """Scan only ``rels`` partitions of a snapshot (grouped per contributing
-    version dir so partition columns materialize via basePath). None when
-    the snapshot holds none of them."""
+    """Scan only ``rels`` partitions of a snapshot, planned from the log
+    alone: one read per contributing version dir, with the data schema that
+    version recorded (so no footer is read to infer it) and its dir as
+    ``basePath`` (so partition columns materialize and filters on them
+    still prune). A version's whole set of own partitions takes the plain
+    whole-dir scan. Versions are unioned with ``allowMissingColumns`` --
+    schema evolution on read: a snapshot can mix versions written before
+    and after an added column (Delta reads such tables the same way --
+    absent columns are NULL). None when the snapshot holds none of
+    ``rels``."""
     by_ver: dict[int, list[str]] = {}
     for rel in rels:
         if rel in snap:
             by_ver.setdefault(snap[rel], []).append(rel)
-    if not by_ver:
-        return None
     parts = []
     for sv, vrels in sorted(by_ver.items()):
         vdir = _version_dir(path, sv)
-        paths = [os.path.join(vdir, rel) if rel else vdir for rel in sorted(vrels)]
-        parts.append(spark.read.option("basePath", vdir).parquet(*paths))
+        reader = spark.read
+        schema = _data_schema(path, sv)
+        if schema is not None:
+            reader = reader.schema(schema)
+        own = {rel for rel, owner in snapshot_of(path, sv).items() if owner == sv}
+        if set(vrels) == own:
+            parts.append(reader.parquet(vdir))
+        else:
+            paths = [os.path.join(vdir, rel) if rel else vdir for rel in sorted(vrels)]
+            parts.append(reader.option("basePath", vdir).parquet(*paths))
+    if not parts:
+        return None
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p, allowMissingColumns=True)
@@ -486,6 +552,11 @@ def clone_table(src_path: str, dst_path: str) -> int:
         out = os.path.join(dst_path, SCHEMA_CARRIER)
     else:
         out = _version_dir(dst_path, 0)
+    # The hard-linked dir mixes files of every contributing source version,
+    # so it is read with their union schema -- the columns the source's
+    # read_table resolves -- not with one footer's.
+    schemas = [_data_schema(src_path, sv) for sv in sorted(set(snap.values()))]
+    data_schema = None if None in schemas else _union_schema(schemas).jsonValue()
     for rel, sv in snap.items():
         src_dir = os.path.join(_version_dir(src_path, sv), rel)
         dst_dir = os.path.join(out, rel)
@@ -517,6 +588,7 @@ def clone_table(src_path: str, dst_path: str) -> int:
             "snapshot": {}
             if src_empty
             else {rel: 0 for rel in _partition_rel_dirs(out)},
+            "dataSchema": data_schema,
         },
     )
     return 0
@@ -575,7 +647,7 @@ def write_with_expectations(
         entries = [e for e in _read_manifest(path) if e["version"] != version]
         with open(_manifest_path(path), "w") as fh:
             for e in entries:
-                fh.write(json.dumps(e) + "\n")
+                fh.write(json.dumps(e, default=dict) + "\n")
         shutil.rmtree(_version_dir(path, version), ignore_errors=True)
         raise ExpectationError({k: v for k, v in violations.items() if v})
     return version, violations
@@ -589,7 +661,7 @@ def history(spark: SparkSession, path: str) -> DataFrame:
             e["version"],
             e["timestamp"],
             e["operation"],
-            json.dumps(e.get("operationMetrics", {})),
+            json.dumps(e.get("operationMetrics", {}), default=dict),
         )
         for e in _read_manifest(path)
     ]
