@@ -16,6 +16,8 @@ plain parquet with a versioned layout + JSONL manifest:
 Each version is an immutable directory ``v0000, v0001, ...`` under the
 table path; the manifest records (version, timestamp, operation, metrics,
 snapshot, data schema), and reads plan from it alone (``table.py``).
+Every write commits through one locked path, so a stale writer raises
+:class:`CommitConflictError` and a failed one leaves nothing behind.
 Readers resolve the latest version -- writers never mutate files a
 concurrent reader may hold open, the same isolation Delta's log provides.
 At 100 TB this layout is object-store friendly: no renames of data files,
@@ -26,6 +28,7 @@ from .bucketed import bucketed_join, write_bucketed
 from .maintenance import HealthReport, compare_health, health_check, optimize, vacuum
 from .stocks import STOCK_SCHEMA, synthesize_bars, with_derived_columns
 from .table import (
+    CommitConflictError,
     ExpectationError,
     analyze_table,
     clone_table,
@@ -44,6 +47,7 @@ from .table import (
 )
 
 __all__ = [
+    "CommitConflictError",
     "ExpectationError",
     "clone_table",
     "restore",

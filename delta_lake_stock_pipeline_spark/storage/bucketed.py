@@ -27,9 +27,12 @@ def write_bucketed(
 ) -> None:
     """Persist ``df`` as a parquet table bucketed (and sorted) by
     ``bucket_key``. ``n_buckets`` fixes task parallelism for later joins:
-    at 100 TB you size it so one bucket ~ one executor-core's memory."""
+    at 100 TB you size it so one bucket ~ one executor-core's memory.
+    Distributing on ``bucketBy``'s own hash first writes one file per
+    bucket, not one per (input task, bucket)."""
     (
-        df.write.format("parquet")
+        df.repartition(n_buckets, bucket_key)
+        .write.format("parquet")
         .mode("overwrite")
         .bucketBy(n_buckets, bucket_key)
         .sortBy(bucket_key)

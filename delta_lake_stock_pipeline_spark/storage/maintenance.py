@@ -26,6 +26,7 @@ from .table import (
     read_table,
     remove_versions_before,
     snapshot_dirs,
+    snapshot_of,
     write_partitioned,
 )
 
@@ -118,7 +119,9 @@ def optimize(
     """
     from pyspark.sql import functions as F
 
-    df = read_table(spark, path)
+    v = current_version(path)
+    df = read_table(spark, path, version=v)
+    snap = snapshot_of(path, v)
     parts = [F.col(c) for c in partition_cols]
     compacted = df.repartition(*parts)
     zcols = (
@@ -142,6 +145,9 @@ def optimize(
         operation="OPTIMIZE"
         + (f" ZORDER BY ({', '.join(zcols)})" if zcols else ""),
         max_records_per_file=max_records_per_file,
+        # Every partition read is rewritten; a commit since the read raises.
+        base_snapshot=snap,
+        replaced=list(snap),
     )
 
 
@@ -180,7 +186,7 @@ def health_check(
         raise FileNotFoundError(f"no versions at {path}")
     n_files, size = 0, 0
     for d in snapshot_dirs(path, v):  # snapshot may span version dirs
-        nf, sz = _dir_file_stats(d)
+        _, nf, sz = _dir_file_stats(d)
         n_files += nf
         size += sz
     df = read_table(spark, path)

@@ -15,20 +15,31 @@ Isolation model: the log is the only source of truth. A version exists iff
 it has a log entry, and a read plans from the log alone: the snapshot names
 the dirs, each dir is read with the ``dataSchema`` its own commit recorded
 (partition columns are typed by path discovery on the driver), so planning
-a read opens no data file and launches no Spark job. Version dirs are
-immutable and writers only add new ones, so a reader that resolved a
-version only ever sees its files. That is the essential snapshot-isolation
-property of Delta's log, minus multi-writer commit arbitration (out of
-scope for a single-driver engine; the seam to swap in delta-spark is
-``session.have_delta()``). A log entry without ``dataSchema`` (a log
-written before schemas were recorded) is read with schema inference.
+a read opens no data file and launches no Spark job. A commit whose snapshot
+is empty also records the table's full ``schema``, so an emptied table reads
+back as a zero-row frame without any data file. Version dirs are immutable
+and writers only add new ones, so a reader that resolved a version only
+ever sees its files. A log entry without ``dataSchema`` (a log written
+before schemas were recorded) is read with schema inference.
+
+Commit rule: every write goes through :func:`_commit`, which holds an
+exclusive ``flock`` on the log from picking the version through the data
+write to appending the entry. Under the lock it refuses a writer whose read
+is stale (the first committer wins, as in Delta) and removes any version
+dir the log does not hold: debris of a failed or killed writer. A writer
+that raises leaves no dir and no entry; the log is only appended to. Scope:
+``flock`` arbitrates writers on one host; writers on several hosts need a
+put-if-absent commit of the log entry, as Delta uses on object stores.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import functools
 import json
 import os
+import re
 import shutil
 import time
 from collections.abc import Iterable, Mapping, Sequence
@@ -38,9 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.jsonl"
-# Non-version directory a CLONE of an emptied table uses to carry the
-# source schema (hard-linked files read limit(0) only; never table data).
-SCHEMA_CARRIER = "_schema"
 
 # Reference partition layout: stock_harvester.py:172,180.
 DEFAULT_PARTITION_COLS = ("ticker", "trade_date")
@@ -88,45 +96,69 @@ def _read_manifest(path: str) -> tuple[Mapping, ...]:
     return _parse_manifest(mp, st.st_size, st.st_mtime_ns, st.st_ino)
 
 
-def _append_manifest(path: str, entry: dict) -> None:
-    line = (json.dumps(entry) + "\n").encode()
-    with open(_manifest_path(path), "a+b") as f:
-        end = f.seek(0, os.SEEK_END)
-        if end:
-            f.seek(end - 1)
-            if f.read(1) != b"\n":
-                # Unterminated tail: a complete entry keeps its line, a torn
-                # one is cut off so this commit does not glue onto it.
-                f.seek(0)
-                cut = f.read().rfind(b"\n") + 1
-                f.seek(cut)
-                try:
-                    json.loads(f.read())
-                    line = b"\n" + line
-                except ValueError:
-                    f.truncate(cut)
-        f.write(line)
+class CommitConflictError(ValueError):
+    """Another writer committed since this one read the table (its
+    ``base_snapshot`` is stale). Nothing was written; re-read and retry."""
+
+
+def _append_entry(log, entry: dict) -> None:
+    """Append ``entry`` as one line through the open, locked log handle."""
+    line = (json.dumps(entry, default=dict) + "\n").encode()
+    end = log.seek(0, os.SEEK_END)
+    if end:
+        log.seek(end - 1)
+        if log.read(1) != b"\n":
+            # Unterminated tail: a complete entry keeps its line, a torn
+            # one is cut off so this commit does not glue onto it.
+            log.seek(0)
+            cut = log.read().rfind(b"\n") + 1
+            log.seek(cut)
+            try:
+                json.loads(log.read())
+                line = b"\n" + line
+            except ValueError:
+                log.truncate(cut)
+    log.write(line)
+
+
+@contextlib.contextmanager
+def _commit(path: str, base_snapshot: Mapping[str, int] | None = None):
+    """The one commit path of every table write (the "Commit rule" above).
+    ``base_snapshot`` is the snapshot the writer read (None: a blind write).
+    Yields ``(dir, entry)``: the writer puts its files in ``dir`` and its
+    fields in ``entry``, whose ``version`` is set; the entry is appended on
+    exit. If the block raises, ``dir`` is removed and nothing is appended (a
+    straggling task of a failed Spark job that recreates files there is
+    swept by the next commit)."""
+    os.makedirs(path, exist_ok=True)
+    with open(_manifest_path(path), "a+b") as log:
+        fcntl.flock(log, fcntl.LOCK_EX)  # released when the log is closed
+        held = {e["version"]: e["snapshot"] for e in _read_manifest(path)}
+        if base_snapshot is not None and (
+            not held or dict(held[max(held)]) != dict(base_snapshot)
+        ):
+            raise CommitConflictError(f"{path} changed since it was read")
+        for name in os.listdir(path):
+            if re.fullmatch(r"v\d{4,}", name) and int(name[1:]) not in held:
+                shutil.rmtree(os.path.join(path, name))
+        entry = {"version": max(held, default=-1) + 1}
+        out = _version_dir(path, entry["version"])
+        try:
+            yield out, entry
+            ts = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+            _append_entry(log, {"version": entry["version"], "timestamp": ts, **entry})
+        except BaseException:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
 
 
 def _version_dir(path: str, version: int) -> str:
     return os.path.join(path, f"v{version:04d}")
 
 
-def _partition_rel_dirs(version_root: str) -> list[str]:
-    """Relative partition directories (e.g. ``ticker=T00/trade_date=...``)
-    that contain parquet files under a version dir; ``""`` for a flat
-    (unpartitioned) layout."""
-    rels = set()
-    for dirpath, _dirs, files in os.walk(version_root):
-        if any(f.endswith(".parquet") for f in files):
-            rel = os.path.relpath(dirpath, version_root)
-            rels.add("" if rel == "." else rel)
-    return sorted(rels)
-
-
 def _entry_for(path: str, version: int) -> Mapping:
     for e in _read_manifest(path):
-        if e.get("version") == version:
+        if e["version"] == version:
             return e
     raise ValueError(f"nonexistent version {version} of {path}: it has no log entry")
 
@@ -141,10 +173,10 @@ def snapshot_of(path: str, version: int) -> dict[str, int]:
     return {k: int(v) for k, v in _entry_for(path, version)["snapshot"].items()}
 
 
-def _data_schema(path: str, version: int) -> StructType | None:
-    """The data schema ``version``'s commit recorded for its own dir; None
-    for a log written before schemas were recorded."""
-    js = _entry_for(path, version).get("dataSchema")
+def _recorded_schema(path: str, version: int, key: str = "dataSchema") -> StructType | None:
+    """A schema ``version``'s commit recorded: ``dataSchema`` (its own dir's
+    files) or ``schema`` (the whole table, when its snapshot is empty)."""
+    js = _entry_for(path, version).get(key)
     if js is None:
         return None
     # fromJson takes plain dicts, not the log's read-only views.
@@ -170,20 +202,22 @@ def snapshot_dirs(path: str, version: int) -> list[str]:
 
 
 def current_version(path: str) -> int | None:
-    entries = [e for e in _read_manifest(path) if "version" in e]
-    return max((e["version"] for e in entries), default=None)
+    return max((e["version"] for e in _read_manifest(path)), default=None)
 
 
-def _dir_file_stats(root: str) -> tuple[int, int]:
-    """(num parquet files, total bytes) -- the reference's local walk
-    (``maintenance.py:55-62``)."""
-    n, size = 0, 0
+def _dir_file_stats(root: str) -> tuple[list[str], int, int]:
+    """(partition dirs holding parquet files, num files, total bytes) under
+    ``root`` -- the reference's local walk (``maintenance.py:55-62``). Dirs
+    are relative (e.g. ``ticker=T00/trade_date=...``; ``""`` when flat)."""
+    rels, n, size = set(), 0, 0
     for dirpath, _dirs, files in os.walk(root):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                n += 1
-                size += os.path.getsize(os.path.join(dirpath, fn))
-    return n, size
+        parquet = [os.path.join(dirpath, f) for f in files if f.endswith(".parquet")]
+        if parquet:
+            rel = os.path.relpath(dirpath, root)
+            rels.add("" if rel == "." else rel)
+        n += len(parquet)
+        size += sum(map(os.path.getsize, parquet))
+    return sorted(rels), n, size
 
 
 def write_partitioned(
@@ -221,16 +255,32 @@ def write_partitioned(
     callers that pre-arrange their own layout (OPTIMIZE's
     repartition + sortWithinPartitions z-ordering) must not be
     re-shuffled. The shuffle width follows spark.sql.shuffle.partitions
-    + AQE coalescing, so it stays scale-adaptive."""
+    + AQE coalescing, so it stays scale-adaptive.
+
+    ``base_snapshot`` is the snapshot the caller read: the commit carries
+    its partitions minus ``replaced`` by reference, and raises
+    :class:`CommitConflictError` if another commit landed since."""
+    with _commit(path, base_snapshot) as (out, entry):
+        _write_into(
+            out, entry, df, partition_cols, operation, base_snapshot, replaced,
+            max_records_per_file, codec, distribute_by_partition,
+        )
+    return entry["version"]
+
+
+def _write_into(
+    out: str, entry: dict, df: DataFrame, partition_cols: Sequence[str], operation: str,
+    base_snapshot=None, replaced=None, max_records_per_file=None, codec=None,
+    distribute_by_partition=False,
+) -> None:
+    """The body of :func:`write_partitioned` inside its commit: write
+    ``df`` into the version dir ``out`` and fill the log ``entry``."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     if distribute_by_partition and partition_cols:
         df = df.repartition(*[F.col(c) for c in partition_cols])
-    os.makedirs(path, exist_ok=True)
-    cur = current_version(path)
-    version = 0 if cur is None else cur + 1
-    out = _version_dir(path, version)
+    version = entry["version"]
     obs = Observation(f"write_v{version}")
     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     writer = observed.write.mode("error").partitionBy(*partition_cols)
@@ -239,42 +289,30 @@ def write_partitioned(
     if codec is not None:
         writer = writer.option("compression", codec)
     writer.parquet(out)
-    n_files, size = _dir_file_stats(out)
-    own = {rel: version for rel in _partition_rel_dirs(out)}
-    if base_snapshot is None:
-        snapshot = own
-    else:
-        # Pruned commit: carry forward unaffected partitions by reference,
-        # override/add the partitions this version rewrote, drop the ones
-        # it emptied (``replaced`` that produced no output dir).
-        snapshot = {
-            rel: v
-            for rel, v in base_snapshot.items()
-            if rel not in set(replaced or ())
-        }
-        snapshot.update(own)
-    metrics = {
-        "numOutputRows": obs.get["rows"],
-        "numFiles": n_files,
-        "sizeBytes": size,
-        "partitionBy": list(partition_cols),
-        "numRewrittenPartitions": len(own),
-        "numReferencedPartitions": len(snapshot) - len(own),
-    }
-    _append_manifest(
-        path,
-        {
-            "version": version,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "operation": operation,
-            "operationMetrics": metrics,
-            "snapshot": snapshot,
-            "dataSchema": StructType(
-                [f for f in df.schema.fields if f.name not in partition_cols]
-            ).jsonValue(),
+    rels, n_files, size = _dir_file_stats(out)
+    own = {rel: version for rel in rels}
+    # Pruned commit: carry forward unaffected partitions by reference,
+    # override/add the partitions this version rewrote, drop the ones it
+    # emptied (``replaced`` that produced no output dir).
+    gone = set(replaced or ())
+    snapshot = {rel: v for rel, v in (base_snapshot or {}).items() if rel not in gone} | own
+    entry.update(
+        operation=operation,
+        operationMetrics={
+            "numOutputRows": obs.get["rows"],
+            "numFiles": n_files,
+            "sizeBytes": size,
+            "partitionBy": list(partition_cols),
+            "numRewrittenPartitions": len(own),
+            "numReferencedPartitions": len(snapshot) - len(own),
         },
+        snapshot=snapshot,
+        dataSchema=StructType(
+            [f for f in df.schema.fields if f.name not in partition_cols]
+        ).jsonValue(),
     )
-    return version
+    if not snapshot:
+        entry["schema"] = df.schema.jsonValue()
 
 
 def _parse_ts(ts: str):
@@ -327,17 +365,11 @@ def read_table(
     snap = snapshot_of(path, v)
     if not snap:
         # A DELETE can empty every partition: the table is legitimately
-        # zero-row, not unreadable. Synthesize the empty frame with the
-        # schema of the most recent non-empty snapshot; a clone born from an
-        # empty source has no such version and carries its schema in the
-        # non-version ``_schema/`` dir instead (see clone_table).
-        for pv in range(v - 1, -1, -1):
-            if snapshot_of(path, pv):
-                return read_table(spark, path, version=pv).limit(0)
-        carrier = os.path.join(path, SCHEMA_CARRIER)
-        if os.path.isdir(carrier):
-            return spark.read.option("basePath", carrier).parquet(carrier).limit(0)
-        raise FileNotFoundError(f"no data in any version at {path}")
+        # zero-row, not unreadable. Its commit recorded the full schema.
+        schema = _recorded_schema(path, v, "schema")
+        if schema is None:
+            raise FileNotFoundError(f"no data and no recorded schema at {path} v{v}")
+        return spark.createDataFrame([], schema)
     return _read_rels(spark, path, snap, snap)
 
 
@@ -351,38 +383,29 @@ def restore(path: str, version: int) -> int:
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no versions at {path}")
-    target = snapshot_of(path, version)
+    target = _entry_for(path, version)
     # A manifest entry can outlive its data (VACUUM removes version dirs,
     # not history): every directory the target snapshot references must
     # still exist, or the restore would commit an unreadable table.
-    missing = [
-        d
-        for rel, sv in target.items()
-        if not os.path.isdir(
-            d := (os.path.join(_version_dir(path, sv), rel) if rel else _version_dir(path, sv))
-        )
-    ]
+    missing = [d for d in snapshot_dirs(path, version) if not os.path.isdir(d)]
     if missing:
         raise ValueError(
             f"cannot restore {path} to version {version}: "
             f"{len(missing)} referenced dirs were vacuumed (e.g. {missing[0]})"
         )
-    new_version = cur + 1
-    _append_manifest(
-        path,
-        {
-            "version": new_version,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "operation": "RESTORE",
-            "operationMetrics": {
+    with _commit(path, snapshot_of(path, cur)) as (_, entry):
+        entry.update(
+            operation="RESTORE",
+            operationMetrics={
                 "restoredVersion": version,
-                "numReferencedPartitions": len(target),
+                "numReferencedPartitions": len(target["snapshot"]),
                 "numRewrittenPartitions": 0,
             },
-            "snapshot": target,
-        },
-    )
-    return new_version
+            snapshot=target["snapshot"],
+        )
+        if "schema" in target:  # an emptied target: keep its schema readable
+            entry["schema"] = target["schema"]
+    return entry["version"]
 
 
 def _read_rels(
@@ -406,7 +429,7 @@ def _read_rels(
     for sv, vrels in sorted(by_ver.items()):
         vdir = _version_dir(path, sv)
         reader = spark.read
-        schema = _data_schema(path, sv)
+        schema = _recorded_schema(path, sv)
         if schema is not None:
             reader = reader.schema(schema)
         own = {rel for rel, owner in snapshot_of(path, sv).items() if owner == sv}
@@ -523,74 +546,46 @@ def clone_table(src_path: str, dst_path: str) -> int:
     src_cur = current_version(src_path)
     if src_cur is None:
         raise FileNotFoundError(f"no versions at {src_path}")
-    if os.path.exists(_manifest_path(dst_path)):
-        raise FileExistsError(f"{dst_path} is already a table")
-    os.makedirs(dst_path, exist_ok=True)
-    n_files = size = 0
+    src = _entry_for(src_path, src_cur)
     snap = snapshot_of(src_path, src_cur)
-    src_empty = not snap
-    if src_empty:
-        # Cloning a fully-emptied table: its CURRENT snapshot references no
-        # files, but the clone must still read back as a ZERO-ROW frame with
-        # the source's schema (same contract read_table gives the source).
-        # Link the most recent non-empty snapshot into the NON-version
-        # ``_schema/`` dir -- read_table's empty-snapshot fallback reads it
-        # limit(0) for the schema only, so v0 stays faithfully empty:
-        # time travel to v0 returns zero rows, the manifest reports zero
-        # files, and VACUUM (which touches only version dirs) leaves the
-        # carrier alone.
-        carrier = next(
-            (pv for pv in range(src_cur - 1, -1, -1) if snapshot_of(src_path, pv)),
-            None,
+    if not snap and "schema" not in src:
+        raise FileNotFoundError(
+            f"cannot clone {src_path}: its snapshot is empty and records no schema"
         )
-        if carrier is None:
-            raise ValueError(
-                f"cannot clone {src_path}: no version ever held data, so the "
-                "clone would have no schema to read back"
-            )
-        snap = snapshot_of(src_path, carrier)
-        out = os.path.join(dst_path, SCHEMA_CARRIER)
-    else:
-        out = _version_dir(dst_path, 0)
-    # The hard-linked dir mixes files of every contributing source version,
-    # so it is read with their union schema -- the columns the source's
-    # read_table resolves -- not with one footer's.
-    schemas = [_data_schema(src_path, sv) for sv in sorted(set(snap.values()))]
-    data_schema = None if None in schemas else _union_schema(schemas).jsonValue()
-    for rel, sv in snap.items():
-        src_dir = os.path.join(_version_dir(src_path, sv), rel)
-        dst_dir = os.path.join(out, rel)
-        os.makedirs(dst_dir, exist_ok=True)
-        for fn in os.listdir(src_dir):
-            if not fn.endswith(".parquet"):
-                continue
-            s, d = os.path.join(src_dir, fn), os.path.join(dst_dir, fn)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-            n_files += 1
-            size += os.path.getsize(s)
-    _append_manifest(
-        dst_path,
-        {
-            "version": 0,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "operation": "CLONE",
-            "operationMetrics": {
+    with _commit(dst_path) as (out, entry):
+        if entry["version"] != 0:
+            raise FileExistsError(f"{dst_path} is already a table")
+        for rel, sv in snap.items():
+            src_dir = os.path.join(_version_dir(src_path, sv), rel)
+            dst_dir = os.path.join(out, rel)
+            os.makedirs(dst_dir, exist_ok=True)
+            for fn in os.listdir(src_dir):
+                if not fn.endswith(".parquet"):
+                    continue
+                s, d = os.path.join(src_dir, fn), os.path.join(dst_dir, fn)
+                try:
+                    os.link(s, d)
+                except OSError:
+                    shutil.copy2(s, d)
+        rels, n_files, size = _dir_file_stats(out)
+        entry.update(
+            operation="CLONE",
+            operationMetrics={
                 "sourceTable": src_path,
                 "sourceVersion": src_cur,
-                # Metrics describe the cloned STATE: zero files for an
-                # empty source (the schema carrier is not table data).
-                "numFiles": 0 if src_empty else n_files,
-                "sizeBytes": 0 if src_empty else size,
+                "numFiles": n_files,
+                "sizeBytes": size,
             },
-            "snapshot": {}
-            if src_empty
-            else {rel: 0 for rel in _partition_rel_dirs(out)},
-            "dataSchema": data_schema,
-        },
-    )
+            snapshot={rel: 0 for rel in rels},
+        )
+        if snap:
+            # The hard-linked dir mixes files of every contributing source
+            # version, so it is read with their union schema -- the columns
+            # the source's read_table resolves -- not with one footer's.
+            schemas = [_recorded_schema(src_path, sv) for sv in sorted(set(snap.values()))]
+            entry["dataSchema"] = None if None in schemas else _union_schema(schemas).jsonValue()
+        else:
+            entry["schema"] = src["schema"]
     return 0
 
 
@@ -617,14 +612,13 @@ def write_with_expectations(
     Violation counts are measured with ``observe`` DURING the write job --
     no second scan at any scale. ``on_violation``:
 
-    * ``"fail"``  -- constraint semantics: if any rule is violated the
-      just-written version is rolled back (version dir removed, manifest
-      entry popped -- the commit never becomes visible) and
-      :class:`ExpectationError` raises.
+    * ``"fail"``  -- constraint semantics: if any rule is violated
+      :class:`ExpectationError` raises inside the commit, so the write is
+      never committed: no log entry, no version dir.
     * ``"track"`` -- DLT-style monitoring: the write commits regardless and
       the counts are returned for the caller's quality dashboard.
 
-    Returns ``(version, violations)``; version is None only on failure.
+    Returns ``(version, violations)``.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -639,18 +633,12 @@ def write_with_expectations(
             for name, rule in expectations.items()
         ],
     )
-    version = write_partitioned(
-        observed, path, partition_cols, operation="WRITE", **write_kwargs
-    )
-    violations = {k: int(v or 0) for k, v in obs.get.items()}
-    if on_violation == "fail" and any(violations.values()):
-        entries = [e for e in _read_manifest(path) if e["version"] != version]
-        with open(_manifest_path(path), "w") as fh:
-            for e in entries:
-                fh.write(json.dumps(e, default=dict) + "\n")
-        shutil.rmtree(_version_dir(path, version), ignore_errors=True)
-        raise ExpectationError({k: v for k, v in violations.items() if v})
-    return version, violations
+    with _commit(path, write_kwargs.get("base_snapshot")) as (out, entry):
+        _write_into(out, entry, observed, partition_cols, "WRITE", **write_kwargs)
+        violations = {k: int(v or 0) for k, v in obs.get.items()}
+        if on_violation == "fail" and any(violations.values()):
+            raise ExpectationError({k: v for k, v in violations.items() if v})
+    return entry["version"], violations
 
 
 def history(spark: SparkSession, path: str) -> DataFrame:
@@ -729,10 +717,10 @@ def merge_into(
     new and AQE makes it cheap."""
     from pyspark.sql import functions as F
 
-    current = read_table(spark, path)
+    cur_v = current_version(path)
+    current = read_table(spark, path, version=cur_v)
     keys = list(key_cols)
     pcols = list(partition_cols)
-    cur_v = current_version(path)
     upd_keys = updates.select(*keys).distinct()
     # Landing partitions (from the updates) and matching partitions (from
     # the current table, semi-joined to the update keys) are ONE unioned
@@ -751,9 +739,7 @@ def merge_into(
         .distinct()
         .collect()
     )
-    landing_matching = [r.asDict() for r in affected_rows]
-    affected = {tuple(sorted(d.items())): d for d in landing_matching}
-    affected = list(affected.values())
+    affected = [r.asDict() for r in affected_rows]  # distinct already
     if not affected:
         return cur_v
     pred = _partition_pred(affected)
@@ -794,9 +780,9 @@ def delete_where(
     vanish without writing a row."""
     from pyspark.sql import functions as F
 
-    current = read_table(spark, path)
-    pcols = list(partition_cols)
     cur_v = current_version(path)
+    current = read_table(spark, path, version=cur_v)
+    pcols = list(partition_cols)
     cond = F.expr(condition)
     affected = [
         r.asDict()
@@ -889,18 +875,12 @@ def remove_versions_before(path: str, keep_from: int) -> list[int]:
     VACUUM rule: eligibility is "unreferenced by the retained log", not
     age alone -- deleting by age would tear partitions out from under a
     pruned-merge snapshot)."""
-    entries = _read_manifest(path)
-    referenced: set[int] = set()
-    for e in entries:
-        v = e.get("version")
-        if v is not None and v >= keep_from:
-            referenced.update(snapshot_of(path, v).values())
-    removed = []
-    for e in entries:
-        v = e.get("version")
-        if v is not None and v < keep_from and v not in referenced:
-            d = _version_dir(path, v)
-            if os.path.exists(d):
-                shutil.rmtree(d)
-                removed.append(v)
+    versions = [e["version"] for e in _read_manifest(path)]
+    referenced = {sv for v in versions if v >= keep_from for sv in snapshot_of(path, v).values()}
+    removed = [
+        v for v in versions
+        if v < keep_from and v not in referenced and os.path.exists(_version_dir(path, v))
+    ]
+    for v in removed:
+        shutil.rmtree(_version_dir(path, v))
     return removed

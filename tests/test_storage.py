@@ -168,6 +168,17 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
+def test_write_bucketed_writes_one_file_per_bucket(spark):
+    """4 input tasks x 8 buckets: one file per bucket, not one per (task,
+    bucket) pair."""
+    df = spark.range(0, 400, numPartitions=4).withColumnRenamed("id", "k")
+    try:
+        storage.write_bucketed(df, "one_file_per_bucket", "k", n_buckets=8)
+        assert len(spark.table("one_file_per_bucket").inputFiles()) == 8
+    finally:
+        spark.sql("DROP TABLE IF EXISTS one_file_per_bucket")
+
+
 def test_merge_and_delete(spark, bars, tmp_path_factory):
     """MERGE upsert + DELETE produce correct snapshots, are logged in the
     manifest, and leave prior versions readable (time travel)."""

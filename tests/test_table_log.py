@@ -1,6 +1,8 @@
 """The manifest log as the only thing a table read consults: recorded data
 schemas, job-free read planning, log-only versions, a torn log tail, and
-the parsed-log cache.
+the parsed-log cache. And the one commit path every write takes: failed or
+killed writers leave nothing behind, a stale writer is refused, concurrent
+writers get distinct versions, and the log is only appended to.
 """
 
 from __future__ import annotations
@@ -8,6 +10,7 @@ from __future__ import annotations
 import itertools
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -218,6 +221,123 @@ def test_uncommitted_version_dir_is_neither_readable_nor_restorable(
         storage.restore(path, 1)
     assert storage.current_version(path) == 0
     assert storage.read_table(spark, path).count() == bars.count()
+    # The next commit removes the orphan and takes its version number.
+    assert storage.write_partitioned(bars.limit(5), path) == 1
+    assert storage.read_table(spark, path).count() == 5
+
+
+def test_failed_write_job_leaves_no_version_dir(spark, bars, tmp_path):
+    """Fault injection: the write job fails part-way on one poisoned row.
+    Nothing is committed, no ``v0001/`` is left behind, and the next write
+    commits version 1."""
+    path = str(tmp_path / "t")
+    storage.write_partitioned(bars, path)
+    first = bars.orderBy(*KEYS).first()
+    poison = (F.col("ticker") == first["ticker"]) & (
+        F.col("timestamp_ms") == first["timestamp_ms"]
+    )
+    poisoned = bars.withColumn(
+        "volume", F.when(poison, F.raise_error("poisoned row")).otherwise(F.col("volume"))
+    )
+    with pytest.raises(Exception, match="poisoned row"):
+        storage.write_partitioned(poisoned, path)
+    assert not os.path.exists(tbl._version_dir(path, 1))
+    assert storage.current_version(path) == 0
+    assert storage.write_partitioned(bars.limit(5), path) == 1
+    assert storage.read_table(spark, path).count() == 5
+
+
+def test_failed_expectation_leaves_the_log_untouched(bars, tmp_path):
+    """A ``fail``-mode expectation raises inside the commit: the log keeps
+    its bytes and its file state, and no version dir is left."""
+    path = str(tmp_path / "t")
+    storage.write_partitioned(bars, path)
+    mp = tbl._manifest_path(path)
+
+    def state():
+        st = os.stat(mp)
+        with open(mp, "rb") as f:
+            return f.read(), (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+    before = state()
+    with pytest.raises(storage.ExpectationError):
+        storage.write_with_expectations(bars, path, {"never": "volume < 0"})
+    assert state() == before
+    assert sorted(os.listdir(path)) == [tbl.MANIFEST, "v0000"]
+
+
+def _batches(spark, rows: dict[int, int]):
+    """``rows[b]`` ids in partition ``batch=b``."""
+    df = None
+    for b, n in rows.items():
+        part = spark.range(n).select("id", F.lit(b).alias("batch"))
+        df = part if df is None else df.unionByName(part)
+    return df
+
+
+def test_stale_commit_raises_and_changes_nothing(spark, tmp_path):
+    """First committer wins: a writer that read v0 may not commit after v1
+    landed, even on another partition -- committing would carry v0's
+    ``batch=0`` forward and silently drop v1's row there."""
+    path = str(tmp_path / "t")
+    storage.write_partitioned(_batches(spark, {0: 3, 1: 3}), path, ["batch"])
+    read_at_v0 = storage.snapshot_of(path, 0)
+    storage.merge_into(spark, path, _batches(spark, {0: 4}), ["id", "batch"], ["batch"])
+    mp = tbl._manifest_path(path)
+    with open(mp, "rb") as f:
+        log = f.read()
+    rows = _rows(storage.read_table(spark, path))
+    with pytest.raises(storage.CommitConflictError):
+        storage.write_partitioned(
+            _batches(spark, {1: 5}),
+            path,
+            ["batch"],
+            operation="APPEND",
+            base_snapshot=read_at_v0,
+            replaced=["batch=1"],
+        )
+    with open(mp, "rb") as f:
+        assert f.read() == log
+    assert _rows(storage.read_table(spark, path)) == rows
+    assert not os.path.exists(tbl._version_dir(path, 2))
+
+
+def test_concurrent_blind_writes_get_distinct_versions(spark, tmp_path):
+    path = str(tmp_path / "t")
+    with ThreadPoolExecutor(2) as pool:
+        versions = list(
+            pool.map(
+                lambda b: storage.write_partitioned(_batches(spark, {b: 3}), path, ["batch"]),
+                [0, 1],
+            )
+        )
+    assert sorted(versions) == [0, 1]
+    assert [e["version"] for e in tbl._read_manifest(path)] == [0, 1]
+    assert storage.read_table(spark, path).count() == 3
+
+
+def test_emptied_table_survives_vacuum(spark, bars, tmp_path):
+    """An emptied snapshot reads its schema from its own log entry, so it
+    stays readable, clonable and restorable after VACUUM removed every
+    version that held data."""
+    path = str(tmp_path / "t")
+    storage.write_partitioned(bars, path)
+    schema = storage.read_table(spark, path).schema
+    storage.delete_where(spark, path, "volume >= 0")  # v1: empty
+    assert storage.vacuum(path) == [0]
+    emptied = storage.read_table(spark, path)
+    assert emptied.schema == schema and emptied.count() == 0
+
+    clone = str(tmp_path / "clone")
+    storage.clone_table(path, clone)
+    cloned = storage.read_table(spark, clone)
+    assert cloned.schema == schema and cloned.count() == 0
+
+    storage.write_partitioned(bars.limit(4), path)  # v2
+    assert storage.restore(path, 1) == 3
+    storage.vacuum(path)
+    restored = storage.read_table(spark, path)
+    assert restored.schema == schema and restored.count() == 0
 
 
 def test_torn_log_tail_is_skipped_then_cut_by_the_next_commit(spark, bars, tmp_path):
@@ -258,7 +378,7 @@ def test_torn_log_tail_is_skipped_then_cut_by_the_next_commit(spark, bars, tmp_p
     assert storage.read_table(spark, path).count() == n
 
 
-def test_log_cache_follows_appends_and_in_place_rewrites(spark, bars, tmp_path):
+def test_log_cache_follows_appends(spark, bars, tmp_path):
     path = str(tmp_path / "t")
     storage.write_partitioned(bars, path)
     first = tbl._read_manifest(path)
@@ -269,8 +389,7 @@ def test_log_cache_follows_appends_and_in_place_rewrites(spark, bars, tmp_path):
 
     with pytest.raises(storage.ExpectationError):
         storage.write_with_expectations(bars, path, {"never": "volume < 0"})
-    # The failed version was appended, read back, then cut out of the log
-    # by an in-place rewrite; the cache must not keep serving it.
+    # The failed write was never appended; the cache serves the log as is.
     assert [e["version"] for e in tbl._read_manifest(path)] == [0, 1]
     assert storage.current_version(path) == 1
 
