@@ -10,9 +10,26 @@ Scale design:
   comparison; candidate verification runs only within buckets.
 * Pair blocking uses ``source`` so bucket sizes stay bounded; at real scale
   the band hash itself is the blocking key.
+
+Every near-dup leg (text here; image, audio and video in ``multimodal``)
+is the same three stages over a different fingerprint, and each stage is
+written once below:
+
+* ``_shared_counts`` -- the candidate join: posting equi-join plus a
+  shared-posting count per doc pair (symmetric self-join or batch x
+  corpus);
+* ``_best_match`` -- incremental admission: the best verified corpus
+  match per batch doc, novel docs flagged;
+* ``_keep_largest`` -- the keeper: per duplicate cluster, keep the
+  largest copy.
+
+Only the exact verify between candidate and decision is per-leg.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -153,24 +170,40 @@ def exact_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _common_counts(posts: DataFrame) -> DataFrame:
-    """Per-ordered-pair common-shingle counts via the blocked posting
-    self-join on (source, 8-byte hash, doc_a < doc_b) -- ONE definition
-    shared by the Jaccard and containment measures so the pair-join
-    (blocking key, hash width) cannot diverge between them."""
-    a, b = posts.alias("a"), posts.alias("b")
+def _shared_counts(
+    left: DataFrame,
+    right: DataFrame,
+    on: tuple[str, ...],
+    names: tuple[str, str, str],
+    ordered: bool,
+) -> DataFrame:
+    """The candidate stage of every near-dup leg: equi-join two posting
+    relations ``(doc_id, *on)`` on the posting key ``on`` and count the
+    postings each doc pair shares, as rows named ``names`` (left doc,
+    right doc, count). This is the inverted-index join: work is
+    sum(posting-list^2) per key, never |docs|^2.
+
+    ``ordered=True`` is the symmetric self-join form: it adds
+    ``left.doc_id < right.doc_id``, so each unordered pair appears once
+    and no doc pairs with itself. ``ordered=False`` is the incremental
+    form: ``left`` holds the batch postings and ``right`` the corpus
+    postings, which do not overlap."""
+    lhs, rhs = left.alias("l"), right.alias("r")
+    cond = reduce(and_, [F.col(f"l.{c}") == F.col(f"r.{c}") for c in on])
+    if ordered:
+        cond = cond & (F.col("l.doc_id") < F.col("r.doc_id"))
+    a, b, n = names
     return (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.h") == F.col("b.h"))  # 8-byte key, not the string
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_common"))
+        lhs.join(rhs, cond)
+        .groupBy(F.col("l.doc_id").alias(a), F.col("r.doc_id").alias(b))
+        .agg(F.count("*").alias(n))
     )
+
+
+# The text leg's posting key: blocked by source, keyed on the 8-byte
+# shingle hash, never the string.
+_TEXT_KEY = ("source", "h")
+_TEXT_PAIR = ("doc_a", "doc_b", "n_common")
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,7 +218,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     posts = _shingle_posts(spark, sf_dir)
     sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    return _pair_jaccard(_common_counts(posts), sizes)
+    common = _shared_counts(posts, posts, _TEXT_KEY, _TEXT_PAIR, ordered=True)
+    return _pair_jaccard(common, sizes)
 
 
 # Containment threshold: a pair is flagged when the SMALLER shingle set
@@ -244,7 +278,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _posts_of(_excerpt_docs(docs))
     )
     sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    common = _common_counts(posts)
+    common = _shared_counts(posts, posts, _TEXT_KEY, _TEXT_PAIR, ordered=True)
     sa, sb = sizes.alias("sa"), sizes.alias("sb")
     cont = F.col("n_common") / F.least(F.col("sa.n_sh"), F.col("sb.n_sh"))
     return (
@@ -930,6 +964,41 @@ def fuzzy_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INCR_NUM, _INCR_DEN = 7, 10
 
 
+def _best_match(
+    batch_ids: DataFrame,
+    scored: DataFrame,
+    order: tuple,
+    metrics: tuple[str, ...],
+) -> DataFrame:
+    """The admission stage of every incremental near-dup leg. ``scored``
+    holds the verified candidates ``(new_doc, cand_doc, *metrics)``; each
+    batch doc keeps its best one under ``order``, ties going to the
+    lowest ``cand_doc``. The result is left-joined back to every batch
+    doc (``batch_ids``, one ``new_doc`` column): a doc with no verified
+    candidate gets NULL match columns and ``is_novel = 1``.
+
+    Scale shape: the candidates come from an ASYMMETRIC join of batch
+    postings against the corpus index (``_shared_counts`` with
+    ``ordered=False``), so cost is linear in the batch for a fixed
+    corpus; the rank is one window per batch doc."""
+    rank = Window.partitionBy("new_doc").orderBy(*order, "cand_doc")
+    best = (
+        scored.withColumn("rn", F.row_number().over(rank))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+    return (
+        batch_ids.join(best, "new_doc", "left")
+        .select(
+            "new_doc",
+            F.col("cand_doc").alias("matched_doc"),
+            *metrics,
+            F.col("cand_doc").isNull().cast("int").alias("is_novel"),
+        )
+        .orderBy("new_doc")
+    )
+
+
 def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental (online) near-dup admission -- the PRODUCTION dedup
     shape: a corpus of 100 TB is never re-deduped against itself; each
@@ -938,17 +1007,13 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id arrival order, threshold ``max_id * 7 DIV 10``) are the
     batch; for each one, its BEST corpus match by exact shingle Jaccard
     (>= the d_ngram_jaccard threshold, argmax under (jaccard DESC,
-    corpus doc ASC)), emitted as an admit/drop row: novel docs carry
-    NULL match columns and is_novel = 1. Within-batch duplicates are a
-    separate self-join pass by design (d_ngram_jaccard's shape).
+    corpus doc ASC)). Within-batch duplicates are a separate self-join
+    pass by design (d_ngram_jaccard's shape).
 
-    Scale shape: an ASYMMETRIC join -- batch postings (small) against
-    corpus postings on (source, 8-byte hash); no self-join, so cost is
-    sum over shingles of |batch posting| x |corpus posting|, linear in
-    the batch for a fixed corpus. The threshold is ONE bounded
-    driver-side scalar (the max doc id -- a parameter, not data). The
-    posting table is the cached session one (at 100 TB: the maintained
-    posting index the reference's maintenance loop would own)."""
+    The threshold is ONE bounded driver-side scalar (the max doc id -- a
+    parameter, not data). The posting table is the cached session one
+    (at 100 TB: the maintained posting index the reference's maintenance
+    loop would own)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     # max() over an empty table is NULL/None; 0 keeps the degenerate input
     # on the oracle's path (its NULL threshold admits no rows, and so does
@@ -957,26 +1022,18 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = max_id * _INCR_NUM // _INCR_DEN
     posts = _shingle_posts(spark, sf_dir)
     sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    n, c = posts.alias("n"), posts.alias("c")
-    common = (
-        n.join(
-            c,
-            (F.col("n.source") == F.col("c.source"))
-            & (F.col("n.h") == F.col("c.h"))
-            & (F.col("n.doc_id") > thr)
-            & (F.col("c.doc_id") <= thr),
-        )
-        .groupBy(
-            F.col("n.doc_id").alias("new_doc"),
-            F.col("c.doc_id").alias("cand_doc"),
-        )
-        .agg(F.count("*").alias("n_common"))
+    common = _shared_counts(
+        posts.filter(F.col("doc_id") > thr),
+        posts.filter(F.col("doc_id") <= thr),
+        _TEXT_KEY,
+        ("new_doc", "cand_doc", "n_common"),
+        ordered=False,
     )
     sn, sc = sizes.alias("sn"), sizes.alias("sc")
     jac = F.col("n_common") / (
         F.col("sn.n_sh") + F.col("sc.n_sh") - F.col("n_common")
     )
-    best = (
+    scored = (
         common.join(sn, F.col("new_doc") == F.col("sn.doc_id"))
         .join(sc, F.col("cand_doc") == F.col("sc.doc_id"))
         .select(
@@ -986,69 +1043,52 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(jac, 4).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= _JACCARD_THRESHOLD)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("new_doc").orderBy(
-                    F.desc("jaccard"), "cand_doc"
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
     )
+    batch = docs.filter(F.col("doc_id") > thr).select(
+        F.col("doc_id").alias("new_doc")
+    )
+    return _best_match(batch, scored, (F.desc("jaccard"),), ("n_common", "jaccard"))
+
+
+def _keep_largest(clusters: DataFrame, sizes: DataFrame, size_col: str) -> DataFrame:
+    """The keeper stage of every near-dup leg: within each duplicate
+    cluster (``clusters``: doc_id, cluster_id) keep the doc with the
+    largest ``size_col`` from ``sizes`` (doc_id, size_col), ties going
+    to the lowest doc_id. Emits (doc_id, cluster_id, size_col,
+    keeper_id, kept) per clustered doc; ``kept = 0`` rows are the drop
+    list a pipeline anti-joins against.
+
+    Scale shape: the labels come from the pair graph (the fact table is
+    untouched); one join to per-doc size metadata (|clustered docs|
+    rows, AQE picks the strategy) and one window per cluster."""
+    w = Window.partitionBy("cluster_id").orderBy(F.desc(size_col), "doc_id")
     return (
-        docs.filter(F.col("doc_id") > thr)
-        .withColumnRenamed("doc_id", "new_doc")
-        .join(best, "new_doc", "left")
+        clusters.join(sizes, "doc_id")
+        .withColumn("keeper_id", F.first("doc_id").over(w))
         .select(
-            "new_doc",
-            F.col("cand_doc").alias("matched_doc"),
-            "n_common",
-            "jaccard",
-            F.col("cand_doc").isNull().cast("int").alias("is_novel"),
+            "doc_id",
+            "cluster_id",
+            size_col,
+            "keeper_id",
+            (F.col("doc_id") == F.col("keeper_id")).cast("int").alias("kept"),
         )
-        .orderBy("new_doc")
+        .orderBy("doc_id")
     )
 
 
 def cluster_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup DECISION artifact: for every doc in a near-dup cluster
-    (``d_dup_clusters`` components), pick the cluster's keeper by
-    quality priority -- keep the LONGEST copy (token count, doc_id
-    tiebreak), the standard rule for prefix/excerpt near-dups where the
-    min-id keeper would throw away the complete version. Emits
-    (doc_id, cluster_id, n_tokens, keeper_id, kept) per clustered doc;
-    ``kept = 0`` rows are the drop list a pipeline anti-joins against.
-
-    Scale shape: the component labels come from the cached pair graph
-    (min-label propagation -- the fact table is untouched); one join to
-    the per-doc token counts (|clustered docs| rows, AQE picks the
-    strategy) and one window per cluster. Token counts use
-    ``t_quality_score``'s tokenization, so the keeper rule and the
-    quality table agree."""
+    """The text dedup DECISION artifact: for every doc in a near-dup
+    cluster (``d_dup_clusters`` components), keep the LONGEST copy
+    (token count, doc_id tiebreak), the standard rule for prefix/excerpt
+    near-dups where the min-id keeper would throw away the complete
+    version. Token counts use ``t_quality_score``'s tokenization, so the
+    keeper rule and the quality table agree."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split(F.lower("text"), " ")).cast("long").alias("n_tokens"),
     )
     clusters = min_label_components(_dup_pairs(spark, sf_dir))
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("n_tokens"), "doc_id"
-    )
-    return (
-        clusters.join(docs, "doc_id")
-        .withColumn("keeper_id", F.first("doc_id").over(w))
-        .select(
-            "doc_id",
-            "cluster_id",
-            "n_tokens",
-            "keeper_id",
-            (F.col("doc_id") == F.col("keeper_id"))
-            .cast("int")
-            .alias("kept"),
-        )
-        .orderBy("doc_id")
-    )
+    return _keep_largest(clusters, docs, "n_tokens")
 
 
 # Exact repeated-substring dedup (the Lee et al. 2022 "Deduplicating

@@ -14,11 +14,21 @@ images synthesized JVM-side -- ``P5`` magic, ASCII dimensions header, raw
 computes pixel statistics with numpy inside ``mapInPandas``. Swapping PGM
 for JPEG means replacing ``_parse_pgm`` with ``PIL.Image.open``; nothing
 else changes.
+
+The image, audio and video near-dup legs run the stages ``dedup`` writes
+once for every modality: ``_shared_counts`` (candidate posting join),
+``_best_match`` (incremental admission) and ``_keep_largest`` (cluster
+keeper). What is per-leg here is the fingerprint and its verify. Image
+and audio share one banded-hamming form: ``_bit_bands`` postings and
+``_hamming_verify``, composed as ``_hamming_pairs`` and
+``_hamming_admission``. Video matches exact per-frame signatures.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
+from operator import add
 
 import numpy as np
 import pandas as pd
@@ -28,6 +38,12 @@ from pyspark.sql import functions as F
 
 from ..artifacts import artifact, clear_all
 from ..sources.fixtures import load_table
+from .dedup import (
+    _best_match,
+    _keep_largest,
+    _shared_counts,
+    largestar_components,
+)
 
 clear_nd_cache = clear_all  # old name, kept because perfbench/run.py imports it
 
@@ -486,6 +502,8 @@ _ND_HAMMING_MAX = 7
 # is what keeps the posting lists bounded (measured sf0.1: 19.2M candidate
 # pairs with zero bands admitted vs 398k without).
 _ND_MIN_BRIGHT = 8
+# The banded legs' posting key: a nonzero 8-bit band value at its position.
+_BAND_KEY = ("band", "val")
 
 
 def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -499,24 +517,21 @@ def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(twins)
 
 
-def _ahash_bands(ah: DataFrame) -> DataFrame:
-    """Nonzero 8-bit-band inverted-index postings (doc_id, band, val)
-    over (doc_id, ahash_hi, ahash_lo) rows; the zero-band suppression is
-    the hub control (see ``_ND_MIN_BRIGHT``). Shared by the batch
-    self-join (``image_neardup``) and the incremental admission's
-    asymmetric join (``image_incremental``)."""
+def _bit_bands(fps: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """Nonzero 8-bit-band inverted-index postings ``(doc_id, band, val)``
+    over a 64-bit fingerprint held in the words ``cols``, least
+    significant word first: eight bands split evenly over the words, so
+    image's ``(ahash_lo, ahash_hi)`` gives lo bands 0-3 and hi bands 4-7,
+    and audio's ``(fp,)`` bands 0-7 of one word. The zero-band
+    suppression is the hub control (see ``_ND_MIN_BRIGHT``)."""
+    per = 8 // len(cols)
     band_structs = ", ".join(
-        [
-            f"struct({i} as band, shiftright(ahash_lo, {8 * i}) & 255 as val)"
-            for i in range(4)
-        ]
-        + [
-            f"struct({i + 4} as band, shiftright(ahash_hi, {8 * i}) & 255 as val)"
-            for i in range(4)
-        ]
+        f"struct({j * per + i} as band, shiftright({c}, {8 * i}) & 255 as val)"
+        for j, c in enumerate(cols)
+        for i in range(per)
     )
     return (
-        ah.select(
+        fps.select(
             "doc_id", F.explode(F.expr(f"array({band_structs})")).alias("s")
         )
         .select("doc_id", "s.band", "s.val")
@@ -524,67 +539,99 @@ def _ahash_bands(ah: DataFrame) -> DataFrame:
     )
 
 
-def image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate PAIRS over the aHash fingerprints -- the step
-    a multimodal curation pipeline runs right after hashing, completing
-    fingerprint -> candidate pairs for the image leg the way
-    ``d_ngram_jaccard`` does for text:
-
-    1. hash the twin-augmented corpus with the real PGM codec
-       (``_ahash_of``: decode, 8x8 block grid, bright-bit per block);
-    2. band the 64 bits into eight 8-bit bands and build an inverted
-       index of NONZERO (band, value) postings -- zero bands are shared
-       absence, not similarity, and admitting them is the measured
-       19.2M-pair hub (see ``_ND_MIN_BRIGHT``);
-    3. equi-join postings on (band, value) -- candidate work is
-       sum(posting-list^2), never |docs|^2;
-    4. verify each candidate pair exactly: hamming(a, b) =
-       bit_count(hi^hi) + bit_count(lo^lo) <= 7, both hashes carrying
-       >= 8 bright blocks.
-
-    Recall at the threshold is exact by pigeonhole (<= 7 differing bits
-    across 8 bands leave one band equal) for pairs sharing a nonzero
-    band; the hypothesis property test pins both halves. At 100 TB the
-    hash table is a persisted artifact and the banding join shuffles
-    postings, not images -- the text-dedup shape exactly."""
-    ah = _ahash_table(spark, sf_dir)
-    bands = _ahash_bands(ah)
-    cand = (
-        bands.alias("l")
-        .join(
-            bands.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .groupBy(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_shared_bands"))
+def _hamming_verify(
+    cand: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    cols: tuple[str, ...],
+    gate_col: str,
+    names: tuple[str, str],
+) -> DataFrame:
+    """The exact verify of the banded legs: join each candidate pair
+    ``names`` (with its ``n_shared_bands``) to both fingerprints and keep
+    hamming <= ``_ND_HAMMING_MAX`` with both sides carrying at least
+    ``_ND_MIN_BRIGHT`` set bits in ``gate_col`` (the entropy gate).
+    Hamming sums the words high word first, as the oracles do."""
+    x, y = left.alias("x"), right.alias("y")
+    hamming = reduce(
+        add, [F.bit_count(F.expr(f"x.{c} ^ y.{c}")) for c in reversed(cols)]
     )
-    x, y = ah.alias("x"), ah.alias("y")
-    hamming = F.bit_count(F.expr("x.ahash_hi ^ y.ahash_hi")) + F.bit_count(
-        F.expr("x.ahash_lo ^ y.ahash_lo")
-    )
+    a, b = names
     return (
-        cand.join(x, F.col("doc_a") == F.col("x.doc_id"))
-        .join(y, F.col("doc_b") == F.col("y.doc_id"))
+        cand.join(x, F.col(a) == F.col("x.doc_id"))
+        .join(y, F.col(b) == F.col("y.doc_id"))
         .filter(
             (hamming <= _ND_HAMMING_MAX)
             & (
-                F.least(
-                    F.col("x.n_bright_blocks"), F.col("y.n_bright_blocks")
-                )
+                F.least(F.col(f"x.{gate_col}"), F.col(f"y.{gate_col}"))
                 >= _ND_MIN_BRIGHT
             )
         )
         .select(
-            "doc_a",
-            "doc_b",
+            a,
+            b,
             F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
             hamming.cast("int").alias("hamming"),
         )
-        .orderBy("doc_a", "doc_b")
+    )
+
+
+def _hamming_pairs(fps: DataFrame, cols: tuple[str, ...], gate_col: str) -> DataFrame:
+    """Verified near-dup PAIRS of a banded leg: ``_bit_bands`` postings,
+    the ordered self-join ``_shared_counts``, then ``_hamming_verify``.
+    Recall at the threshold is exact by pigeonhole (<= 7 differing bits
+    across 8 bands leave one band equal) for pairs sharing a nonzero
+    band; the hypothesis property tests pin both halves."""
+    bands = _bit_bands(fps, cols)
+    cand = _shared_counts(
+        bands, bands, _BAND_KEY, ("doc_a", "doc_b", "n_shared_bands"), ordered=True
+    )
+    pairs = _hamming_verify(cand, fps, fps, cols, gate_col, ("doc_a", "doc_b"))
+    return pairs.orderBy("doc_a", "doc_b")
+
+
+def _hamming_admission(
+    fps: DataFrame, cols: tuple[str, ...], gate_col: str
+) -> DataFrame:
+    """Incremental admission of a banded leg: the twins (doc_id >=
+    ``_ND_TWIN_BASE``) are the arriving batch, the natural docs the
+    corpus. Batch band postings join the corpus's (``_shared_counts``,
+    unordered), ``_hamming_verify`` checks each candidate, and
+    ``_best_match`` keeps the least hamming per batch doc."""
+    is_batch = F.col("doc_id") >= _ND_TWIN_BASE
+    corpus, batch = fps.filter(~is_batch), fps.filter(is_batch)
+    cand = _shared_counts(
+        _bit_bands(batch, cols),
+        _bit_bands(corpus, cols),
+        _BAND_KEY,
+        ("new_doc", "cand_doc", "n_shared_bands"),
+        ordered=False,
+    )
+    scored = _hamming_verify(
+        cand, batch, corpus, cols, gate_col, ("new_doc", "cand_doc")
+    )
+    return _best_match(
+        batch.select(F.col("doc_id").alias("new_doc")),
+        scored,
+        ("hamming",),
+        ("n_shared_bands", "hamming"),
+    )
+
+
+def image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image near-duplicate PAIRS over the aHash fingerprints -- the step
+    a multimodal curation pipeline runs right after hashing, completing
+    fingerprint -> candidate pairs for the image leg the way
+    ``d_ngram_jaccard`` does for text. The twin-augmented corpus is
+    hashed with the real PGM codec (``_ahash_of``: decode, 8x8 block
+    grid, bright-bit per block); the 64 bits band into eight 8-bit bands
+    (lo word bands 0-3, hi word 4-7), and the verify is
+    bit_count(hi^hi) + bit_count(lo^lo) <= 7 with both hashes carrying
+    >= 8 bright blocks (``_hamming_pairs``). At 100 TB the hash table is
+    a persisted artifact and the banding join shuffles postings, not
+    images -- the text-dedup shape exactly."""
+    return _hamming_pairs(
+        _ahash_table(spark, sf_dir), ("ahash_lo", "ahash_hi"), "n_bright_blocks"
     )
 
 
@@ -635,8 +682,6 @@ def _afp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     setup="image_nd_clusters", used_by=("m_image_dup_clusters", "m_image_keeper")
 )
 def _nd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import largestar_components
-
     pairs = image_neardup(spark, sf_dir).select("doc_a", "doc_b")
     return largestar_components(pairs).localCheckpoint()
 
@@ -649,8 +694,6 @@ def _and_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified ``m_audio_neardup`` pair graph (sf0.1: 3,599 pairs, 472
     labeled clips with one 463-clip near-clique), shared by the audio
     clusters and keeper keys."""
-    from .dedup import largestar_components
-
     pairs = audio_neardup(spark, sf_dir).select("doc_a", "doc_b")
     return largestar_components(pairs).localCheckpoint()
 
@@ -678,30 +721,9 @@ def image_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``d_cluster_keeper`` shape): within every ``m_image_dup_clusters``
     component keep the HIGHEST-RESOLUTION copy (n_pixels, doc_id
     tiebreak) -- the standard rule for re-encoded/re-exposed image dups,
-    where the component-minimum id would happily keep a thumbnail.
-    Emits (doc_id, cluster_id, n_pixels, keeper_id, kept) per clustered
-    image; ``kept = 0`` rows are the drop list.
-
-    Scale shape: labels come from the pair graph (the image table is
-    untouched), one join to per-image geometry metadata (|clustered|
-    rows), one window per cluster."""
-    from pyspark.sql import Window
-
-    clusters = _nd_clusters(spark, sf_dir)
+    where the component-minimum id would happily keep a thumbnail."""
     geo = _pgm_of(_neardup_corpus(spark, sf_dir)).select("doc_id", "n_pixels")
-    w = Window.partitionBy("cluster_id").orderBy(F.desc("n_pixels"), "doc_id")
-    return (
-        clusters.join(geo, "doc_id")
-        .withColumn("keeper_id", F.first("doc_id").over(w))
-        .select(
-            "doc_id",
-            "cluster_id",
-            "n_pixels",
-            "keeper_id",
-            (F.col("doc_id") == F.col("keeper_id")).cast("int").alias("kept"),
-        )
-        .orderBy("doc_id")
-    )
+    return _keep_largest(_nd_clusters(spark, sf_dir), geo, "n_pixels")
 
 
 def image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -711,17 +733,10 @@ def image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch is checked against the corpus's banded aHash index and admitted
     or matched. The twin-augmented corpus provides the arrival split for
     free: the perturbed re-uploads (doc_id >= ``_ND_TWIN_BASE``) ARE the
-    incoming batch, the natural docs the standing corpus.
-
-    Per batch image: its BEST corpus match among banded candidates that
-    pass the exact verify (hamming <= 7, both >= 8 bright blocks), argmin
-    under (hamming ASC, corpus doc ASC); novel images carry NULL match
-    columns and is_novel = 1.
-
-    Scale shape: an ASYMMETRIC equi-join -- batch postings (small)
-    against corpus postings on nonzero (band, val); no self-join, cost
-    linear in the batch for a fixed corpus, and the corpus postings are
-    the maintained index artifact at scale. Within-batch duplicates are
+    incoming batch, the natural docs the standing corpus. Per batch
+    image: its BEST corpus match among banded candidates that pass the
+    exact verify (hamming <= 7, both >= 8 bright blocks), argmin under
+    (hamming ASC, corpus doc ASC). Within-batch duplicates are
     ``m_image_neardup``'s separate pass, exactly like the text split.
 
     Band-width rule (probe-backed, SCALING.md round-10): 8-bit bands
@@ -732,145 +747,26 @@ def image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     band over a wider perceptual hash) to keep lists bounded -- kept
     8-bit HERE because recall at hamming <= 7 over 8 bands is
     pigeonhole-exact, which fewer/wider bands would forfeit."""
-    from pyspark.sql import Window as _W
-
-    ah = _ahash_table(spark, sf_dir)
-    is_batch = F.col("doc_id") >= _ND_TWIN_BASE
-    corpus, batch = ah.filter(~is_batch), ah.filter(is_batch)
-    cand = (
-        _ahash_bands(batch)
-        .alias("n")
-        .join(
-            _ahash_bands(corpus).alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.val") == F.col("c.val")),
-        )
-        .groupBy(
-            F.col("n.doc_id").alias("new_doc"),
-            F.col("c.doc_id").alias("cand_doc"),
-        )
-        .agg(F.count("*").alias("n_shared_bands"))
-    )
-    x, y = batch.alias("x"), corpus.alias("y")
-    hamming = F.bit_count(F.expr("x.ahash_hi ^ y.ahash_hi")) + F.bit_count(
-        F.expr("x.ahash_lo ^ y.ahash_lo")
-    )
-    best = (
-        cand.join(x, F.col("new_doc") == F.col("x.doc_id"))
-        .join(y, F.col("cand_doc") == F.col("y.doc_id"))
-        .filter(
-            (hamming <= _ND_HAMMING_MAX)
-            & (
-                F.least(
-                    F.col("x.n_bright_blocks"), F.col("y.n_bright_blocks")
-                )
-                >= _ND_MIN_BRIGHT
-            )
-        )
-        .select(
-            "new_doc",
-            "cand_doc",
-            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                _W.partitionBy("new_doc").orderBy("hamming", "cand_doc")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    return (
-        batch.select(F.col("doc_id").alias("new_doc"))
-        .join(best, "new_doc", "left")
-        .select(
-            "new_doc",
-            F.col("cand_doc").alias("matched_doc"),
-            "n_shared_bands",
-            "hamming",
-            F.col("cand_doc").isNull().cast("int").alias("is_novel"),
-        )
-        .orderBy("new_doc")
-    )
-
-
-def _afp_bands(fps: DataFrame) -> DataFrame:
-    """Nonzero 8-bit-band postings (doc_id, band, val) over the 63-bit
-    audio fingerprints -- the audio twin of ``_ahash_bands``, shared by
-    the batch self-join (``audio_neardup``) and the incremental
-    admission's asymmetric join (``audio_incremental``)."""
-    band_structs = ", ".join(
-        f"struct({i} as band, shiftright(fp, {8 * i}) & 255 as val)"
-        for i in range(8)
-    )
-    return (
-        fps.select(
-            "doc_id", F.explode(F.expr(f"array({band_structs})")).alias("s")
-        )
-        .select("doc_id", "s.band", "s.val")
-        .filter(F.col("val") != 0)
+    return _hamming_admission(
+        _ahash_table(spark, sf_dir), ("ahash_lo", "ahash_hi"), "n_bright_blocks"
     )
 
 
 def audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-duplicate PAIRS over the energy-delta fingerprints --
-    the audio leg of the same banded-LSH pipeline as ``image_neardup``,
-    completing the text/image/audio dedup triple end to end
-    (fingerprint -> candidate pairs on all three modalities):
-
-    1. fingerprint the twin-augmented corpus (same 'e' -> 'E' twin
-       transform; the energy-delta bit string is sign-of-difference, so
-       a roughly proportional energy inflation preserves most steps --
-       probe: ALL 500 sf0.1 twins land within hamming 7);
-    2. band the 63 fingerprint bits into eight 8-bit bands, keep
-       NONZERO (band, value) postings (a zero band past a short clip's
-       last frame is shared absence -- the same structural hub as the
-       image side's empty blocks);
-    3. equi-join postings on (band, value);
-    4. verify exactly: bit_count(fp_a ^ fp_b) <= 7, both fingerprints
-       carrying >= 8 rising steps (the entropy gate: near-empty bit
-       strings sit at tiny distances by construction).
-
-    Same pigeonhole recall argument and the same property/brute-force
-    tests as the image key; the DuckDB oracle rebuilds frame energies,
-    fingerprints, bands, candidates and the verify from the raw text."""
-    fps = _afp_table(spark, sf_dir)
-    bands = _afp_bands(fps)
-    cand = (
-        bands.alias("l")
-        .join(
-            bands.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .groupBy(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_shared_bands"))
-    )
-    x, y = fps.alias("x"), fps.alias("y")
-    hamming = F.bit_count(F.expr("x.fp ^ y.fp"))
-    return (
-        cand.join(x, F.col("doc_a") == F.col("x.doc_id"))
-        .join(y, F.col("doc_b") == F.col("y.doc_id"))
-        .filter(
-            (hamming <= _ND_HAMMING_MAX)
-            & (
-                F.least(F.col("x.n_rising"), F.col("y.n_rising"))
-                >= _ND_MIN_BRIGHT
-            )
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    the audio leg of the same banded pipeline as ``image_neardup``
+    (``_hamming_pairs``). The twin-augmented corpus is fingerprinted
+    with the same 'e' -> 'E' twin transform; the energy-delta bit string
+    is sign-of-difference, so a roughly proportional energy inflation
+    preserves most steps (probe: ALL 500 sf0.1 twins land within
+    hamming 7). The 63 fingerprint bits band into eight 8-bit bands
+    (a zero band past a short clip's last frame is shared absence --
+    the same structural hub as the image side's empty blocks), and the
+    verify is bit_count(fp_a ^ fp_b) <= 7 with both fingerprints
+    carrying >= 8 rising steps. The DuckDB oracle rebuilds frame
+    energies, fingerprints, bands, candidates and the verify from the
+    raw text."""
+    return _hamming_pairs(_afp_table(spark, sf_dir), ("fp",), "n_rising")
 
 
 QUERIES = {
@@ -1410,13 +1306,7 @@ def audio_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-dedup DECISION artifact: within every ``m_audio_dup_clusters``
     component keep the LONGEST clip (n_chunks DESC, doc_id tiebreak) --
     the full recording wins over its excerpt/re-encode, the audio analog
-    of ``m_image_keeper``'s highest-resolution rule. Emits (doc_id,
-    cluster_id, n_chunks, keeper_id, kept); kept = 0 rows are the drop
-    list. Labels come from the cached pair-graph contraction; one join to
-    per-clip length metadata and one window per cluster."""
-    from pyspark.sql import Window
-
-    clusters = _and_clusters(spark, sf_dir)
+    of ``m_image_keeper``'s highest-resolution rule."""
     media = _neardup_corpus(spark, sf_dir).select(
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )
@@ -1427,19 +1317,7 @@ def audio_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1),
         ).alias("n_chunks"),
     )
-    w = Window.partitionBy("cluster_id").orderBy(F.desc("n_chunks"), "doc_id")
-    return (
-        clusters.join(lens, "doc_id")
-        .withColumn("keeper_id", F.first("doc_id").over(w))
-        .select(
-            "doc_id",
-            "cluster_id",
-            "n_chunks",
-            "keeper_id",
-            (F.col("doc_id") == F.col("keeper_id")).cast("int").alias("kept"),
-        )
-        .orderBy("doc_id")
-    )
+    return _keep_largest(_and_clusters(spark, sf_dir), lens, "n_chunks")
 
 
 QUERIES["m_audio_dup_clusters"] = audio_dup_clusters
@@ -1525,70 +1403,12 @@ ORACLES["m_image_incremental"] = f"""
 
 def audio_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental (online) audio admission -- ``m_image_incremental``'s
-    shape on the audio leg, completing incremental symmetry across the
-    text/image/audio triple (``d_incremental_neardup`` /
-    ``m_image_incremental`` / here): the perturbed re-uploads
-    (doc_id >= ``_ND_TWIN_BASE``) are the arriving batch, checked
-    against the standing corpus's banded fingerprint index; best corpus
-    match by (hamming ASC, corpus doc ASC) under the exact verify
-    (bit_count(fp^fp) <= 7, both >= 8 rising steps), novel clips
-    flagged. Asymmetric join: batch postings vs corpus postings, never
-    a self-join -- linear in the batch for a fixed corpus."""
-    from pyspark.sql import Window as _W
-
-    fps = _afp_table(spark, sf_dir)
-    is_batch = F.col("doc_id") >= _ND_TWIN_BASE
-    corpus, batch = fps.filter(~is_batch), fps.filter(is_batch)
-    cand = (
-        _afp_bands(batch)
-        .alias("n")
-        .join(
-            _afp_bands(corpus).alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.val") == F.col("c.val")),
-        )
-        .groupBy(
-            F.col("n.doc_id").alias("new_doc"),
-            F.col("c.doc_id").alias("cand_doc"),
-        )
-        .agg(F.count("*").alias("n_shared_bands"))
-    )
-    x, y = batch.alias("x"), corpus.alias("y")
-    hamming = F.bit_count(F.expr("x.fp ^ y.fp"))
-    best = (
-        cand.join(x, F.col("new_doc") == F.col("x.doc_id"))
-        .join(y, F.col("cand_doc") == F.col("y.doc_id"))
-        .filter(
-            (hamming <= _ND_HAMMING_MAX)
-            & (F.least(F.col("x.n_rising"), F.col("y.n_rising")) >= _ND_MIN_BRIGHT)
-        )
-        .select(
-            "new_doc",
-            "cand_doc",
-            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                _W.partitionBy("new_doc").orderBy("hamming", "cand_doc")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    return (
-        batch.select(F.col("doc_id").alias("new_doc"))
-        .join(best, "new_doc", "left")
-        .select(
-            "new_doc",
-            F.col("cand_doc").alias("matched_doc"),
-            "n_shared_bands",
-            "hamming",
-            F.col("cand_doc").isNull().cast("int").alias("is_novel"),
-        )
-        .orderBy("new_doc")
-    )
+    shape on the audio leg (``_hamming_admission``): the perturbed
+    re-uploads (doc_id >= ``_ND_TWIN_BASE``) are the arriving batch,
+    checked against the standing corpus's banded fingerprint index; best
+    corpus match by (hamming ASC, corpus doc ASC) under the exact verify
+    (bit_count(fp^fp) <= 7, both >= 8 rising steps)."""
+    return _hamming_admission(_afp_table(spark, sf_dir), ("fp",), "n_rising")
 
 
 QUERIES["m_audio_incremental"] = audio_incremental
@@ -1834,6 +1654,8 @@ _VD_TWIN_MOD, _VD_TWIN_RES, _VD_TWIN_BASE = 10, 7, 4_000_000
 # gate is exact BY CONSTRUCTION: the posting join finds every pair
 # sharing >= 1 frame, a superset of every pair sharing >= 12.
 _VD_MIN_SHARED = 12
+# The exact per-frame signature the pairing joins on.
+_VD_SIG = ("frame_idx", "f_len", "f_energy", "f_wsum")
 
 
 def _video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1932,16 +1754,13 @@ def video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     being the exact integer signature so no threshold tuning exists to
     get wrong.
 
-    Pipeline: (1) frame the twin-augmented corpus (one corrupted middle
-    character -- see _VD_TWIN_*); (2) posting join on the exact
-    quadruple (frame_idx, f_len, f_energy, f_wsum) -- candidate work is
-    sum(posting-list^2), never |docs|^2; (3) keep pairs sharing >=
-    _VD_MIN_SHARED frames. Recall at the gate is exact by construction
-    (any pair sharing >= 12 frames shares >= 1, so the posting join
-    cannot miss it); the property test brute-forces all-pairs equality.
-
-    Scale shape: the pairing is an inverted-index equi-join + count
-    aggregate, the d_ngram_jaccard shape exactly. The posting key MUST
+    The twin-augmented corpus (one corrupted middle character -- see
+    _VD_TWIN_*) is framed once; ``_shared_counts`` joins its postings
+    on the exact quadruple (frame_idx, f_len, f_energy, f_wsum), and
+    pairs sharing >= _VD_MIN_SHARED frames are kept. Recall at the gate
+    is exact by construction (any pair sharing >= 12 frames shares >= 1,
+    so the posting join cannot miss it); the property test brute-forces
+    all-pairs equality. The posting key MUST
     carry more entropy than log2(16 x corpus) or the lists hub up: the
     r10c probe measured the plain (len, energy) pair saturating on a
     low-entropy synthetic corpus (12,392 keys / 398M candidate pairs at
@@ -1950,19 +1769,9 @@ def video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-frame hubs would take the text leg's posting cap."""
     fr = _vframes_table(spark, sf_dir)
     return (
-        fr.alias("l")
-        .join(
-            fr.alias("r"),
-            (F.col("l.frame_idx") == F.col("r.frame_idx"))
-            & (F.col("l.f_len") == F.col("r.f_len"))
-            & (F.col("l.f_energy") == F.col("r.f_energy"))
-            & (F.col("l.f_wsum") == F.col("r.f_wsum"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        _shared_counts(
+            fr, fr, _VD_SIG, ("doc_a", "doc_b", "n_shared_frames"), ordered=True
         )
-        .groupBy(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("n_shared_frames"))
         .filter(F.col("n_shared_frames") >= _VD_MIN_SHARED)
         .orderBy("doc_a", "doc_b")
     )
@@ -2071,8 +1880,6 @@ def _vnd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     topology; the shared core is used for uniformity (and because a real
     corpus's re-encode chains A~B~C make the closure non-trivial
     immediately)."""
-    from .dedup import largestar_components
-
     pairs = video_neardup(spark, sf_dir).select("doc_a", "doc_b")
     return largestar_components(pairs).localCheckpoint()
 
@@ -2092,28 +1899,11 @@ def video_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry; n_chars DESC, doc_id tiebreak). The corruption twins
     preserve length exactly, so on the fixtures the rule falls through
     to the doc_id tiebreak and the NATURAL clip wins over its corrupted
-    twin -- which is precisely the curation intent. Emits (doc_id,
-    cluster_id, n_chars, keeper_id, kept); kept = 0 rows are the drop
-    list."""
-    from pyspark.sql import Window
-
-    clusters = _vnd_clusters(spark, sf_dir)
+    twin -- which is precisely the curation intent."""
     lens = _video_corpus(spark, sf_dir).select(
         "doc_id", F.length("text").cast("bigint").alias("n_chars")
     )
-    w = Window.partitionBy("cluster_id").orderBy(F.desc("n_chars"), "doc_id")
-    return (
-        clusters.join(lens, "doc_id")
-        .withColumn("keeper_id", F.first("doc_id").over(w))
-        .select(
-            "doc_id",
-            "cluster_id",
-            "n_chars",
-            "keeper_id",
-            (F.col("doc_id") == F.col("keeper_id")).cast("int").alias("kept"),
-        )
-        .orderBy("doc_id")
-    )
+    return _keep_largest(_vnd_clusters(spark, sf_dir), lens, "n_chars")
 
 
 QUERIES["m_video_dup_clusters"] = video_dup_clusters
@@ -2177,57 +1967,29 @@ def video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_shared_frames DESC, corpus doc ASC); novel clips carry a NULL
     match and is_novel = 1.
 
-    Scale shape: an ASYMMETRIC equi-join -- batch frames (small)
-    against the corpus frame index on the exact (frame_idx, f_len,
-    f_energy, f_wsum) quadruple; no self-join, cost linear in the batch
-    for a fixed corpus. The signature's entropy is what keeps per-key
+    Batch frames join the corpus frame index on the exact
+    (frame_idx, f_len, f_energy, f_wsum) quadruple
+    (``_shared_counts``, unordered). The signature's entropy is what keeps per-key
     posting lists near-constant as the corpus grows -- the r10c probe
     showed the plain (len, energy) pair is NOT enough on low-entropy
     frames, hence the position-weighted term (see ``video_neardup``);
     the banded image/audio legs have the analogous band-width rule in
     ``image_incremental``."""
-    from pyspark.sql import Window as _W
-
     fr = _vframes_table(spark, sf_dir)
     is_batch = F.col("doc_id") >= _VD_TWIN_BASE
     corpus, batch = fr.filter(~is_batch), fr.filter(is_batch)
-    best = (
-        batch.alias("n")
-        .join(
-            corpus.alias("c"),
-            (F.col("n.frame_idx") == F.col("c.frame_idx"))
-            & (F.col("n.f_len") == F.col("c.f_len"))
-            & (F.col("n.f_energy") == F.col("c.f_energy"))
-            & (F.col("n.f_wsum") == F.col("c.f_wsum")),
-        )
-        .groupBy(
-            F.col("n.doc_id").alias("new_doc"),
-            F.col("c.doc_id").alias("cand_doc"),
-        )
-        .agg(F.count("*").cast("bigint").alias("n_shared_frames"))
-        .filter(F.col("n_shared_frames") >= _VD_MIN_SHARED)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                _W.partitionBy("new_doc").orderBy(
-                    F.desc("n_shared_frames"), "cand_doc"
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    return (
-        batch.select(F.col("doc_id").alias("new_doc"))
-        .distinct()
-        .join(best, "new_doc", "left")
-        .select(
-            "new_doc",
-            F.col("cand_doc").alias("matched_doc"),
-            "n_shared_frames",
-            F.col("cand_doc").isNull().cast("int").alias("is_novel"),
-        )
-        .orderBy("new_doc")
+    scored = _shared_counts(
+        batch,
+        corpus,
+        _VD_SIG,
+        ("new_doc", "cand_doc", "n_shared_frames"),
+        ordered=False,
+    ).filter(F.col("n_shared_frames") >= _VD_MIN_SHARED)
+    return _best_match(
+        batch.select(F.col("doc_id").alias("new_doc")).distinct(),
+        scored,
+        (F.desc("n_shared_frames"),),
+        ("n_shared_frames",),
     )
 
 

@@ -291,15 +291,26 @@ def running_user_counts_tws(stream: DataFrame) -> DataFrame:
     )
 
 
-def purchase_attribution(stream: DataFrame) -> DataFrame:
+def purchase_attribution(stream: DataFrame, how: str = "inner") -> DataFrame:
     """Stream-stream interval join: purchases matched to same-user clicks
     within the preceding day (streaming twin of
-    ``windows.click_purchase_attribution``).
+    ``windows.click_purchase_attribution``; ``how="leftOuter"`` is the
+    twin of ``windows.click_purchase_attribution_outer``).
 
     Both sides are watermarked and the join condition gives an event-time
     interval, so state is BOUNDED: a buffered click is evicted once the
     purchase-side watermark passes ``click_ts + 1 day`` -- without the
-    interval bound, stream-stream join state grows forever."""
+    interval bound, stream-stream join state grows forever.
+
+    Under ``leftOuter`` matched rows emit as they join; an UNMATCHED
+    click's NULL-purchase row emits only when the watermark passes
+    ``click_ts + 1 day`` and the click's state is evicted -- the outer
+    emission is gated by state cleanup, which is why the interval bound
+    is mandatory for outer stream-stream joins (Spark rejects an
+    un-bounded one). The global watermark is the MIN over both
+    withWatermark sides, so the eviction test drags it forward with
+    far-future sentinel events on BOTH sides, flushing every fixture
+    click's outer row."""
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(
@@ -324,52 +335,7 @@ def purchase_attribution(stream: DataFrame) -> DataFrame:
         (F.col("click_user") == F.col("purch_user"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 DAY")),
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("click_user").alias("user_id"),
-        "click_ts",
-        "purchase_ts",
-        F.round("purchase_value", 2).alias("purchase_value"),
-    )
-
-
-def purchase_attribution_outer(stream: DataFrame) -> DataFrame:
-    """LEFT OUTER stream-stream interval join (streaming twin of
-    ``windows.click_purchase_attribution_outer``): matched rows emit as
-    they join; an UNMATCHED click's NULL-purchase row emits only when
-    the watermark passes ``click_ts + 1 day`` and the click's state is
-    evicted -- the outer emission is gated by state cleanup, which is
-    why the interval bound is mandatory for outer stream-stream joins
-    (Spark rejects an un-bounded one). The global watermark is the MIN
-    over both withWatermark sides, so the eviction test drags it
-    forward with far-future sentinel events on BOTH sides, flushing
-    every fixture click's outer row."""
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("click_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK_DELAY)
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("purch_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", WATERMARK_DELAY)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("click_user") == F.col("purch_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 DAY")),
-        "leftOuter",
+        how,
     ).select(
         "click_id",
         "purchase_id",

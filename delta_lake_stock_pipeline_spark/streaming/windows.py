@@ -817,7 +817,8 @@ def _restart_out(spark: SparkSession, sf_dir: str) -> str:
 def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join, EXECUTED: the fixture
     events replayed as three time-ordered micro-batches through the real
-    watermarked outer-join path (``runtime.purchase_attribution_outer``),
+    watermarked outer-join path (``runtime.purchase_attribution`` with
+    ``how="leftOuter"``),
     then two far-future sentinel batches each carrying one click AND one
     purchase (distinct synthetic users, so they can never join anything)
     to drag BOTH sides' watermarks forward -- the global watermark is
@@ -860,7 +861,7 @@ def _join_outer_out(spark: SparkSession, sf_dir: str) -> str:
         "spark_stream_join_outer_",
         list(_tile_files(spark, sf_dir))
         + _sentinels(spark, max_ts, ("click", "purchase")),
-        runtime.purchase_attribution_outer,
+        lambda stream: runtime.purchase_attribution(stream, "leftOuter"),
     )
 
 

@@ -368,52 +368,6 @@ def test_anti_join_is_nonempty(spark, sf_dir):
     assert _Q["j_anti"](spark, sf_dir).count() > 0
 
 
-# Queries ALLOWED to contain a nested-loop join: the 1-row scalar-subquery
-# broadcasts (q11's global fraction, q22's avg balance -- a 1-row build side
-# is exactly what BNLJ is for) and the deliberate brute-force theta join,
-# whose scale twin j_theta_binned is gated to have none.
-_BNLJ_OK = {
-    "h_q11_important_stock",
-    "h_q22_dormant_customers",
-    "j_theta",
-    # Corpus-total N rides along as a 1-row broadcast cross join.
-    "t_unigram_logprob",
-    # Same idiom one order up: the 1-row corpus total meets the
-    # distinct-bigram LM table.
-    "t_bigram_logprob",
-    "t_tfidf",
-    # Same class: (n_docs x total_len) is a 1-row broadcast cross join.
-    "t_bm25",
-    # Same class: the 1-row n_min total meets the per-language counts.
-    "c_temperature_mix",
-    # Two 1-row corpus totals (nt, nr) ride broadcast cross joins into the
-    # 64-row log-ratio table.
-    "c_dsir",
-    # Two 1-row scalar aggregates (exact counts x sketches) meet in a
-    # broadcast cross join.
-    "x_theta_anchor",
-    # The 1-row merged-KLL quantile estimates ride along the exact/rank
-    # scan as a broadcast cross join.
-    "x_kll_anchor",
-    # Three 1-row scalar aggregates (total x sampled x run-diff) meet in
-    # broadcast cross joins.
-    "r_sample_bernoulli_anchor",
-    # The 1-row corpus weight total W meets the cumulative-weight rows.
-    "r_sample_pps",
-    # Same PPS core: the 1-row quality-mass total rides the cross join.
-    "c_quality_mix",
-    # The 5-literal-row query batch scores against the corpus via a
-    # broadcast nested loop (vec_id != query_id) -- the intended
-    # batch-scoring shape: every corpus row meets each of the 5 queries.
-    "v_ann_ivf_batch",
-    # 1-row boundary/stats legs ride broadcast cross joins.
-    "x_approx_topk_anchor",
-}
-# Queries ALLOWED to cross into Python row-at-a-time (pickled): the two
-# deliberate slow-path demos.
-_PICKLE_OK = {"u_py_udf", "u_py_udtf"}
-
-
 def test_contamination_broadcasts_benchmark_gram_set(spark, sf_dir):
     """c_contamination's scale contract: the (small) eval/benchmark n-gram
     set is broadcast so the train posting table -- the 100 TB side -- is
@@ -527,20 +481,6 @@ def test_range_interval_window_partitions_by_time_bucket(spark, sf_dir):
         assert "event_type" in s and "bucket" in s, s
 
 
-def test_no_query_regresses_to_cartesian_nested_loop_or_pickle(spark, sf_dir):
-    """Blanket plan audit over EVERY registered query: no cartesian
-    product anywhere; nested-loop joins and pickled Python only on the
-    explicit allowlists above. Catches a silently-degenerated plan the
-    per-operator gates don't cover."""
-    for name, fn in sorted(all_queries().items()):
-        text = plans.plan_string(fn(spark, sf_dir))
-        assert "CartesianProduct" not in text, f"{name} has a cartesian product"
-        if name not in _BNLJ_OK:
-            assert "BroadcastNestedLoop" not in text, f"{name} grew a BNLJ"
-        if name not in _PICKLE_OK:
-            assert "BatchEvalPython" not in text, f"{name} fell back to pickle"
-
-
 def test_dynamic_partition_pruning_on_versioned_table(spark, tmp_path):
     """Joining the partitioned fact to a FILTERED small dim must inject a
     dynamicpruning expression into the fact scan's PartitionFilters -- the
@@ -565,7 +505,6 @@ def test_dynamic_partition_pruning_on_versioned_table(spark, tmp_path):
     )
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan
-
 
 
 def test_null_aware_anti_join_plan_and_semantics(spark, tmp_path):

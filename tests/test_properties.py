@@ -2344,3 +2344,70 @@ def test_column_profile_matches_pandas_brute(spark):
     want["etype_nonview"] = (n, int(s.isna().sum()), int(s.nunique(dropna=True)))
     assert got == want
     assert want["etype_nonview"][1] > 0, "null path must be exercised"
+
+
+# --- the near-dup family's shared stages, on hand-built frames -----------
+# Each rule below decides rows on every leg, but the sf0.001 fixture may
+# hold no instance of it (no size tie inside a cluster, no score tie
+# between candidates, no batch doc without a match).
+
+
+def test_keep_largest_tie_keeps_lowest_doc_id(spark):
+    from delta_lake_stock_pipeline_spark.operators.dedup import _keep_largest
+
+    clusters = spark.createDataFrame(
+        [(5, 1), (3, 1), (9, 1), (7, 2), (8, 2)], "doc_id long, cluster_id long"
+    )
+    sizes = spark.createDataFrame(
+        [(5, 10), (3, 10), (9, 4), (7, 2), (8, 3)], "doc_id long, n long"
+    )
+    got = [tuple(r) for r in _keep_largest(clusters, sizes, "n").collect()]
+    assert got == [
+        (3, 1, 10, 3, 1),  # size tie 3 vs 5: the lower doc_id is kept
+        (5, 1, 10, 3, 0),
+        (7, 2, 2, 8, 0),
+        (8, 2, 3, 8, 1),
+        (9, 1, 4, 3, 0),
+    ]
+
+
+def test_best_match_tie_picks_lowest_cand_and_flags_novel(spark):
+    from delta_lake_stock_pipeline_spark.operators.dedup import _best_match
+
+    batch = spark.createDataFrame([(10,), (11,), (12,)], "new_doc long")
+    scored = spark.createDataFrame(
+        [(10, 4, 5), (10, 2, 5), (10, 1, 3), (11, 7, 9), (11, 6, 1)],
+        "new_doc long, cand_doc long, s long",
+    )
+    high = [
+        tuple(r)
+        for r in _best_match(batch, scored, (F.desc("s"),), ("s",)).collect()
+    ]
+    # score tie 4 vs 2 on doc 10: the lower cand_doc wins; doc 12 has no
+    # verified candidate, so its match columns are NULL and it is novel
+    assert high == [(10, 2, 5, 0), (11, 7, 9, 0), (12, None, None, 1)]
+    low = [tuple(r) for r in _best_match(batch, scored, ("s",), ("s",)).collect()]
+    assert low == [(10, 1, 3, 0), (11, 6, 1, 0), (12, None, None, 1)]
+
+
+def test_shared_counts_ordered_emits_each_pair_once(spark):
+    from delta_lake_stock_pipeline_spark.operators.dedup import _shared_counts
+
+    posts = spark.createDataFrame(
+        [(1, "x", 7), (1, "x", 8), (2, "x", 7), (2, "x", 8), (3, "x", 8),
+         (3, "y", 7), (4, "y", 7)],
+        "doc_id long, src string, h long",
+    )
+    on, names = ("src", "h"), ("a", "b", "n")
+    ordered = sorted(
+        tuple(r) for r in _shared_counts(posts, posts, on, names, True).collect()
+    )
+    # never (a, a) and never (b, a): each unordered pair once, a < b
+    assert ordered == [(1, 2, 2), (1, 3, 1), (2, 3, 1), (3, 4, 1)]
+    unordered = {
+        (r["a"], r["b"]): r["n"]
+        for r in _shared_counts(posts, posts, on, names, False).collect()
+    }
+    # the batch x corpus form counts every ordered pair, self-pairs too
+    assert unordered[(1, 1)] == 2 and unordered[(2, 1)] == 2
+    assert len(unordered) == 2 * len(ordered) + 4

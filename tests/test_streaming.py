@@ -297,7 +297,7 @@ def test_stream_outer_interval_join_evicts_and_emits_nulls(spark, tmp_path):
 
     stream = runtime.events_stream(spark, src)
     got = runtime.run_available_now(
-        runtime.purchase_attribution_outer(stream),
+        runtime.purchase_attribution(stream, "leftOuter"),
         str(tmp_path / "ckpt"),
         str(tmp_path / "out"),
     )
