@@ -14,7 +14,16 @@ arguments. There is no scope option; the value decides how long it lives:
 Scratch dirs a build creates through ``session.scratch_mkdtemp`` (or hands
 to ``own_dir``) belong to the artifact: they are removed if the build
 raises, and again by ``clear_all()``. Only recorded dirs strictly below
-the scratch root are ever removed -- never the root itself.
+the scratch root are ever removed -- never the root itself, Spark's
+``spark-local`` dir or pytest's ``pytest-of-*`` dirs.
+
+A killed process runs neither rule, so ``scratch_mkdtemp`` puts every dir
+in its process's owner dir ``owner-<pid>-<start>`` below the root, where
+``<start>`` is the process start time (field 22 of ``/proc/<pid>/stat``).
+A process's first ``scratch_mkdtemp`` removes every owner dir whose pid is
+gone or now names a different process (pid reuse: the start time
+differs). A live process's dirs are never removed; without ``/proc``
+nothing is.
 
 ``setup=`` names an artifact that ``bench.py`` prices as a one-time setup
 line, and ``used_by=`` lists the query keys that consume it, so the bench
@@ -25,6 +34,7 @@ from __future__ import annotations
 
 import functools
 import os
+import re
 import shutil
 import weakref
 from collections.abc import Callable
@@ -82,8 +92,46 @@ def _remove(path: str) -> None:
 
     root = os.path.realpath(scratch_root())
     real = os.path.realpath(path)
-    if real.startswith(root + os.sep):
+    if not real.startswith(root + os.sep):
+        return
+    top = real[len(root) + 1 :].split(os.sep)[0]
+    if top != "spark-local" and not top.startswith("pytest-of-"):
         shutil.rmtree(real, ignore_errors=True)
+
+
+def _start_time(pid: int) -> str | None:
+    """Start time of process ``pid`` in clock ticks after boot (field 22
+    of ``/proc/<pid>/stat``), or None when the process is gone or there is
+    no ``/proc``. The command name may hold spaces and parentheses, so the
+    fields are split after its last ``)``."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            stat = fh.read()
+    except OSError:
+        return None
+    return stat[stat.rindex(")") + 2 :].split()[19]
+
+
+_OWNER = re.compile(r"owner-(\d+)-(\d+)")
+
+
+def owner_dir() -> str:
+    """This process's owner dir below the scratch root. The call that
+    creates it first removes the owner dirs of dead processes."""
+    from .session import scratch_root
+
+    root = scratch_root()
+    pid = os.getpid()
+    start = _start_time(pid)
+    path = os.path.join(root, f"owner-{pid}-{start or 0}")
+    if not os.path.isdir(path):
+        if start is not None:  # else no /proc: liveness unknown, keep all
+            for name in os.listdir(root):
+                m = _OWNER.fullmatch(name)
+                if m and _start_time(int(m[1])) != m[2]:
+                    _remove(os.path.join(root, name))
+        os.makedirs(path, exist_ok=True)
+    return path
 
 
 def artifact(

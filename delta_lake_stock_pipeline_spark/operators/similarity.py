@@ -1,11 +1,27 @@
 """Similarity-search operators over ``embeddings`` (north-star extension:
-brute-force cosine top-k as the exact baseline, hyperplane-LSH bucketing as
-the approximate scale path, label-blocked pairwise near-dup).
+brute-force cosine top-k as the exact baseline; four approximate paths --
+hyperplane LSH, IVF, PQ and IVF-PQ; label-blocked pairwise near-dup; MMR).
+
+Every ANN query is candidate -> exact refine -> top-k, and each stage is
+written once:
+* ``_probe_clusters``: the nprobe IVF clusters nearest a query vector
+  (``v_ann_ivf``, ``v_ann_ivf_batch``, ``v_ann_ivfpq``);
+* ``_adc_rerank``: the PQ shortlist by ADC score, then the exact rerank
+  (``v_ann_pq``, ``v_ann_ivfpq``);
+* ``_top10``: the exact cosine top-10 tail of every top-k key;
+* ``_recall_anchor``: the exact top-10 left-joined to an ANN's hits, with
+  a pinned recall boolean (the IVF, PQ and IVF-PQ anchors and the IVF
+  batch).
+
+The IVF, PQ and IVF-PQ indexes are ordinary artifacts: each is built once
+per application into a ``scratch_mkdtemp`` dir, which the artifact
+facility removes when the build raises, on ``clear_all()``, or, after a
+crash, at the next process's first build.
 
 Scale design:
 * Brute-force top-k is scan + per-row expression + ``TakeOrderedAndProject``:
   no shuffle of the embedding column, only k rows reach the driver. At 100 TB
-  this is the one-query fallback; the LSH variant is the sustained-QPS path.
+  this is the one-query fallback; the ANN indexes are the sustained-QPS path.
 * All vector math is double-precision sequential ``aggregate``/``zip_with``
   (functions/vector.py) -- bit-deterministic, partitioning-independent.
 * Pairwise similarity is always blocked (here by ``label``; in production by
@@ -22,9 +38,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..artifacts import artifact, clear_all, own_dir
+from ..artifacts import artifact, clear_all
 from ..functions.vector import cosine, dot, norm
-from ..session import scratch_root
+from ..session import scratch_mkdtemp
 from ..sources.fixtures import load_table
 
 _PAIR_SIM_THRESHOLD = 0.4
@@ -82,20 +98,50 @@ def _lit_longs(vals) -> F.Column:
     return F.expr(f"array({body})")
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-10 against the vec_id=0 embedding."""
-    q = _lit_vec(_query_vector(spark, sf_dir, 0))
-    emb = load_table(spark, sf_dir, "embeddings")
+def _top10(df: DataFrame, qvec: list[float], *carry) -> DataFrame:
+    """The exact refine and top-k of every top-10 key: ``vec_id``,
+    ``label``, the ``carry`` columns and the rounded cosine of
+    ``embedding`` to ``qvec``, top 10 by (cos_sim DESC, vec_id)."""
     return (
-        emb.filter(F.col("vec_id") != 0)
-        .select(
+        df.select(
             "vec_id",
             "label",
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
+            *carry,
+            F.round(cosine(F.col("embedding"), _lit_vec(qvec)), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(10)
     )
+
+
+def _recall_anchor(
+    exact: DataFrame,
+    hits: DataFrame,
+    flag_name: str,
+    min_hits: int,
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """The recall anchor of an ANN: the exact top-10 (``vec_id``,
+    ``cos_sim``, plus the ``by`` keys) left-joined to the ANN's hits, then
+    per ``by`` group the exact cardinality, the minimum cosine and
+    ``flag_name`` = at least ``min_hits`` of the exact top-10 were hit."""
+    hit = hits.select(*by, "vec_id", F.lit(1).alias("hit"))
+    return (
+        exact.join(hit, [*by, "vec_id"], "left")
+        .groupBy(*by)
+        .agg(
+            F.count("*").cast("long").alias("n_exact_topk"),
+            F.min("cos_sim").alias("min_topk_cos"),
+            (F.coalesce(F.sum("hit"), F.lit(0)) >= min_hits).alias(flag_name),
+        )
+    )
+
+
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact brute-force cosine top-10 against the vec_id=0 embedding."""
+    qvec = _query_vector(spark, sf_dir, 0)
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _top10(emb.filter(F.col("vec_id") != 0), qvec)
 
 
 def pairwise_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,9 +162,14 @@ def pairwise_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # too few distinct key values for the partition count -- measured
     # <=10 active tasks, 2-3x skew between them), while (label, vec_id)
     # is per-row distinct and spreads uniformly. Partition count follows
-    # the session's parallelism, not a local constant; at SMJ scale the
-    # planner exchanges both sides on label itself.
-    n_spread = spark.sparkContext.defaultParallelism
+    # the session's parallelism, not a local constant, floored at the
+    # shuffle partition count so a local[1] or a small dynamic-allocation
+    # start still spreads; at SMJ scale the planner exchanges both sides
+    # on label itself.
+    n_spread = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
     a = emb.repartition(n_spread, "label", "vec_id").alias("a")
     b = emb.alias("b")
     sim = dot(F.col("a.embedding"), F.col("b.embedding")) / (
@@ -156,15 +207,7 @@ def ann_ivf_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- its candidate set prunes to 4/16 clusters vs LSH's ~25% of rows
     in this low-cosine regime."""
     exact = cosine_topk(spark, sf_dir).select("vec_id", "cos_sim")
-    ivf_hits = ann_ivf_topk(spark, sf_dir).select("vec_id", F.lit(1).alias("hit"))
-    return (
-        exact.join(ivf_hits, "vec_id", "left")
-        .agg(
-            F.count("*").cast("long").alias("n_exact_topk"),
-            F.min("cos_sim").alias("min_topk_cos"),
-            (F.coalesce(F.sum("hit"), F.lit(0)) >= 8).alias("ivf_recall10_ge8"),
-        )
-    )
+    return _recall_anchor(exact, ann_ivf_topk(spark, sf_dir), "ivf_recall10_ge8", 8)
 
 
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -357,20 +400,13 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``v_ann_lsh_anchor``."""
     qvec = _query_vector(spark, sf_dir, 0)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = _lit_vec(qvec)
     sigs = _lsh_sigs_udf()
-    return (
+    cands = (
         emb.filter(F.col("vec_id") != 0)
         .withColumn("lsh_sigs", sigs(F.col("embedding")))
         .filter(_lsh_candidate_col(F.col("lsh_sigs"), qvec))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(10)
     )
+    return _top10(cands, qvec)
 
 
 def ann_lsh_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,102 +480,16 @@ def _assign_expr(centroids: list[list[float]]) -> F.Column:
     return F.array_position(sims, F.array_max(sims)).cast("int")
 
 
-def _sweep_stale_tmps(base: str) -> None:
-    """Remove orphaned ``{base}.tmp-{pid}`` build dirs left by interrupted
-    runs (review finding: a crash between the tmp write and the atomic
-    rename leaked a full-size index copy under the system temp dir
-    forever). Decision ladder, most-certain first:
-
-    * OUR OWN pid's tmp is always swept -- the sweep runs before this
-      process starts a build, so any same-pid leftover is a failed
-      earlier attempt in THIS process (review finding: the retry would
-      otherwise hit Spark's errorifexists on its own debris forever).
-    * Other pids: swept when ``/proc/<pid>`` says dead (Linux). On
-      non-procfs platforms the pid probe would read every live builder
-      as dead, so liveness is not consulted there.
-    * A conservative 24 h age cap backstops the two unprovable cases --
-      pid reuse protecting an orphan (Linux) and the no-procfs platforms
-      -- WITHOUT racing real builds: a genuine index build that takes a
-      day is outside this engine's design envelope, while the earlier
-      1 h cap could have rmtree'd a live large-corpus build mid-write
-      (second review finding)."""
-    import glob
-    import shutil
-    import sys
-    import time
-
-    max_age_s = 24 * 3600.0
-    own_pid = str(os.getpid())
-    # Session-scoped final dirs (round-10): a crashed session cannot
-    # clear_all() its own builds, so siblings of ``base`` past the
-    # age cap are reaped here before a new build -- never ``base`` itself
-    # and never anything fresher than the cap (which no live session
-    # reaches).
-    for sib in glob.glob(os.path.join(os.path.dirname(base), "*")):
-        if sib == base or sib.startswith(f"{base}.tmp-"):
-            continue
-        try:
-            age = time.time() - os.path.getmtime(sib)
-        except OSError:
-            continue
-        # Liveness ladder for FINAL sibling dirs (r10 advice): a session
-        # alive past the age cap must not lose its index mid-query. The
-        # builder's pid rides in the dir (``builder.pid``, written before
-        # the atomic rename); on Linux a live pid vetoes the sweep. A
-        # missing marker (pre-r11 dirs) or no procfs falls back to the
-        # age cap alone, as before.
-        if sys.platform.startswith("linux"):
-            try:
-                with open(os.path.join(sib, "builder.pid")) as fh:
-                    bpid = fh.read().strip()
-                if bpid.isdigit() and os.path.exists(f"/proc/{bpid}"):
-                    continue
-            except OSError:
-                pass
-        if age > max_age_s:
-            shutil.rmtree(sib, ignore_errors=True)
-    for tmp in glob.glob(f"{base}.tmp-*"):
-        pid = tmp.rsplit("-", 1)[-1]
-        if pid == own_pid:
-            shutil.rmtree(tmp, ignore_errors=True)
-            continue
-        try:
-            age = time.time() - os.path.getmtime(tmp)
-        except OSError:
-            continue  # raced with another sweeper
-        if sys.platform.startswith("linux"):
-            dead = not (pid.isdigit() and os.path.exists(f"/proc/{pid}"))
-        else:
-            dead = False  # no procfs: only the age cap decides
-        if dead or age > max_age_s:
-            shutil.rmtree(tmp, ignore_errors=True)
-
-
-# The ANN indexes are session-scoped (round-10 optimization-round
-# contract): every bench/oracle invocation must compute its artifacts from
-# the parquet inputs, so the on-disk index dirs are keyed by applicationId
-# (fresh per session), owned by their artifact and reaped by clear_all()
-# -- nothing persists across runs. A crashed session's leftovers are
-# reaped by the 24 h age cap in ``_sweep_stale_tmps``.
-
-
 @artifact
 def _read_index(spark: SparkSession, path: str) -> DataFrame:
     """Scan handle of an index dir. Metadata reuse only, the
     fixtures.load_table rationale: every ``spark.read.parquet`` costs
     ~150-300 ms of single-threaded driver footer/listing work, and each
     ANN query key re-paid it per index read. The scan stays lazy --
-    execution reads the index files every time; index dirs are immutable
-    once atomically renamed into place."""
+    execution reads the index files every time; an index dir is complete
+    and immutable once its builder returns (a build that raises leaves no
+    memoized path behind)."""
     return spark.read.parquet(path)
-
-
-def _mark_builder(tmp: str) -> None:
-    """Record the builder's pid inside the (not-yet-renamed) index dir so
-    ``_sweep_stale_tmps``'s sibling sweep can veto deletion while the
-    builder session is still alive (r10 advice)."""
-    with open(os.path.join(tmp, "builder.pid"), "w") as fh:
-        fh.write(str(os.getpid()))
 
 
 @artifact(
@@ -556,81 +506,66 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[list[float]]
     centroid metadata, like Delta log reads -- never data-scale). Init =
     first K vectors by vec_id, so the whole pipeline is deterministic.
 
-    The index is built on DISK once per SESSION (applicationId in the
-    dir tag) and consumed by every ann_ivf query of that session; at
-    ingest time a real deployment would persist it per corpus, but the
-    bench contract requires every run to compute its artifacts from the
-    parquet inputs, so cross-run reuse is deliberately off (round-10).
-    Writes are atomic (build in a tmp dir, rename into place) so
-    concurrent builders can't observe a half-index.
+    The index is built on DISK once per application and consumed by
+    every ann_ivf query of it; at ingest time a real deployment would
+    persist it per corpus, but the bench contract requires every run to
+    compute its artifacts from the parquet inputs, so cross-run reuse is
+    deliberately off. The centroids are returned as built.
     """
-    import json
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    tag = hashlib.sha1(
-        f"{spark.sparkContext.applicationId}:{src}"
-        f":{_IVF_K}:{_IVF_TRAIN_ITERS}".encode()
-    ).hexdigest()[:16]
-    base = os.path.join(scratch_root(), "spark_graft_ivf", tag)
-    idx = os.path.join(base, "index")
-    meta = os.path.join(base, "centroids.json")
-
-    if not (os.path.exists(os.path.join(idx, "_SUCCESS")) and os.path.exists(meta)):
-        _sweep_stale_tmps(base)
-        emb = load_table(spark, sf_dir, "embeddings")
-        centroids = [
-            list(r["embedding"])
-            for r in emb.filter(F.col("vec_id") < _IVF_K)
-            .select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .collect()
-        ]
-        for _ in range(_IVF_TRAIN_ITERS):
-            means = (
-                emb.withColumn("cluster", _assign_expr(centroids))
-                .select("cluster", F.posexplode("embedding").alias("pos", "val"))
-                .groupBy("cluster", "pos")
-                .agg(
-                    (
-                        F.sum(
-                            F.col("val").cast("double").cast("decimal(28,12)")
-                        ).cast("double")
-                        / F.count("val")
-                    ).alias("m")
-                )
-                .collect()
-            )
-            new = [list(c) for c in centroids]  # empty clusters keep centroid
-            for r in means:
-                new[r["cluster"] - 1][r["pos"]] = float(r["m"])
-            centroids = new
-
-        tmp = f"{base}.tmp-{os.getpid()}"
-        (
-            # Hash-distribute onto the cluster id before the partitionBy
-            # write (guide §6, the write_partitioned rationale): one file
-            # per inverted list instead of (scan tasks x K) fragments --
-            # the probed read then opens nprobe files, not nprobe x tasks.
+    emb = load_table(spark, sf_dir, "embeddings")
+    centroids = [
+        list(r["embedding"])
+        for r in emb.filter(F.col("vec_id") < _IVF_K)
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .collect()
+    ]
+    for _ in range(_IVF_TRAIN_ITERS):
+        means = (
             emb.withColumn("cluster", _assign_expr(centroids))
-            .repartition(F.col("cluster"))
-            .write.partitionBy("cluster")
-            .parquet(os.path.join(tmp, "index"))
+            .select("cluster", F.posexplode("embedding").alias("pos", "val"))
+            .groupBy("cluster", "pos")
+            .agg(
+                (
+                    F.sum(
+                        F.col("val").cast("double").cast("decimal(28,12)")
+                    ).cast("double")
+                    / F.count("val")
+                ).alias("m")
+            )
+            .collect()
         )
-        with open(os.path.join(tmp, "centroids.json"), "w") as fh:
-            json.dump(centroids, fh)
-        _mark_builder(tmp)
-        os.makedirs(os.path.dirname(base), exist_ok=True)
-        try:
-            os.rename(tmp, base)
-        except OSError:  # a concurrent builder won the rename; use theirs
-            import shutil
+        new = [list(c) for c in centroids]  # empty clusters keep centroid
+        for r in means:
+            new[r["cluster"] - 1][r["pos"]] = float(r["m"])
+        centroids = new
 
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    with open(meta) as fh:
-        centroids = json.load(fh)
-    own_dir(base)
+    idx = os.path.join(scratch_mkdtemp(prefix="spark_graft_ivf_"), "index")
+    (
+        # Hash-distribute onto the cluster id before the partitionBy
+        # write (guide §6, the write_partitioned rationale): one file
+        # per inverted list instead of (scan tasks x K) fragments --
+        # the probed read then opens nprobe files, not nprobe x tasks.
+        emb.withColumn("cluster", _assign_expr(centroids))
+        .repartition(F.col("cluster"))
+        .write.partitionBy("cluster")
+        .parquet(idx)
+    )
     return idx, centroids
+
+
+def _probe_clusters(qvec: list[float], centroids: list[list[float]]) -> list[int]:
+    """The 1-based ids of the ``_IVF_NPROBE`` centroids nearest ``qvec``,
+    nearest first (ties to the lower id), by the driver-side cosine that
+    matches the JVM assignment bit for bit."""
+    qsims = [_py_cosine(qvec, c) for c in centroids]
+    order = sorted(range(_IVF_K), key=lambda i: (-qsims[i], i))
+    return [i + 1 for i in order[:_IVF_NPROBE]]
+
+
+def _cluster() -> F.Column:
+    """The index's partition column, output as int ``cluster``."""
+    return F.col("cluster").cast("int").alias("cluster")
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -647,26 +582,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path, centroids = _ivf_index(spark, sf_dir)
     qvec = _query_vector(spark, sf_dir, 0)
-
-    # Probe set: nprobe nearest centroids, same arithmetic driver-side.
-    qsims = [_py_cosine(qvec, c) for c in centroids]
-    probe = [
-        i + 1 for i in sorted(range(_IVF_K), key=lambda i: (-qsims[i], i))[:_IVF_NPROBE]
-    ]
-
-    q = _lit_vec(qvec)
-    return (
-        _read_index(spark, path)
-        .filter(F.col("cluster").isin(probe) & (F.col("vec_id") != 0))
-        .select(
-            "vec_id",
-            "label",
-            F.col("cluster").cast("int").alias("cluster"),
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(10)
+    probe = _probe_clusters(qvec, centroids)
+    cands = _read_index(spark, path).filter(
+        F.col("cluster").isin(probe) & (F.col("vec_id") != 0)
     )
+    return _top10(cands, qvec, _cluster())
 
 
 def _query_batch_df(spark: SparkSession, sf_dir: str, n_queries: int):
@@ -714,11 +634,9 @@ def ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, centroids = _ivf_index(spark, sf_dir)
     qdf, qlist = _query_batch_df(spark, sf_dir, 5)
 
-    pairs = []
-    for qid, qvec in qlist:
-        qsims = [_py_cosine(qvec, c) for c in centroids]
-        probe = sorted(range(_IVF_K), key=lambda i: (-qsims[i], i))[:_IVF_NPROBE]
-        pairs.extend((qid, i + 1) for i in probe)
+    pairs = [
+        (qid, c) for qid, qvec in qlist for c in _probe_clusters(qvec, centroids)
+    ]
     union_clusters = sorted({cl for _, cl in pairs})
     probe_df = (
         spark.range(1)
@@ -741,7 +659,7 @@ def ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_ids = (
         _read_index(spark, path)
         .filter(F.col("cluster").isin(union_clusters))
-        .select("vec_id", F.col("cluster").cast("int").alias("cluster"))
+        .select("vec_id", _cluster())
         .join(F.broadcast(probe_df), "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
@@ -763,18 +681,9 @@ def ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = scored.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= 10
     )
-    return (
-        exact.join(
-            cand_ids.withColumn("hit", F.lit(1)), ["query_id", "vec_id"], "left"
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("*").cast("long").alias("n_exact_topk"),
-            F.min("cos_sim").alias("min_topk_cos"),
-            (F.coalesce(F.sum("hit"), F.lit(0)) >= 7).alias("recall10_ge7"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_anchor(
+        exact, cand_ids, "recall10_ge7", 7, by=("query_id",)
+    ).orderBy("query_id")
 
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,45 +933,43 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, "np.ndarray"]:
     vs 256 for the float32 row, the 64x-compressed candidate table that ANN
     serving actually scans. Encoding runs distributed through the Arrow
     GEMM kernel; like ``_ivf_index`` the artifact is built once per
-    SESSION (ingest cost paid once per session, not once per query; no
-    cross-run reuse per the bench contract) with atomic tmp-dir+rename
-    builds."""
-    import json
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    tag = hashlib.sha1(
-        f"{spark.sparkContext.applicationId}:{src}"
-        f":{_PQ_M}:{_PQ_K}:{_PQ_TRAIN_ITERS}:{_PQ_SAMPLE}".encode()
-    ).hexdigest()[:16]
-    base = os.path.join(scratch_root(), "spark_graft_pq", tag)
-    idx = os.path.join(base, "codes")
-    meta = os.path.join(base, "codebooks.json")
-
-    if not (os.path.exists(os.path.join(idx, "_SUCCESS")) and os.path.exists(meta)):
-        _sweep_stale_tmps(base)
-        books = _pq_codebooks(spark, sf_dir)
-        codes = _pq_codes_udf(books)
-        tmp = f"{base}.tmp-{os.getpid()}"
-        (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", "label", codes(F.col("embedding")).alias("pq_codes"))
-            .write.parquet(os.path.join(tmp, "codes"))
-        )
-        with open(os.path.join(tmp, "codebooks.json"), "w") as fh:
-            json.dump(books.tolist(), fh)
-        _mark_builder(tmp)
-        os.makedirs(os.path.dirname(base), exist_ok=True)
-        try:
-            os.rename(tmp, base)
-        except OSError:  # a concurrent builder won the rename; use theirs
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    with open(meta) as fh:
-        books = np.asarray(json.load(fh), dtype=np.float64)
-    own_dir(base)
+    application (ingest cost paid once per session, not once per query;
+    no cross-run reuse per the bench contract)."""
+    books = _pq_codebooks(spark, sf_dir)
+    codes = _pq_codes_udf(books)
+    idx = os.path.join(scratch_mkdtemp(prefix="spark_graft_pq_"), "codes")
+    (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "label", codes(F.col("embedding")).alias("pq_codes"))
+        .write.parquet(idx)
+    )
     return idx, books
+
+
+def _adc_rerank(
+    spark: SparkSession,
+    sf_dir: str,
+    codes: DataFrame,
+    books: "np.ndarray",
+    qvec: list[float],
+    carry,
+) -> DataFrame:
+    """The PQ refine: ADC-score the ``codes`` rows, keep the top
+    ``_PQ_SHORTLIST`` (TakeOrderedAndProject), then exact-rerank that
+    shortlist through a broadcast join back to the embeddings table.
+    The ``carry`` column rides from the shortlist into the result; it is
+    selected once per stage, so it must be idempotent (a name, or
+    ``_cluster()``)."""
+    shortlist = (
+        codes.withColumn(
+            "adc_ip", F.round(_pq_adc_col(F.col("pq_codes"), books, qvec), 6)
+        )
+        .orderBy(F.desc("adc_ip"), "vec_id")
+        .limit(_PQ_SHORTLIST)
+        .select("vec_id", "label", carry)
+    )
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _top10(emb.join(F.broadcast(shortlist), "vec_id"), qvec, carry)
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1087,29 +994,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle)."""
     path, books = _pq_index(spark, sf_dir)
     qvec = _query_vector(spark, sf_dir, 0)
-    shortlist = (
-        _read_index(spark, path)
-        .filter(F.col("vec_id") != 0)
-        .withColumn(
-            "adc_ip", F.round(_pq_adc_col(F.col("pq_codes"), books, qvec), 6)
-        )
-        .orderBy(F.desc("adc_ip"), "vec_id")
-        .limit(_PQ_SHORTLIST)
-        .select("vec_id", "label", "adc_ip")
-    )
-    q = _lit_vec(qvec)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return (
-        emb.join(F.broadcast(shortlist), "vec_id")
-        .select(
-            "vec_id",
-            "label",
-            "adc_ip",
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(10)
-    )
+    codes = _read_index(spark, path).filter(F.col("vec_id") != 0)
+    return _adc_rerank(spark, sf_dir, codes, books, qvec, "adc_ip")
 
 
 @artifact(setup="ann_ivfpq_index", used_by=("v_ann_ivfpq", "v_ann_ivfpq_anchor"))
@@ -1119,44 +1005,22 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     cluster id, i.e. inverted lists whose entries are 4-byte codes. A
     query prunes to nprobe partition directories AND reads 64x-compressed
     rows -- the two savings multiply. Reuses the trained IVF centroids and
-    PQ codebooks; session-scoped and atomically built like its parents."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    tag = hashlib.sha1(
-        f"{spark.sparkContext.applicationId}:{src}"
-        f":{_IVF_K}:{_IVF_TRAIN_ITERS}:{_PQ_M}:{_PQ_K}"
-        f":{_PQ_TRAIN_ITERS}:{_PQ_SAMPLE}".encode()
-    ).hexdigest()[:16]
-    base = os.path.join(scratch_root(), "spark_graft_ivfpq", tag)
-    idx = os.path.join(base, "codes")
-
-    if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-        _sweep_stale_tmps(base)
-        _, centroids = _ivf_index(spark, sf_dir)
-        books = _pq_codebooks(spark, sf_dir)
-        codes = _pq_codes_udf(books)
-        tmp = f"{base}.tmp-{os.getpid()}"
-        (
-            load_table(spark, sf_dir, "embeddings")
-            .select(
-                "vec_id",
-                "label",
-                codes(F.col("embedding")).alias("pq_codes"),
-                _assign_expr(centroids).alias("cluster"),
-            )
-            .repartition(F.col("cluster"))  # one file per inverted list
-            .write.partitionBy("cluster")
-            .parquet(os.path.join(tmp, "codes"))
+    PQ codebooks; built once per application like its parents."""
+    _, centroids = _ivf_index(spark, sf_dir)
+    codes = _pq_codes_udf(_pq_codebooks(spark, sf_dir))
+    idx = os.path.join(scratch_mkdtemp(prefix="spark_graft_ivfpq_"), "codes")
+    (
+        load_table(spark, sf_dir, "embeddings")
+        .select(
+            "vec_id",
+            "label",
+            codes(F.col("embedding")).alias("pq_codes"),
+            _assign_expr(centroids).alias("cluster"),
         )
-        _mark_builder(tmp)
-        os.makedirs(os.path.dirname(base), exist_ok=True)
-        try:
-            os.rename(tmp, base)
-        except OSError:  # a concurrent builder won the rename; use theirs
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    own_dir(base)
+        .repartition(F.col("cluster"))  # one file per inverted list
+        .write.partitionBy("cluster")
+        .parquet(idx)
+    )
     return idx
 
 
@@ -1175,33 +1039,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, centroids = _ivf_index(spark, sf_dir)
     books = _pq_codebooks(spark, sf_dir)
     qvec = _query_vector(spark, sf_dir, 0)
-    qsims = [_py_cosine(qvec, c) for c in centroids]
-    probe = [
-        i + 1 for i in sorted(range(_IVF_K), key=lambda i: (-qsims[i], i))[:_IVF_NPROBE]
-    ]
-    shortlist = (
-        _read_index(spark, path)
-        .filter(F.col("cluster").isin(probe) & (F.col("vec_id") != 0))
-        .withColumn(
-            "adc_ip", F.round(_pq_adc_col(F.col("pq_codes"), books, qvec), 6)
-        )
-        .orderBy(F.desc("adc_ip"), "vec_id")
-        .limit(_PQ_SHORTLIST)
-        .select("vec_id", "label", F.col("cluster").cast("int").alias("cluster"))
+    probe = _probe_clusters(qvec, centroids)
+    codes = _read_index(spark, path).filter(
+        F.col("cluster").isin(probe) & (F.col("vec_id") != 0)
     )
-    q = _lit_vec(qvec)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return (
-        emb.join(F.broadcast(shortlist), "vec_id")
-        .select(
-            "vec_id",
-            "label",
-            "cluster",
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(10)
-    )
+    return _adc_rerank(spark, sf_dir, codes, books, qvec, _cluster())
 
 
 def ann_ivfpq_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,12 +1053,8 @@ def ann_ivfpq_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF's cluster recall and PQ's code resolution, both deterministic.
     Measured recall@10: 9 at each of sf0.001/0.01/0.1 (gated in tests)."""
     exact = cosine_topk(spark, sf_dir).select("vec_id", "cos_sim")
-    hits = ann_ivfpq_topk(spark, sf_dir).select("vec_id", F.lit(1).alias("hit"))
-    return exact.join(hits, "vec_id", "left").agg(
-        F.count("*").cast("long").alias("n_exact_topk"),
-        F.min("cos_sim").alias("min_topk_cos"),
-        (F.coalesce(F.sum("hit"), F.lit(0)) >= 8).alias("ivfpq_recall10_ge8"),
-    )
+    hits = ann_ivfpq_topk(spark, sf_dir)
+    return _recall_anchor(exact, hits, "ivfpq_recall10_ge8", 8)
 
 
 def ann_pq_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1228,12 +1066,7 @@ def ann_pq_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilistic-flaky. Measured recall@10: 10 at sf0.001, 10 at sf0.01,
     9 at sf0.1 (gated in tests)."""
     exact = cosine_topk(spark, sf_dir).select("vec_id", "cos_sim")
-    pq_hits = ann_pq_topk(spark, sf_dir).select("vec_id", F.lit(1).alias("hit"))
-    return exact.join(pq_hits, "vec_id", "left").agg(
-        F.count("*").cast("long").alias("n_exact_topk"),
-        F.min("cos_sim").alias("min_topk_cos"),
-        (F.coalesce(F.sum("hit"), F.lit(0)) >= 8).alias("pq_recall10_ge8"),
-    )
+    return _recall_anchor(exact, ann_pq_topk(spark, sf_dir), "pq_recall10_ge8", 8)
 
 
 # MMR diversity selection: greedy maximal-marginal-relevance over a
@@ -1263,7 +1096,13 @@ def mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist greedily on the driver (100 x 64 ints -- the same
     bounded-driver-parameter class as the k-means centroids); the
     O(K * S * dim) rerank is independent of corpus size, so at 100 TB
-    only stage 1 grows."""
+    only stage 1 grows.
+
+    Schema: ``step`` INT and ``vec_id``, ``rel``, ``maxsim``, ``score``
+    BIGINT, all NOT NULL, on both return paths (pinned in tests). Every
+    value is a computed integer, so non-nullable is the true contract; an
+    earlier ``createDataFrame`` form declared the same fields nullable. A
+    consumer that needs that form casts with ``df.to(schema)``."""
     emb = load_table(spark, sf_dir, "embeddings")
     quant = emb.select(
         "vec_id", _quantize_int8(F.col("embedding")).alias("q")
@@ -1469,6 +1308,25 @@ _q_cos = _DUCK_COS.format(
 _pair_cos = _DUCK_COS.format(a="a.embedding", b="b.embedding")
 _knn_cos = _DUCK_COS.format(a="q.embedding", b="c.embedding")
 
+
+def _anchor_oracle(*flags: str, count: str = "CAST(COUNT(*) AS BIGINT)") -> str:
+    """Oracle of a single-query recall anchor: the exact top-10 recomputed
+    from first principles (its cardinality and minimum cosine), and each
+    ANN guarantee in ``flags`` pinned as a literal TRUE -- the hyperplanes,
+    centroids and codebooks are deterministic and the data is fixed."""
+    pinned = ",\n               ".join(f"TRUE AS {f}" for f in flags)
+    return f"""
+        WITH exact AS (
+            SELECT e.vec_id, ROUND({_q_cos}, 6) AS cos_sim
+            FROM embeddings e WHERE e.vec_id <> 0
+            ORDER BY cos_sim DESC, e.vec_id LIMIT 10
+        )
+        SELECT {count} AS n_exact_topk,
+               MIN(cos_sim) AS min_topk_cos,
+               {pinned}
+        FROM exact
+    """
+
 ORACLES = {
     "v_label_centroids": """
         SELECT label, pos - 1 AS dim,
@@ -1550,58 +1408,11 @@ ORACLES = {
         FROM exact WHERE rn <= 10
         GROUP BY query_id ORDER BY query_id
     """,
-    "v_ann_ivf_anchor": f"""
-        WITH exact AS (
-            SELECT e.vec_id, ROUND({_q_cos}, 6) AS cos_sim
-            FROM embeddings e WHERE e.vec_id <> 0
-            ORDER BY cos_sim DESC, e.vec_id LIMIT 10
-        )
-        SELECT COUNT(*) AS n_exact_topk,
-               MIN(cos_sim) AS min_topk_cos,
-               TRUE AS ivf_recall10_ge8
-        FROM exact
-    """,
-    # Same shape as the IVF anchor: exact side recomputed; IVF-PQ recall
-    # boolean pinned TRUE (both quantizers deterministic).
-    "v_ann_ivfpq_anchor": f"""
-        WITH exact AS (
-            SELECT e.vec_id, ROUND({_q_cos}, 6) AS cos_sim
-            FROM embeddings e WHERE e.vec_id <> 0
-            ORDER BY cos_sim DESC, e.vec_id LIMIT 10
-        )
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_topk,
-               MIN(cos_sim) AS min_topk_cos,
-               TRUE AS ivfpq_recall10_ge8
-        FROM exact
-    """,
-    # Same shape as the IVF anchor: exact side recomputed; PQ recall
-    # boolean pinned TRUE (deterministic float64 training/encoding).
-    "v_ann_pq_anchor": f"""
-        WITH exact AS (
-            SELECT e.vec_id, ROUND({_q_cos}, 6) AS cos_sim
-            FROM embeddings e WHERE e.vec_id <> 0
-            ORDER BY cos_sim DESC, e.vec_id LIMIT 10
-        )
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_topk,
-               MIN(cos_sim) AS min_topk_cos,
-               TRUE AS pq_recall10_ge8
-        FROM exact
-    """,
-    # Same shape as the IVF anchor: the exact side is recomputed from
-    # first principles; the LSH recall and candidate-pruning guarantees
-    # are pinned as literal TRUEs (deterministic hyperplanes, fixed data).
-    "v_ann_lsh_anchor": f"""
-        WITH exact AS (
-            SELECT e.vec_id, ROUND({_q_cos}, 6) AS cos_sim
-            FROM embeddings e WHERE e.vec_id <> 0
-            ORDER BY cos_sim DESC, e.vec_id LIMIT 10
-        )
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_topk,
-               MIN(cos_sim) AS min_topk_cos,
-               TRUE AS lsh_recall10_ge5,
-               TRUE AS lsh_cand_frac_le35
-        FROM exact
-    """,
+    # DuckDB's COUNT(*) is already BIGINT; the IVF string never cast it.
+    "v_ann_ivf_anchor": _anchor_oracle("ivf_recall10_ge8", count="COUNT(*)"),
+    "v_ann_ivfpq_anchor": _anchor_oracle("ivfpq_recall10_ge8"),
+    "v_ann_pq_anchor": _anchor_oracle("pq_recall10_ge8"),
+    "v_ann_lsh_anchor": _anchor_oracle("lsh_recall10_ge5", "lsh_cand_frac_le35"),
     # Quantization recomputed from first principles: same per-vector
     # max|x|/127 scale, same half-away-from-zero round, exact integer
     # dot/norm sums, float only in the final normalize.

@@ -13,6 +13,7 @@ from .introspect import (
     assert_pushed_filters,
     assert_read_schema_only,
     assert_top_k,
+    audit_plan,
     plan_features,
     plan_string,
 )
@@ -23,6 +24,7 @@ __all__ = [
     "assert_pushed_filters",
     "assert_read_schema_only",
     "assert_top_k",
+    "audit_plan",
     "plan_features",
     "plan_string",
 ]

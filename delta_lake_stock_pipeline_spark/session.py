@@ -58,10 +58,7 @@ def get_spark(
     # tempfile.mkdtemp's default -- under the repo instead. Harmless
     # elsewhere; a real deployment overrides with SPARK_LOCAL_DIRS on
     # fast local disks.
-    scratch = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
-    )
-    os.makedirs(scratch, exist_ok=True)
+    scratch = scratch_root()
     if "TMPDIR" not in os.environ:
         import tempfile
 
@@ -121,12 +118,13 @@ def get_spark(
 
 
 def scratch_root() -> str:
-    """The repo's ``.tmp/`` scratch root (created on demand). Every
-    engine scratch surface -- mkdtemp dirs AND the persistent ANN index
-    caches -- lives here rather than /tmp, which this sandbox's cleaner
-    deletes MID-RUN (see get_spark). Bonus for the index caches: the
-    repo root persists across processes, so the one-time builds survive
-    where a wiped /tmp would force a rebuild."""
+    """The repo's ``.tmp/`` scratch root (created on demand). Every engine
+    scratch surface lives here rather than /tmp, which a host cleaner may
+    wipe MID-RUN (see get_spark): Spark's ``spark-local`` dir, the TMPDIR
+    default, and each process's owner dir of artifact scratch
+    (``scratch_mkdtemp``). Nothing here is meant to outlive the
+    application that made it: artifacts are rebuilt per application from
+    the parquet inputs."""
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
     )
@@ -135,19 +133,20 @@ def scratch_root() -> str:
 
 
 def scratch_mkdtemp(prefix: str) -> str:
-    """``tempfile.mkdtemp`` pinned under ``scratch_root()``. The
-    get_spark TMPDIR default covers sessions built HERE, but the
-    external driver builds its own vanilla session, under which a bare
-    mkdtemp would land in /tmp -- the directory this sandbox's cleaner
-    deletes MID-RUN (see get_spark). Every engine scratch dir (format
-    round-trips, lifecycle tables, streaming replays) routes through
-    this instead. A dir made inside an artifact build belongs to that
-    artifact (``artifacts.own_dir``)."""
+    """``tempfile.mkdtemp`` pinned under this process's owner dir below
+    ``scratch_root()``. The get_spark TMPDIR default covers sessions built
+    HERE, but the external driver builds its own vanilla session, under
+    which a bare mkdtemp would land in /tmp (see scratch_root). Every
+    engine scratch dir (format round-trips, lifecycle tables, streaming
+    replays, ANN indexes) routes through this instead. A dir made inside
+    an artifact build belongs to that artifact (``artifacts.own_dir``);
+    the first call in a process removes the owner dirs of dead processes
+    (``artifacts.owner_dir``)."""
     import tempfile
 
-    from .artifacts import own_dir
+    from .artifacts import own_dir, owner_dir
 
-    path = tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+    path = tempfile.mkdtemp(prefix=prefix, dir=owner_dir())
     own_dir(path)
     return path
 

@@ -5,6 +5,8 @@ artifacts ``bench.py`` prices."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import weakref
 from types import SimpleNamespace
 
@@ -119,26 +121,101 @@ def test_nested_build_keeps_inner_dirs_when_outer_fails(fake_root):
     with pytest.raises(RuntimeError):
         outer(_FakeSession(), "x")
     kept = inner(_FakeSession(), "x")
-    assert os.listdir(fake_root) == [os.path.basename(kept)]
+    owner = artifacts.owner_dir()
+    assert os.listdir(fake_root) == [os.path.basename(owner)]
+    assert os.listdir(owner) == [os.path.basename(kept)]
     clear_all()
-    assert os.listdir(fake_root) == []
+    assert os.listdir(owner) == []
 
 
 def test_clear_all_removes_only_recorded_dirs_below_the_root(fake_root):
     """The round-10 incident: a cache entry whose scratch dir was the
     shared root itself made teardown delete the whole root."""
     stranger = session.scratch_mkdtemp(prefix="stranger_")  # no build: unowned
+    spark_local = os.path.join(fake_root, "spark-local")
+    os.makedirs(spark_local)
 
     @artifact
     def greedy(spark, sf_dir):
         own_dir(fake_root)
         own_dir(os.path.dirname(fake_root))
+        own_dir(spark_local)
         return session.scratch_mkdtemp(prefix="owned_")
 
     owned = greedy(_FakeSession(), "x")
     clear_all()
     assert not os.path.exists(owned)
     assert os.path.isdir(fake_root) and os.path.isdir(stranger)
+    assert os.path.isdir(spark_local)
+
+
+def _owner_name(pid, start) -> str:
+    return f"owner-{pid}-{start}"
+
+
+def _dead_pid() -> int:
+    proc = subprocess.Popen(["true"])
+    proc.wait(timeout=30)
+    return proc.pid
+
+
+def test_first_scratch_dir_sweeps_dead_owner(fake_root):
+    """A killed process's scratch (no raise, no clear_all) goes at the
+    next process's first scratch_mkdtemp."""
+    dead = os.path.join(fake_root, _owner_name(_dead_pid(), 1), "spark_graft_ivf_x")
+    os.makedirs(dead)
+    session.scratch_mkdtemp(prefix="first_")
+    assert not os.path.exists(os.path.dirname(dead))
+
+
+def test_sweep_without_proc_removes_nothing(fake_root, monkeypatch):
+    """Without /proc no owner's liveness can be known: keep every dir."""
+    monkeypatch.setattr(artifacts, "_start_time", lambda pid: None)
+    dead = os.path.join(fake_root, _owner_name(_dead_pid(), 1))
+    os.makedirs(dead)
+    session.scratch_mkdtemp(prefix="first_")
+    assert os.path.isdir(dead)
+
+
+def test_sweep_removes_owner_of_reused_pid(fake_root):
+    """A live pid whose start time differs from the recorded one is a
+    reused pid: the dir's owner is dead, so the pid alone cannot veto."""
+    start = artifacts._start_time(os.getpid())
+    reused = os.path.join(fake_root, _owner_name(os.getpid(), int(start) - 1))
+    os.makedirs(os.path.join(reused, "spark_graft_pq_x"))
+    session.scratch_mkdtemp(prefix="first_")
+    assert not os.path.exists(reused)
+
+
+def test_sweep_keeps_live_owners_and_non_owner_dirs(fake_root):
+    """Another process's first scratch dir sweeps the same root: our
+    owner dir, a third live process's owner dir and every non-owner
+    sibling (Spark's and pytest's dirs among them) survive it."""
+    mine = session.scratch_mkdtemp(prefix="mine_")
+    siblings = ["spark-local", "pytest-of-root", "spark_tile_files_x", "owner-x"]
+    for name in siblings:
+        os.makedirs(os.path.join(fake_root, name))
+    other = subprocess.Popen(["sleep", "30"])
+    try:
+        live = os.path.join(
+            fake_root, _owner_name(other.pid, artifacts._start_time(other.pid))
+        )
+        os.makedirs(live)
+        sweeper = (
+            "import sys; from delta_lake_stock_pipeline_spark import session; "
+            "session.scratch_root = lambda: sys.argv[1]; "
+            "session.scratch_mkdtemp(prefix='sweeper_')"
+        )
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(artifacts.__file__)))
+        subprocess.run(
+            [sys.executable, "-c", sweeper, fake_root], cwd=repo, check=True, timeout=120
+        )
+        assert os.path.isdir(mine) and os.path.isdir(live)
+        assert all(os.path.isdir(os.path.join(fake_root, n)) for n in siblings)
+        assert len(os.listdir(fake_root)) == len(siblings) + 3  # + the sweeper's
+    finally:
+        other.kill()
+        other.wait(timeout=30)
 
 
 def test_priced_artifacts_declare_registry_consumers():

@@ -146,6 +146,22 @@ def test_fuzzy_and_pairwise_blocked_joins_stay_jvm_and_parallel(spark, sf_dir):
         )
 
 
+def test_pairwise_spread_floors_at_shuffle_partitions(spark, sf_dir):
+    """The probe-side spread of v_pairwise_neardup never falls below
+    ``spark.sql.shuffle.partitions``, so a narrow ``defaultParallelism``
+    (local[1], a dynamic-allocation start) cannot funnel the block join
+    into one task. The child's count is set above the parallelism."""
+    n = 2 * spark.sparkContext.defaultParallelism
+    child = spark.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", str(n))
+    plan = _Q["v_pairwise_neardup"](child, sf_dir)._jdf.queryExecution()
+    spreads = re.findall(
+        r"RepartitionByExpression \[label#\d+, vec_id#\d+L?\], (\d+)",
+        plan.optimizedPlan().toString(),
+    )
+    assert spreads == [str(n)]
+
+
 def test_levenshtein_single_eval_in_residual(spark, sf_dir):
     """The banded-threshold levenshtein must appear exactly once in the
     join residual (the two-sided `0 <= d <= 10` form evaluates the DP

@@ -1966,6 +1966,26 @@ def test_mmr_greedy_matches_serial(vecs, qv):
     assert mmr_greedy(cands) == _brute_mmr(cands, MMR_K)
 
 
+def test_mmr_select_schema_is_pinned(spark, sf_dir, monkeypatch):
+    """v_mmr_select's full StructType -- names, types and nullability --
+    on both return paths: the greedy picks, and no picks (the empty
+    corpus, reached here by stubbing the greedy)."""
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from delta_lake_stock_pipeline_spark.operators import similarity
+
+    pinned = StructType(
+        [StructField("step", IntegerType(), False)]
+        + [
+            StructField(c, LongType(), False)
+            for c in ("vec_id", "rel", "maxsim", "score")
+        ]
+    )
+    assert similarity.mmr_select(spark, sf_dir).schema == pinned
+    monkeypatch.setattr(similarity, "mmr_greedy", lambda cands: [])
+    assert similarity.mmr_select(spark, sf_dir).schema == pinned
+
+
 # --- exact repeated-substring dedup (d_substring_dedup core) -----------------
 # The oracle pins the full gram pipeline; this pins the span-merge core on
 # random token streams with a tiny vocabulary (so duplicated grams are

@@ -14,11 +14,14 @@ runs them all up front):
 2. **Vanilla-session parity** -- all oracled keys compared against DuckDB
    at sf0.001 AND sf0.01 under a VANILLA SparkSession (the driver does not
    apply session.py's configs, so any conf the engine needs must be set at
-   runtime inside the queries themselves).
+   runtime inside the queries themselves). Each frame first passes the
+   blanket plan audit (``plans.audit_plan``: no CartesianProduct, BNLJ and
+   pickle only on their allowlists).
 3. **Rows-only keys** -- non-SQL-expressible keys still must run and
-   return >= 0 rows with a stable schema at sf0.01.
-4. **Plan blanket audit** -- pytest tests/test_plans.py (no
-   CartesianProduct, BNLJ/pickle allowlists, pushdown/broadcast gates).
+   return >= 0 rows with a stable schema at sf0.01, after the same plan
+   audit.
+4. **Per-operator plan gates** -- pytest tests/test_plans.py (pushdown,
+   pruning, broadcast, top-k and spread gates per operator class).
 
 Set SPARK_GRAFT_PREDRIVER_STAGES=1,2 (comma list) to run a subset.
 """
@@ -94,6 +97,7 @@ def _vanilla_spark():
 
 def stage2_vanilla_parity(spark) -> list[str]:
     from __spark_entry__ import oracle_sql, queries
+    from delta_lake_stock_pipeline_spark.plans import audit_plan
     from delta_lake_stock_pipeline_spark.testing import compare, duckdb_connection
 
     q, o = queries(), oracle_sql()
@@ -105,7 +109,9 @@ def stage2_vanilla_parity(spark) -> list[str]:
             if key not in o:
                 continue
             try:
-                res = compare(key, q[key](spark, sf), con, o[key])
+                df = q[key](spark, sf)
+                audit_plan(key, df)
+                res = compare(key, df, con, o[key])
                 if not res.ok:
                     failures.append(f"{key} @ {os.path.basename(sf)}: {res.detail}")
             except Exception as exc:  # noqa: BLE001
@@ -121,12 +127,14 @@ def stage2_vanilla_parity(spark) -> list[str]:
 
 def stage3_rows_only(spark) -> list[str]:
     from __spark_entry__ import oracle_sql, queries
+    from delta_lake_stock_pipeline_spark.plans import audit_plan
 
     q, o = queries(), oracle_sql()
     failures = []
     for key in sorted(set(q) - set(o)):
         try:
             df = q[key](spark, ROWS_ONLY_SF)
+            audit_plan(key, df)
             if not df.columns:
                 failures.append(f"{key}: empty schema")
             elif df.count() < 0:  # pragma: no cover -- count() is >= 0
@@ -136,7 +144,7 @@ def stage3_rows_only(spark) -> list[str]:
     return failures
 
 
-def stage4_plan_audit() -> list[str]:
+def stage4_plan_gates() -> list[str]:
     proc = subprocess.run(
         [sys.executable, "-m", "pytest", "tests/test_plans.py", "-x", "-q"],
         cwd=REPO,
@@ -145,7 +153,7 @@ def stage4_plan_audit() -> list[str]:
     )
     if proc.returncode != 0:
         tail = "\n".join(proc.stdout.splitlines()[-15:])
-        return [f"plan audit failed (exit {proc.returncode}):\n{tail}"]
+        return [f"plan gates failed (exit {proc.returncode}):\n{tail}"]
     return []
 
 
@@ -170,8 +178,8 @@ def main() -> int:
         spark.stop()
 
     if _stage_enabled(4):
-        print("[4/4] plan blanket audit (pytest tests/test_plans.py) ...", flush=True)
-        failures += stage4_plan_audit()
+        print("[4/4] per-operator plan gates (pytest tests/test_plans.py) ...", flush=True)
+        failures += stage4_plan_gates()
 
     print(f"\npredriver_check: {time.time() - t0:.0f}s total")
     if failures:
