@@ -7,6 +7,16 @@ Usage: python bench.py
 
 Each query is forced through full execution with the ``noop`` sink (count()
 alone would let Catalyst prune projected expressions and under-report).
+
+Each key runs once, under its own job group, and lands in ``layers`` as
+``wall_s`` (construction plus the write), ``cpu_s`` (CPU seconds of the
+whole process tree over the same span: driver, JVM and Python workers)
+and ``jobs`` (the Spark jobs its group ran). ``band`` holds the same
+wall/CPU pair for the whole query loop, plus the host's steal seconds
+over it. Interference rule (the thresholds of
+``perfbench.trace.interfered``): a key whose ``wall_s`` grew by more than
+25% against an earlier sweep while its ``cpu_s`` stayed within 10% was
+slowed by the host, not by the code.
 """
 
 from __future__ import annotations
@@ -16,43 +26,7 @@ import os
 import sys
 import time
 
-# Host-band reference (VERDICT r9 task 3): five fixed keys re-run 3x at
-# sweep START and END in the same process; their per-key medians against
-# the pinned reference seconds below land in the output JSON as "band",
-# so a slow sweep is mechanically attributable to host drift (band
-# factor >> 1 at both ends) vs a code regression (band ~1, individual
-# keys slow) without multi-sweep forensics. The keys span the engine's
-# hot paths: parquet scan + grouped agg (flagship), shuffle join
-# (sort-merge), window, string/token HOFs, embedding arithmetic.
-_BAND_KEYS = [
-    "a0_flagship_daily_rollup",
-    "j_sortmerge",
-    "w_rank",
-    "t_token_count",
-    "v_cosine_topk",
-]
-# Pinned from two clean solo sf0.1/local[32] sessions (round 10,
-# 2026-08-16, median-of-3 probes). The START probe always runs in the
-# same state -- fresh JVM after the standard warmups, first touch of the
-# big tables -- and reproducibly reads ~1.5x the fully-warm END state,
-# so each position gets its own pinned reference. Re-pin only with a
-# BENCH_NOTES entry.
-_BAND_REF_SF = 0.1
-_BAND_REF_SEC_START = {
-    "a0_flagship_daily_rollup": 0.49,
-    "j_sortmerge": 1.01,
-    "w_rank": 0.25,
-    "t_token_count": 0.34,
-    "v_cosine_topk": 0.64,
-}
-_BAND_REF_SEC_END = {
-    "a0_flagship_daily_rollup": 0.30,
-    "j_sortmerge": 0.82,
-    "w_rank": 0.18,
-    "t_token_count": 0.21,
-    "v_cosine_topk": 0.42,
-}
-
+from perfbench.trace import cpu_seconds, process_tree, steal_seconds
 
 # Ingest-time artifacts priced as setup lines, in output order. Each is
 # declared next to its builder (``@artifact(setup=..., used_by=...)``);
@@ -64,30 +38,25 @@ SETUP_ARTIFACTS = (
 ).split()
 
 
-def _band_probe(spark, queries, sf_dir: str) -> dict:
-    """Median-of-3 wall seconds for each band-reference key, plus the
-    band factor (median over keys of measured/pinned) when running at
-    the reference SF."""
-    med: dict[str, float] = {}
-    for k in _BAND_KEYS:
-        if k not in queries:
-            continue
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
-            queries[k](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.time() - t0)
-        med[k] = round(sorted(runs)[1], 3)
-    return med
-
-
-def _band_factor(med: dict, ref: dict) -> float | None:
-    ratios = sorted(med[k] / ref[k] for k in med if k in ref)
-    if not ratios:
-        return None
-    return round(ratios[len(ratios) // 2], 3)
+def _run_key(spark, name: str, fn, sf_dir: str) -> dict:
+    """Run registry key ``name`` once through the ``noop`` sink under job
+    group ``name``: wall and process-tree CPU seconds of construction plus
+    the write, and the number of jobs the group ran. The group is cleared
+    before returning, also when the key raises, so later jobs are not
+    charged to it."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    c0, t0 = cpu_seconds(process_tree(os.getpid())), time.perf_counter()
+    try:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+    wall = time.perf_counter() - t0
+    cpu = cpu_seconds(process_tree(os.getpid())) - c0
+    # Job ends reach the status store through the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+    return {"wall_s": round(wall, 3), "cpu_s": round(cpu, 3), "jobs": jobs}
 
 
 def main() -> int:
@@ -134,6 +103,7 @@ def main() -> int:
     # meaning "warm query cost" while the build cost stays visible in the
     # JSON under "setup". Totals remain honest: suite wall includes setup.
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     failures: dict[str, str] = {}
     t_total = time.time()
     setup: dict[str, float] = {}
@@ -155,37 +125,27 @@ def main() -> int:
         if art.used_by & set(queries):
             _setup(name, lambda: art.prime(spark, sf_dir))
 
-    band_start = _band_probe(spark, queries, sf_dir)
-
-    t_queries = time.time()
+    c_queries = cpu_seconds(process_tree(os.getpid()))
+    steal0, t_queries = steal_seconds(), time.time()
     for name in sorted(queries):
-        t0 = time.time()
         try:
-            df = queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.time() - t0, 3)
-            print(f"ok   {name} {timings[name]:.2f}s", file=sys.stderr, flush=True)
+            rec = layers[name] = _run_key(spark, name, queries[name], sf_dir)
+            timings[name] = rec["wall_s"]
+            print(
+                f"ok   {name} {rec['wall_s']:.2f}s cpu {rec['cpu_s']:.2f}s jobs {rec['jobs']}",
+                file=sys.stderr,
+                flush=True,
+            )
         except Exception as exc:  # keep benching; report the failure
             failures[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"FAIL {name}: {failures[name]}", file=sys.stderr, flush=True)
     queries_wall = round(time.time() - t_queries, 3)
-    band_end = _band_probe(spark, queries, sf_dir)
-    total = round(time.time() - t_total, 3)
-
     band = {
-        "start": band_start,
-        "end": band_end,
-        "start_factor": _band_factor(band_start, _BAND_REF_SEC_START),
-        "end_factor": _band_factor(band_end, _BAND_REF_SEC_END),
-        "ref_start_sec": _BAND_REF_SEC_START,
-        "ref_end_sec": _BAND_REF_SEC_END,
-        "ref_sf": _BAND_REF_SF,
-        "ref_provenance": "two clean solo sf0.1/local[32] sessions, round 10",
+        "wall_s": queries_wall,
+        "cpu_s": round(cpu_seconds(process_tree(os.getpid())) - c_queries, 3),
+        "steal_s": round(steal_seconds() - steal0, 3),
     }
-    if abs(sf_num if isinstance(sf_num, float) else -1) != _BAND_REF_SF:
-        # Factors are only meaningful at the reference SF; medians still
-        # land so any-SF sweeps stay self-describing.
-        band["start_factor"] = band["end_factor"] = None
+    total = round(time.time() - t_total, 3)
 
     out = {
         "metric": "suite_wall_seconds",
@@ -201,8 +161,10 @@ def main() -> int:
         "setup": setup,
         "setup_wall_seconds": round(sum(setup.values()), 3),
         "queries_wall_seconds": queries_wall,
-        # Host-band attribution (VERDICT r9 task 3): see _BAND_KEYS.
+        # The query loop's wall, process-tree CPU and host steal seconds.
         "band": band,
+        # Per key: wall_s, cpu_s, jobs (see the module docstring).
+        "layers": layers,
     }
     if failures:
         out["failures"] = failures

@@ -23,7 +23,10 @@ written once below:
 * ``_keep_largest`` -- the keeper: per duplicate cluster, keep the
   largest copy.
 
-Only the exact verify between candidate and decision is per-leg.
+Only the exact verify between candidate and decision is per-leg. Within
+the text leg, the three scores (Jaccard, containment, incremental
+admission) share ``_with_sizes``, which joins both docs' shingle-set
+sizes to the pair counts; only the score expression differs.
 """
 
 from __future__ import annotations
@@ -131,14 +134,28 @@ def _posts_of(docs: DataFrame) -> DataFrame:
     )
 
 
-def _pair_jaccard(common: DataFrame, sizes: DataFrame) -> DataFrame:
-    """Join per-pair common-shingle counts with per-doc set sizes and compute
-    Jaccard = |A∩B| / (|A| + |B| - |A∩B|), thresholded."""
+def _with_sizes(common: DataFrame, posts: DataFrame, names: tuple[str, str]) -> DataFrame:
+    """The size stage of every text near-dup score: ``common``'s rows
+    with the shingle-set size of both docs of the pair (the docs in
+    columns ``names``), counted from the posting table ``posts``, as
+    ``n_a`` and ``n_b``. Jaccard, containment and the incremental
+    admission differ only in the score they compute from these."""
+    sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("n_common") / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common"))
+    a, b = names
     return (
-        common.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        common.join(sa, F.col(a) == F.col("sa.doc_id"))
+        .join(sb, F.col(b) == F.col("sb.doc_id"))
+        .select(*common.columns, F.col("sa.n_sh").alias("n_a"), F.col("sb.n_sh").alias("n_b"))
+    )
+
+
+def _pair_jaccard(common: DataFrame, posts: DataFrame) -> DataFrame:
+    """Per-pair common-shingle counts scored by Jaccard =
+    |A∩B| / (|A| + |B| - |A∩B|), thresholded."""
+    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    return (
+        _with_sizes(common, posts, ("doc_a", "doc_b"))
         .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= _JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
@@ -217,9 +234,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(shingle-posting-list^2) within blocks, not |docs|^2.
     """
     posts = _shingle_posts(spark, sf_dir)
-    sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     common = _shared_counts(posts, posts, _TEXT_KEY, _TEXT_PAIR, ordered=True)
-    return _pair_jaccard(common, sizes)
+    return _pair_jaccard(common, posts)
 
 
 # Containment threshold: a pair is flagged when the SMALLER shingle set
@@ -277,13 +293,10 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = _shingle_posts(spark, sf_dir).unionByName(
         _posts_of(_excerpt_docs(docs))
     )
-    sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     common = _shared_counts(posts, posts, _TEXT_KEY, _TEXT_PAIR, ordered=True)
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    cont = F.col("n_common") / F.least(F.col("sa.n_sh"), F.col("sb.n_sh"))
+    cont = F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))
     return (
-        common.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        _with_sizes(common, posts, ("doc_a", "doc_b"))
         .select(
             "doc_a",
             "doc_b",
@@ -379,8 +392,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_common"))
     )
-    sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    return _pair_jaccard(common, sizes)
+    return _pair_jaccard(common, posts)
 
 
 # Non-overlapping span width (words) for line-level dedup. The fixture
@@ -1021,7 +1033,6 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_id = docs.agg(F.max("doc_id")).collect()[0][0] or 0
     thr = max_id * _INCR_NUM // _INCR_DEN
     posts = _shingle_posts(spark, sf_dir)
-    sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     common = _shared_counts(
         posts.filter(F.col("doc_id") > thr),
         posts.filter(F.col("doc_id") <= thr),
@@ -1029,13 +1040,9 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("new_doc", "cand_doc", "n_common"),
         ordered=False,
     )
-    sn, sc = sizes.alias("sn"), sizes.alias("sc")
-    jac = F.col("n_common") / (
-        F.col("sn.n_sh") + F.col("sc.n_sh") - F.col("n_common")
-    )
+    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     scored = (
-        common.join(sn, F.col("new_doc") == F.col("sn.doc_id"))
-        .join(sc, F.col("cand_doc") == F.col("sc.doc_id"))
+        _with_sizes(common, posts, ("new_doc", "cand_doc"))
         .select(
             "new_doc",
             "cand_doc",

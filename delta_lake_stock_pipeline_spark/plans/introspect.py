@@ -26,7 +26,9 @@ class PlanFeatures:
     n_exchanges: int
     n_wholestage_codegen: int
     has_broadcast_hash_join: bool
+    has_broadcast_nested_loop_join: bool
     has_sort_merge_join: bool
+    has_shuffled_hash_join: bool
     has_take_ordered: bool  # top-k without global sort
     has_partial_aggregate: bool  # map-side combine before the shuffle
     n_python_boundaries: int  # Arrow/pickle crossings (UDF evals)
@@ -45,11 +47,19 @@ def plan_features(df: DataFrame) -> PlanFeatures:
         # distinct spans, not tagged nodes.
         n_wholestage_codegen=len(set(re.findall(r"codegen id : (\d+)", text))),
         has_broadcast_hash_join="BroadcastHashJoin" in text,
+        has_broadcast_nested_loop_join="BroadcastNestedLoopJoin" in text,
         has_sort_merge_join="SortMergeJoin" in text,
+        has_shuffled_hash_join="ShuffledHashJoin" in text,
         has_take_ordered="TakeOrderedAndProject" in text,
         has_partial_aggregate="partial_" in text or "Keys: " in text and "Functions [" in text,
+        # Numbered headers only, as for exchanges; the *EvalPython prefixes
+        # also match the UDTF nodes.
         n_python_boundaries=len(
-            re.findall(r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas|MapInPandas", text)
+            re.findall(
+                r"\(\d+\) (?:ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas"
+                r"|MapInPandas|MapInArrow)",
+                text,
+            )
         ),
         pushed_filters=re.findall(r"PushedFilters: \[([^\]]*)\]", text),
         partition_filters=re.findall(r"PartitionFilters: \[([^\]]*)\]", text),

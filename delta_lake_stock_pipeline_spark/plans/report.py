@@ -2,9 +2,10 @@
 
 Run: ``python -m delta_lake_stock_pipeline_spark.plans.report [sf_dir]``
 
-Explain-only (no jobs): compiles each query's plan at the given scale dir
-and tabulates the properties that decide 100 TB viability -- shuffle count,
-codegen coverage, join strategies, pushdown, Python boundaries.
+Explain-only (no query is executed): compiles each query's plan at the
+given scale dir and tabulates the properties that decide 100 TB viability
+-- shuffle count, codegen coverage, join strategies, pushdown, Python
+boundaries.
 """
 
 from __future__ import annotations
@@ -30,17 +31,30 @@ def generate(sf_dir: str = "/root/testdata/sf0.1", out_path: str = "PLANS.md") -
         "top-k (TakeOrderedAndProject), pushed/partition filters present, "
         "py (Python/Arrow boundary crossings — 0 for pure-Catalyst queries).",
         "",
+        "Provenance: the whole table is generated by one command, "
+        f"`python -m delta_lake_stock_pipeline_spark.plans.report {sf_dir}`, "
+        "which compiles every registry key in name order in one fresh "
+        "session with AQE off. Rows of artifact-backed keys (`d_*` postings "
+        "and signatures, `v_ann_*` indexes, the sketch anchors) depend on "
+        "which artifacts the session has built by the time the key compiles: "
+        "a built artifact replaces its build subtree with a scan, so the "
+        "shuffle count drops. Regenerate with the same command before "
+        "comparing rows.",
+        "",
         "| query | shuffles | WSCG | join | top-k | pushed | py |",
         "|---|---|---|---|---|---|---|",
     ]
     for name, fn in sorted(all_queries().items()):
         try:
             f = plan_features(fn(spark, sf_dir))
-            join = (
-                "broadcast"
-                if f.has_broadcast_hash_join
-                else ("sort-merge" if f.has_sort_merge_join else "—")
-            )
+            if f.has_broadcast_hash_join or f.has_broadcast_nested_loop_join:
+                join = "broadcast"
+            elif f.has_sort_merge_join:
+                join = "sort-merge"
+            elif f.has_shuffled_hash_join:
+                join = "shuffle-hash"
+            else:
+                join = "—"
             lines.append(
                 f"| {name} | {f.n_exchanges} | {f.n_wholestage_codegen} | {join} "
                 f"| {'y' if f.has_take_ordered else '—'} "

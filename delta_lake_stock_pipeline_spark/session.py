@@ -53,8 +53,8 @@ def get_spark(
 
     # This sandbox's /tmp is periodically wiped by an external cleaner --
     # observed DELETING LIVE STATE MID-RUN (blockmgr shuffle files, the
-    # round-trip keys' mkdtemp dirs; tools/plans_probe.py records two
-    # earlier kills). Keep every scratch surface -- Spark's local dirs AND
+    # round-trip keys' mkdtemp dirs, and twice a script kept there).
+    # Keep every scratch surface -- Spark's local dirs AND
     # tempfile.mkdtemp's default -- under the repo instead. Harmless
     # elsewhere; a real deployment overrides with SPARK_LOCAL_DIRS on
     # fast local disks.
