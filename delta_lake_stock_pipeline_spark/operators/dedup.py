@@ -1451,6 +1451,54 @@ _NGRAM_SQL = f"""
     -- boundary pair can never be kept by one side only
 """
 
+
+def _closure_oracle(pairs_sql: str) -> str:
+    """Oracle of every near-dup clusters key: the transitive closure of the
+    (doc_a, doc_b) relation ``pairs_sql`` by ``WITH RECURSIVE`` --
+    component minimum per involved doc, the fixpoint the engine's
+    connected components compute."""
+    return f"""
+    WITH RECURSIVE
+    pairs AS (SELECT doc_a, doc_b FROM ({pairs_sql})),
+    edges AS (
+        SELECT doc_a AS src, doc_b AS dst FROM pairs
+        UNION ALL
+        SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ),
+    reach(doc_id, lab) AS (
+        SELECT src, src FROM edges
+        UNION
+        SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc_id
+    )
+    SELECT doc_id, MIN(lab) AS cluster_id
+    FROM reach GROUP BY doc_id ORDER BY doc_id
+"""
+
+
+def _keeper_oracle(
+    clusters_sql: str, sizes: str, alias: str, size_col: str, sizes_sql: str
+) -> str:
+    """Oracle of every near-dup keeper key (``_keep_largest``): the
+    clusters closure nested as a MATERIALIZED CTE, joined to the per-doc
+    ``size_col`` of the CTE ``sizes`` (``sizes_sql``, read as ``alias``),
+    keeper via FIRST_VALUE under the same (size_col DESC, doc_id) total
+    order."""
+    return f"""
+    WITH clusters AS MATERIALIZED ({clusters_sql}),
+    {sizes} AS ({sizes_sql})
+    SELECT c.doc_id, c.cluster_id, {alias}.{size_col},
+           FIRST_VALUE(c.doc_id) OVER (
+               PARTITION BY c.cluster_id
+               ORDER BY {alias}.{size_col} DESC, c.doc_id) AS keeper_id,
+           CAST(CASE WHEN c.doc_id = FIRST_VALUE(c.doc_id) OVER (
+                   PARTITION BY c.cluster_id
+                   ORDER BY {alias}.{size_col} DESC, c.doc_id)
+                THEN 1 ELSE 0 END AS INTEGER) AS kept
+    FROM clusters c JOIN {sizes} {alias} ON c.doc_id = {alias}.doc_id
+    ORDER BY c.doc_id
+"""
+
+
 ORACLES = {
     "d_exact_summary": """
         SELECT COUNT(*) AS n_docs,
@@ -1499,22 +1547,7 @@ ORACLES = {
               >= {_CONTAINMENT_THRESHOLD}
         ORDER BY doc_a, doc_b
     """,
-    "d_dup_clusters": f"""
-        WITH RECURSIVE
-        pairs AS (SELECT doc_a, doc_b FROM ({_NGRAM_SQL})),
-        edges AS (
-            SELECT doc_a AS src, doc_b AS dst FROM pairs
-            UNION ALL
-            SELECT doc_b AS src, doc_a AS dst FROM pairs
-        ),
-        reach(doc_id, lab) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc_id
-        )
-        SELECT doc_id, MIN(lab) AS cluster_id
-        FROM reach GROUP BY doc_id ORDER BY doc_id
-    """,
+    "d_dup_clusters": _closure_oracle(_NGRAM_SQL),
     "d_fuzzy_levenshtein": """
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                levenshtein(substr(lower(a.text), 1, 40),
@@ -1650,25 +1683,18 @@ ORACLES["d_incremental_neardup"] = f"""
 # Mirror of cluster_keeper: the d_dup_clusters recursive closure nested
 # as a CTE, joined to t_quality_score's tokenization, keeper via
 # FIRST_VALUE under the same (n_tokens DESC, doc_id) total order.
-ORACLES["d_cluster_keeper"] = f"""
-    WITH clusters AS MATERIALIZED ({ORACLES["d_dup_clusters"]}),
-    toks AS (
+ORACLES["d_cluster_keeper"] = _keeper_oracle(
+    ORACLES["d_dup_clusters"],
+    "toks",
+    "t",
+    "n_tokens",
+    """
         SELECT doc_id,
                CAST(len(string_split(lower(text), ' ')) AS BIGINT)
                    AS n_tokens
         FROM documents
-    )
-    SELECT c.doc_id, c.cluster_id, t.n_tokens,
-           FIRST_VALUE(c.doc_id) OVER (
-               PARTITION BY c.cluster_id
-               ORDER BY t.n_tokens DESC, c.doc_id) AS keeper_id,
-           CAST(CASE WHEN c.doc_id = FIRST_VALUE(c.doc_id) OVER (
-                   PARTITION BY c.cluster_id
-                   ORDER BY t.n_tokens DESC, c.doc_id)
-                THEN 1 ELSE 0 END AS INTEGER) AS kept
-    FROM clusters c JOIN toks t ON c.doc_id = t.doc_id
-    ORDER BY c.doc_id
-"""
+    """,
+)
 
 # The toks/pos/grams CTE chain shared by BOTH ExactSubstr oracles --
 # one definition of the oracle-side tokenization and gram bounds,

@@ -40,7 +40,9 @@ from ..artifacts import artifact, clear_all
 from ..sources.fixtures import load_table
 from .dedup import (
     _best_match,
+    _closure_oracle,
     _keep_largest,
+    _keeper_oracle,
     _shared_counts,
     largestar_components,
 )
@@ -1239,22 +1241,7 @@ QUERIES["m_image_dup_clusters"] = image_dup_clusters
 # raw text (twin augmentation, aHash grid, bands, verify) and then walks
 # the transitive closure -- component minimum per involved image, the
 # exact fixpoint largestar_components computes.
-ORACLES["m_image_dup_clusters"] = f"""
-    WITH RECURSIVE
-    pairs AS (SELECT doc_a, doc_b FROM ({ORACLES["m_image_neardup"]})),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    reach(doc_id, lab) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc_id
-    )
-    SELECT doc_id, MIN(lab) AS cluster_id
-    FROM reach GROUP BY doc_id ORDER BY doc_id
-"""
+ORACLES["m_image_dup_clusters"] = _closure_oracle(ORACLES["m_image_neardup"])
 
 QUERIES["m_image_keeper"] = image_keeper
 
@@ -1262,9 +1249,12 @@ QUERIES["m_image_keeper"] = image_keeper
 # closure nested as a MATERIALIZED CTE, joined to the geometry metadata
 # recomputed from the augmented corpus, keeper via FIRST_VALUE under the
 # same (n_pixels DESC, doc_id) total order.
-ORACLES["m_image_keeper"] = f"""
-    WITH clusters AS MATERIALIZED ({ORACLES["m_image_dup_clusters"]}),
-    geo AS (
+ORACLES["m_image_keeper"] = _keeper_oracle(
+    ORACLES["m_image_dup_clusters"],
+    "geo",
+    "g",
+    "n_pixels",
+    f"""
         SELECT doc_id,
                CAST((octet_length(encode(text)) % 64 + 1)
                     * ((octet_length(encode(text)) // 64) % 64 + 1)
@@ -1277,18 +1267,8 @@ ORACLES["m_image_keeper"] = f"""
             FROM documents
             WHERE doc_id % {_ND_TWIN_MOD} = {_ND_TWIN_RES}
         )
-    )
-    SELECT c.doc_id, c.cluster_id, g.n_pixels,
-           FIRST_VALUE(c.doc_id) OVER (
-               PARTITION BY c.cluster_id
-               ORDER BY g.n_pixels DESC, c.doc_id) AS keeper_id,
-           CAST(CASE WHEN c.doc_id = FIRST_VALUE(c.doc_id) OVER (
-                   PARTITION BY c.cluster_id
-                   ORDER BY g.n_pixels DESC, c.doc_id)
-                THEN 1 ELSE 0 END AS INTEGER) AS kept
-    FROM clusters c JOIN geo g ON c.doc_id = g.doc_id
-    ORDER BY c.doc_id
-"""
+    """,
+)
 
 
 def audio_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,26 +1305,14 @@ QUERIES["m_audio_keeper"] = audio_keeper
 
 # Audio twins of the image-leg oracles: the same recursive closure and
 # FIRST_VALUE keeper shapes nested over the m_audio_neardup pair rebuild.
-ORACLES["m_audio_dup_clusters"] = f"""
-    WITH RECURSIVE
-    pairs AS (SELECT doc_a, doc_b FROM ({ORACLES["m_audio_neardup"]})),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    reach(doc_id, lab) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc_id
-    )
-    SELECT doc_id, MIN(lab) AS cluster_id
-    FROM reach GROUP BY doc_id ORDER BY doc_id
-"""
+ORACLES["m_audio_dup_clusters"] = _closure_oracle(ORACLES["m_audio_neardup"])
 
-ORACLES["m_audio_keeper"] = f"""
-    WITH clusters AS MATERIALIZED ({ORACLES["m_audio_dup_clusters"]}),
-    lens AS (
+ORACLES["m_audio_keeper"] = _keeper_oracle(
+    ORACLES["m_audio_dup_clusters"],
+    "lens",
+    "l",
+    "n_chunks",
+    f"""
         SELECT doc_id,
                CAST(GREATEST(ceil(octet_length(encode(text)) / 32.0),
                              1) AS INTEGER) AS n_chunks
@@ -1356,29 +1324,19 @@ ORACLES["m_audio_keeper"] = f"""
             FROM documents
             WHERE doc_id % {_ND_TWIN_MOD} = {_ND_TWIN_RES}
         )
-    )
-    SELECT c.doc_id, c.cluster_id, l.n_chunks,
-           FIRST_VALUE(c.doc_id) OVER (
-               PARTITION BY c.cluster_id
-               ORDER BY l.n_chunks DESC, c.doc_id) AS keeper_id,
-           CAST(CASE WHEN c.doc_id = FIRST_VALUE(c.doc_id) OVER (
-                   PARTITION BY c.cluster_id
-                   ORDER BY l.n_chunks DESC, c.doc_id)
-                THEN 1 ELSE 0 END AS INTEGER) AS kept
-    FROM clusters c JOIN lens l ON c.doc_id = l.doc_id
-    ORDER BY c.doc_id
-"""
+    """,
+)
 
 QUERIES["m_image_incremental"] = image_incremental
 
-# d_incremental_neardup's oracle shape on the image leg, composed over
-# the FULL m_image_neardup pair rebuild: every corpus->batch pair in the
-# symmetric pair relation has doc_a in the corpus and doc_b in the batch
-# (twin ids sit above every natural id at any SF), so the admission view
-# is a rank-1 filter per batch image under (hamming ASC, corpus doc ASC)
-# left-joined back to the whole batch.
-ORACLES["m_image_incremental"] = f"""
-    WITH pairs AS MATERIALIZED (SELECT * FROM ({ORACLES["m_image_neardup"]})),
+
+def _admission_oracle(pairs_sql: str) -> str:
+    """Oracle of the banded (image, audio) incremental keys
+    (``_hamming_admission``): rank-1 corpus match per batch doc in the
+    symmetric near-dup relation ``pairs_sql`` under (hamming ASC, corpus
+    doc ASC), left-joined back to the whole batch."""
+    return f"""
+    WITH pairs AS MATERIALIZED (SELECT * FROM ({pairs_sql})),
     best AS (
         SELECT doc_b AS new_doc, doc_a AS matched_doc,
                n_shared_bands, hamming,
@@ -1399,6 +1357,15 @@ ORACLES["m_image_incremental"] = f"""
     LEFT JOIN (SELECT * FROM best WHERE rn = 1) s USING (new_doc)
     ORDER BY new_doc
 """
+
+
+# d_incremental_neardup's oracle shape on the image leg, composed over
+# the FULL m_image_neardup pair rebuild: every corpus->batch pair in the
+# symmetric pair relation has doc_a in the corpus and doc_b in the batch
+# (twin ids sit above every natural id at any SF), so the admission view
+# is a rank-1 filter per batch image under (hamming ASC, corpus doc ASC)
+# left-joined back to the whole batch.
+ORACLES["m_image_incremental"] = _admission_oracle(ORACLES["m_image_neardup"])
 
 
 def audio_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1413,33 +1380,9 @@ def audio_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["m_audio_incremental"] = audio_incremental
 
-# The m_image_incremental oracle composition on the audio leg: every
-# corpus->batch pair in the symmetric m_audio_neardup relation has doc_a
-# in the corpus and doc_b in the batch (twin ids clear every natural id),
-# rank-1 per batch clip under (hamming ASC, corpus doc ASC), left-joined
-# back to the whole batch.
-ORACLES["m_audio_incremental"] = f"""
-    WITH pairs AS MATERIALIZED (SELECT * FROM ({ORACLES["m_audio_neardup"]})),
-    best AS (
-        SELECT doc_b AS new_doc, doc_a AS matched_doc,
-               n_shared_bands, hamming,
-               ROW_NUMBER() OVER (PARTITION BY doc_b
-                                  ORDER BY hamming, doc_a) AS rn
-        FROM pairs
-        WHERE doc_b >= {_ND_TWIN_BASE} AND doc_a < {_ND_TWIN_BASE}
-    ),
-    batch AS (
-        SELECT doc_id + {_ND_TWIN_BASE} AS new_doc FROM documents
-        WHERE doc_id % {_ND_TWIN_MOD} = {_ND_TWIN_RES}
-    )
-    SELECT b.new_doc, s.matched_doc, s.n_shared_bands,
-           CAST(s.hamming AS INTEGER) AS hamming,
-           CAST(CASE WHEN s.matched_doc IS NULL THEN 1 ELSE 0 END
-                AS INTEGER) AS is_novel
-    FROM batch b
-    LEFT JOIN (SELECT * FROM best WHERE rn = 1) s USING (new_doc)
-    ORDER BY new_doc
-"""
+# The m_image_incremental oracle over the m_audio_neardup relation (twin
+# ids clear every natural id here too).
+ORACLES["m_audio_incremental"] = _admission_oracle(ORACLES["m_audio_neardup"])
 
 
 def av_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1911,26 +1854,14 @@ QUERIES["m_video_keeper"] = video_keeper
 
 # Video twins of the image/audio-leg oracles: the same recursive closure
 # and FIRST_VALUE keeper shapes nested over the m_video_neardup rebuild.
-ORACLES["m_video_dup_clusters"] = f"""
-    WITH RECURSIVE
-    pairs AS (SELECT doc_a, doc_b FROM ({ORACLES["m_video_neardup"]})),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    reach(doc_id, lab) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.doc_id
-    )
-    SELECT doc_id, MIN(lab) AS cluster_id
-    FROM reach GROUP BY doc_id ORDER BY doc_id
-"""
+ORACLES["m_video_dup_clusters"] = _closure_oracle(ORACLES["m_video_neardup"])
 
-ORACLES["m_video_keeper"] = f"""
-    WITH clusters AS MATERIALIZED ({ORACLES["m_video_dup_clusters"]}),
-    lens AS (
+ORACLES["m_video_keeper"] = _keeper_oracle(
+    ORACLES["m_video_dup_clusters"],
+    "lens",
+    "l",
+    "n_chars",
+    f"""
         SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars
         FROM (
             SELECT doc_id, text FROM documents WHERE text IS NOT NULL
@@ -1942,18 +1873,8 @@ ORACLES["m_video_keeper"] = f"""
             FROM documents
             WHERE text IS NOT NULL AND doc_id % {_VD_TWIN_MOD} = {_VD_TWIN_RES}
         )
-    )
-    SELECT c.doc_id, c.cluster_id, l.n_chars,
-           FIRST_VALUE(c.doc_id) OVER (
-               PARTITION BY c.cluster_id
-               ORDER BY l.n_chars DESC, c.doc_id) AS keeper_id,
-           CAST(CASE WHEN c.doc_id = FIRST_VALUE(c.doc_id) OVER (
-                   PARTITION BY c.cluster_id
-                   ORDER BY l.n_chars DESC, c.doc_id)
-                THEN 1 ELSE 0 END AS INTEGER) AS kept
-    FROM clusters c JOIN lens l ON c.doc_id = l.doc_id
-    ORDER BY c.doc_id
-"""
+    """,
+)
 
 
 def video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

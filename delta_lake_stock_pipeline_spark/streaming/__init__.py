@@ -2,11 +2,11 @@
 
 Two layers:
 
-* ``windows`` -- event-time window aggregations (tumbling / sliding /
-  session) expressed with ``F.window`` / ``F.session_window``. These run
-  identically in batch and streaming (same Catalyst operators), so the batch
-  form is registered in ``queries()`` with a DuckDB oracle -- the strongest
-  correctness check available for window semantics.
+* ``windows`` -- the registered ``s_`` keys. Each batch window key is its
+  ``runtime`` stream transform applied to the batch ``events`` table (same
+  Catalyst operators; a batch plan drops the watermark), so its DuckDB
+  oracle checks the transform's window semantics; the replay keys run the
+  same transforms incrementally against the same oracles.
 * ``runtime`` -- Structured Streaming execution: file source -> watermark ->
   windowed agg / dedup-within-watermark / stateful per-key counts ->
   ``availableNow`` batch-equivalence. Exercised by ``tests/test_streaming.py``

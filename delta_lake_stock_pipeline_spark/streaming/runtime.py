@@ -7,6 +7,14 @@ Everything is checkpoint-driven and timing-free: tests feed micro-batches by
 dropping files and re-running ``availableNow`` against the same checkpoint,
 so watermark/late-data behavior is deterministic (SURVEY.md §7.4 risk 3).
 
+Each streaming shape is written once, here. The batch window keys in
+``windows.py`` are these same transforms applied to the batch ``events``
+table (a batch plan drops ``withWatermark``), so the DuckDB oracle of a
+batch key checks the stream transform's semantics and the replay keys
+check its incremental execution. The three ``availableNow`` sinks share
+one drain (``_drain``); the two upsert sinks share one write-or-MERGE
+step (``_write_or_merge``).
+
 Scale notes:
 * The file source at 100 TB is the same API over an object-store prefix;
   ``maxFilesPerTrigger`` bounds per-batch work.
@@ -20,7 +28,6 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import uuid
 from collections.abc import Iterable
 
 import pandas as pd
@@ -28,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..storage import current_version, merge_into, write_partitioned
 
 # Schema of the events fixture as written by tests (ts already us-precision).
 EVENTS_SCHEMA = T.StructType(
@@ -43,6 +52,10 @@ EVENTS_SCHEMA = T.StructType(
 
 WATERMARK_DELAY = "2 days"
 
+# Session gap for session_window; chosen so sf fixtures produce many
+# multi-event sessions (events span 30 days, ~1k-100k rows).
+SESSION_GAP = "1 hour"
+
 
 def events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-source stream over a directory of events parquet files
@@ -54,38 +67,44 @@ def events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     )
 
 
+def _daily_counts(watermarked: DataFrame) -> DataFrame:
+    """Count + rounded value sum per (1-day event-time window ``w``,
+    event_type) over an already-watermarked stream (or a batch frame).
+    Spark aligns windows to the epoch, so a 1-day window start is
+    ``date_trunc('day', ts)`` -- the oracle form -- and, under the UTC
+    session zone, the calendar date."""
+    return watermarked.groupBy(F.window("ts", "1 day").alias("w"), "event_type").agg(
+        F.count("*").alias("n_events"),
+        F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("total_value"),
+    )
+
+
 def tumbling_counts(stream: DataFrame) -> DataFrame:
-    """Watermarked tumbling-window counts -- streaming twin of
-    ``windows.tumbling_daily``. Append mode emits a window only once the
-    watermark passes its end (finalized results, late data dropped)."""
-    return (
-        stream.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    """Watermarked tumbling 1-day window counts per event_type (on the
+    batch table: ``windows.tumbling_daily``). Append mode emits a window
+    only once the watermark passes its end (finalized results, late data
+    dropped)."""
+    return _daily_counts(stream.withWatermark("ts", WATERMARK_DELAY)).select(
+        F.col("w.start").alias("window_start"),
+        "event_type",
+        "n_events",
+        "total_value",
     )
 
 
 def session_counts(stream: DataFrame) -> DataFrame:
-    """Watermarked SESSION-window aggregation -- streaming twin of
-    ``windows.session_windows`` (the real ``F.session_window`` operator,
-    not the gaps-and-islands batch emulation). Append mode emits a
-    session only once the watermark passes its end + gap, i.e. when no
+    """Watermarked SESSION-window aggregation per user with a
+    ``SESSION_GAP`` inactivity gap (on the batch table:
+    ``windows.session_windows``). ``session_window`` merges events whose
+    timestamps are < gap apart (half-open [ts, ts+gap) extension), so a
+    difference of exactly the gap starts a NEW session -- the oracle's
+    gaps-and-islands form uses ``>= gap`` accordingly. Append mode emits
+    a session only once the watermark passes its end + gap, i.e. when no
     late event can extend or merge it -- session state (variable-length,
     merge-on-overlap) is the part plain tumbling windows don't exercise.
     The equivalence test flushes the fixture's final sessions with the
     two-sentinel pattern (state cleanup lags one batch) and excludes the
     sentinels' own sessions from the compare."""
-    from .windows import SESSION_GAP
-
     return (
         stream.withWatermark("ts", WATERMARK_DELAY)
         .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
@@ -293,9 +312,10 @@ def running_user_counts_tws(stream: DataFrame) -> DataFrame:
 
 def purchase_attribution(stream: DataFrame, how: str = "inner") -> DataFrame:
     """Stream-stream interval join: purchases matched to same-user clicks
-    within the preceding day (streaming twin of
-    ``windows.click_purchase_attribution``; ``how="leftOuter"`` is the
-    twin of ``windows.click_purchase_attribution_outer``).
+    within the preceding day (on the batch table:
+    ``windows.click_purchase_attribution``; a left outer ``how`` gives
+    ``windows.click_purchase_attribution_outer``, whose NULL-purchase rows
+    sort first).
 
     Both sides are watermarked and the join condition gives an event-time
     interval, so state is BOUNDED: a buffered click is evicted once the
@@ -346,6 +366,49 @@ def purchase_attribution(stream: DataFrame, how: str = "inner") -> DataFrame:
     )
 
 
+def _drain(
+    result: DataFrame, on_batch, checkpoint_dir: str, output_mode: str = "append"
+) -> None:
+    """Run ``result`` to completion over the input available now
+    (``Trigger.AvailableNow``), handing each micro-batch to
+    ``on_batch(batch_df, batch_id)`` via ``foreachBatch``; offsets and
+    state persist in ``checkpoint_dir``."""
+    (
+        result.writeStream.foreachBatch(on_batch)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _write_or_merge(
+    batch: DataFrame,
+    batch_id: int,
+    path: str,
+    key_cols: list[str],
+    partition_cols: list[str],
+    first_op: str,
+) -> None:
+    """Land one micro-batch in the versioned table at ``path``: the first
+    commit writes it (operation ``"{first_op} b{batch_id}"``), every later
+    one is a partition-pruned ``merge_into`` keyed on ``key_cols``. Only
+    that first commit names its batch; exactly-once commits (a Delta-style
+    ``txn`` of app id + batch id in the commit, ROADMAP item 6) belong
+    here."""
+    if current_version(path) is None:
+        write_partitioned(
+            batch,
+            path,
+            partition_cols,
+            operation=f"{first_op} b{batch_id}",
+            distribute_by_partition=True,
+        )
+    else:
+        merge_into(batch.sparkSession, path, batch, key_cols, partition_cols)
+
+
 def stream_upsert_to_table(
     stream: DataFrame,
     path: str,
@@ -365,11 +428,16 @@ def stream_upsert_to_table(
     ``order_col`` (with a content-hash tiebreak) since a single MERGE
     source must be key-unique -- ``dropDuplicates`` would keep a
     partition-order-dependent row, making replay NON-idempotent (round-3
-    review). The manifest records the batch id per commit; on
-    at-least-once replay after a checkpoint recovery, re-merging the same
-    batch is value-idempotent (same keys -> same rows deterministically),
-    mirroring Delta's txn-id idempotent writes."""
-    from ..storage import current_version, merge_into, write_partitioned
+    review).
+
+    Replay is value-idempotent but not commit-idempotent. Only the first
+    commit carries its batch id (``STREAM WRITE b{id}``); later batches
+    are plain ``MERGE`` entries. Spark re-runs a batch whose commit-log
+    entry is missing at restart, so a crash between our log append and
+    Spark's commit MERGEs that batch a second time: the rows come out the
+    same (same keys -> same rows), but the log gains a second MERGE
+    version and its rewrite. ROADMAP item 6 fixes this with a Delta-style
+    ``txn`` (app id, batch id) in ``_write_or_merge``."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         w = Window.partitionBy(*key_cols).orderBy(
@@ -380,26 +448,11 @@ def stream_upsert_to_table(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        if current_version(path) is None:
-            write_partitioned(
-                batch,
-                path,
-                partition_cols,
-                operation=f"STREAM WRITE b{batch_id}",
-                distribute_by_partition=True,
-            )
-        else:
-            merge_into(
-                batch_df.sparkSession, path, batch, key_cols, partition_cols
-            )
+        _write_or_merge(
+            batch, batch_id, path, key_cols, partition_cols, "STREAM WRITE"
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, _apply, checkpoint_dir)
 
 
 def materialize_daily_rollup(
@@ -425,53 +478,29 @@ def materialize_daily_rollup(
     # window column carries the watermark metadata, so this is what lets
     # the state store EVICT closed days -- grouping on a to_date alias
     # keeps the aggregate running but the watermark inert, and state then
-    # grows with (days x types) forever (round-3 review). Under the UTC
-    # session zone the 1-day window start IS the calendar date.
+    # grows with (days x types) forever (round-3 review).
     # ``delay`` is the lateness horizon: rows later than it are DROPPED and
     # their day's state evicted, so a deployment sets it to the source's
     # max expected disorder; state is then bounded by (horizon x types).
-    agg = (
-        stream.withWatermark("ts", delay)
-        .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("total_value"),
-        )
-        .select(
-            F.to_date("win.start").alias("event_date"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    agg = _daily_counts(stream.withWatermark("ts", delay)).select(
+        F.to_date("w.start").alias("event_date"),
+        "event_type",
+        "n_events",
+        "total_value",
     )
-    from ..storage import current_version, merge_into, write_partitioned
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if current_version(path) is None:
-            write_partitioned(
-                batch_df,
-                path,
-                ["event_date"],
-                operation=f"MATERIALIZE b{batch_id}",
-                distribute_by_partition=True,
-            )
-        else:
-            merge_into(
-                batch_df.sparkSession,
-                path,
-                batch_df,
-                ["event_date", "event_type"],
-                ["event_date"],
-            )
-
-    q = (
-        agg.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        agg,
+        lambda batch_df, batch_id: _write_or_merge(
+            batch_df,
+            batch_id,
+            path,
+            ["event_date", "event_type"],
+            ["event_date"],
+            "MATERIALIZE",
+        ),
+        checkpoint_dir,
+        "update",
     )
-    q.awaitTermination()
 
 
 def run_available_now(
@@ -495,14 +524,7 @@ def run_available_now(
         mode = "overwrite" if output_mode == "complete" else "append"
         batch_df.write.mode(mode).parquet(out_dir)
 
-    q = (
-        result.writeStream.foreachBatch(_write)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(result, _write, checkpoint_dir, output_mode)
     # Only a stream that emitted NOTHING leaves no output dir; any other
     # read failure (corrupt part-file, permissions) must surface, not be
     # masked as an empty result (round-3 review).

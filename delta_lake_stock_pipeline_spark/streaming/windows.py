@@ -1,11 +1,14 @@
-"""Event-time window aggregations over ``events`` (batch form).
+"""Event-time window aggregations over ``events`` (batch form) and the
+executed streaming replays.
 
 The reference has no streaming surface (SURVEY.md §2.12); this is the
-north-star extension. ``F.window`` / ``F.session_window`` are the same
-Catalyst operators in batch and streaming, so proving the batch form against
-a DuckDB oracle proves the window *semantics*; ``runtime.py`` + tests then
-prove the streaming *execution* (watermarks, state, availableNow) against
-these batch results.
+north-star extension. A streaming query is the batch query run
+incrementally, so each batch window key here IS its stream transform from
+``runtime.py`` applied to the batch ``events`` table (Catalyst drops
+``withWatermark`` from a batch plan): proving the batch key against a
+DuckDB oracle proves the transform's window *semantics*, and the replay
+keys prove its streaming *execution* (watermarks, state, availableNow)
+against the same oracle. ``sliding_2d_1d`` has no stream twin.
 
 Scale design: a tumbling/sliding window agg is a plain hash aggregate keyed
 by (window, group) -- one shuffle, map-side partial agg, no state explosion.
@@ -47,29 +50,12 @@ def _replay_shuffle_partitions(spark: SparkSession, n: int = 4):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
-# Session gap for session_window; chosen so sf fixtures produce many
-# multi-event sessions (events span 30 days, ~1k-100k rows).
-SESSION_GAP = "1 hour"
-
-
 def tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day event-time windows: count + rounded sum per
-    (window, event_type). Spark aligns windows to the epoch, so a 1-day
-    tumbling window start == ``date_trunc('day', ts)`` -- the oracle form."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-        .orderBy("window_start", "event_type")
+    (window, event_type) -- ``runtime.tumbling_counts`` on the batch
+    table."""
+    return runtime.tumbling_counts(load_table(spark, sf_dir, "events")).orderBy(
+        "window_start", "event_type"
     )
 
 
@@ -91,113 +77,37 @@ def sliding_2d_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows per user with a 1-hour inactivity gap: session start,
-    event count, rounded value sum. ``session_window`` merges events whose
-    timestamps are < gap apart (half-open [ts, ts+gap) extension), i.e. a
-    difference of exactly the gap starts a NEW session -- the oracle's
-    gaps-and-islands form uses ``>= gap`` accordingly."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "total_value",
-        )
-        .orderBy("user_id", "session_start")
+    event count, rounded value sum -- ``runtime.session_counts`` on the
+    batch table."""
+    return runtime.session_counts(load_table(spark, sf_dir, "events")).orderBy(
+        "user_id", "session_start"
     )
 
 
 def click_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval join (batch form of the stream-stream join): every purchase
-    attributed to each click by the same user in the preceding day.
-
-    In streaming (runtime.purchase_attribution) both sides carry watermarks
-    and the interval condition bounds the join state: a click older than
-    (watermark - 1 day) can never match again and is evicted. Batch form
-    proves the join semantics against the oracle; the equivalence test
-    proves the streaming execution."""
-    events = load_table(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("click_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("purch_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("click_user") == F.col("purch_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 DAY")),
-        )
-        .select(
-            "click_id",
-            "purchase_id",
-            F.col("click_user").alias("user_id"),
-            "click_ts",
-            "purchase_ts",
-            F.round("purchase_value", 2).alias("purchase_value"),
-        )
-        .orderBy("click_id", "purchase_id")
+    """Interval join: every purchase attributed to each click by the same
+    user in the preceding day -- ``runtime.purchase_attribution`` on the
+    batch table. Batch form proves the join semantics against the oracle;
+    ``s_stream_join`` proves the streaming execution (watermarked sides,
+    click state evicted once it can never match again)."""
+    return runtime.purchase_attribution(load_table(spark, sf_dir, "events")).orderBy(
+        "click_id", "purchase_id"
     )
 
 
 def click_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER interval join (batch form of the left-outer stream-stream
-    join): every click with its attributed purchases in the following day,
-    PLUS unconverted clicks as NULL-purchase rows -- the conversion-funnel
-    view the inner form drops. In streaming, the outer rows are emitted
-    only at state eviction (when the watermark passes click_ts + 1 day and
-    the click can never match again), so the same interval condition that
-    bounds the join state also gates the NULL emission; the batch twin
-    proves the join semantics, the runtime tests prove the execution
-    model. Same plan class as the inner form: one shuffle per side on
-    user_id, the range condition evaluated as the join residual."""
-    events = load_table(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("click_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("purch_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("click_user") == F.col("purch_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr("INTERVAL 1 DAY")
-            ),
-            "left_outer",
-        )
-        .select(
-            "click_id",
-            "purchase_id",
-            F.col("click_user").alias("user_id"),
-            "click_ts",
-            "purchase_ts",
-            F.round("purchase_value", 2).alias("purchase_value"),
-        )
-        # NULLS FIRST on both engines (Spark's asc default; DuckDB
-        # defaults NULLS LAST, so its oracle says it explicitly).
-        .orderBy("click_id", F.asc_nulls_first("purchase_id"))
-    )
+    """LEFT OUTER interval join: every click with its attributed purchases
+    in the following day, PLUS unconverted clicks as NULL-purchase rows --
+    the conversion-funnel view the inner form drops;
+    ``runtime.purchase_attribution(..., "left_outer")`` on the batch table.
+    In streaming (``s_stream_join_outer``) the outer rows are emitted only
+    at state eviction, so the same interval condition that bounds the join
+    state also gates the NULL emission. Same plan class as the inner form:
+    one shuffle per side on user_id, the range condition evaluated as the
+    join residual."""
+    return runtime.purchase_attribution(
+        load_table(spark, sf_dir, "events"), "left_outer"
+    ).orderBy("click_id", F.asc_nulls_first("purchase_id"))
 
 
 clear_mv_dirs = clear_all  # old name, kept because perfbench/run.py imports it
@@ -215,15 +125,20 @@ def _write_ordered_files(dfs, src: str) -> None:
     already-written single-file parquet batches (the session tile cache,
     ``_tile_files``): a path is copied byte-for-byte -- zero Spark jobs --
     which is what lets ten replay keys share one tile materialization
-    (guide §1.2: remove redundant passes before tuning anything)."""
-    import shutil as _shutil
+    (guide §1.2: remove redundant passes before tuning anything).
 
+    A call on a ``src`` that already holds parquet files continues after
+    them: numbering and stamps start at the next slot, and the files
+    already there keep their stamps -- how a restart lands a later batch
+    behind the ones a previous query consumed."""
     os.makedirs(src, exist_ok=True)
-    stamped: set[str] = set()
-    for i, df in enumerate(dfs):
+    existing = os.listdir(src)
+    stamped = {os.path.join(src, name) for name in existing}
+    first = sum(name.endswith(".parquet") for name in existing)
+    for i, df in enumerate(dfs, first):
         if isinstance(df, str):
             dst = os.path.join(src, f"part-{i:05d}-tile.parquet")
-            _shutil.copy(df, dst)
+            shutil.copy(df, dst)
         else:
             df.coalesce(1).write.mode("append").parquet(src)
         t = 1_000_000_000 + i * 60
@@ -426,10 +341,9 @@ def _mv_table(spark: SparkSession, sf_dir: str) -> str:
     scratch = scratch_mkdtemp(prefix="spark_incr_mv_")
     src, tbl, ckpt = (os.path.join(scratch, d) for d in ("src", "tbl", "ckpt"))
     events = load_table(spark, sf_dir, "events")
-    for i in range(3):
-        events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
+    _write_ordered_files(
+        [events.filter(F.col("event_id") % 3 == i) for i in range(3)], src
+    )
     with _replay_shuffle_partitions(spark):
         runtime.materialize_daily_rollup(
             runtime.events_stream(spark, src), tbl, ckpt, delay="3650 days"
@@ -794,16 +708,12 @@ def _restart_out(spark: SparkSession, sf_dir: str) -> str:
         runtime.running_user_micros,
         "update",
     )
-    # Land tile 3 only after query 1 has fully terminated, mtime stamped
-    # later than the first two so discovery order stays the log order
-    # (the _write_ordered_files epoch + 2 slots), then restart on the
-    # SAME checkpoint (``_replay``'s src/ckpt siblings of ``out``).
+    # Land tile 3 only after query 1 has fully terminated, stamped after
+    # the first two so discovery order stays the log order, then restart
+    # on the SAME checkpoint (``_replay``'s src/ckpt siblings of ``out``).
     scratch = os.path.dirname(out)
     src, ckpt = os.path.join(scratch, "src"), os.path.join(scratch, "ckpt")
-    dst = os.path.join(src, "part-00002-tile.parquet")
-    shutil.copy(f3, dst)
-    t = 1_000_000_000 + 2 * 60
-    os.utime(dst, (t, t))
+    _write_ordered_files([f3], src)
     with _replay_shuffle_partitions(spark):
         runtime.run_available_now(
             runtime.running_user_micros(runtime.events_stream(spark, src)),
@@ -971,64 +881,6 @@ ORACLES = {
         FROM events
         ORDER BY event_id
     """,
-    # The engine side EXECUTES the watermarked session_window replay;
-    # finalized emissions must equal the batch gaps-and-islands
-    # sessionization -- the s_session_window oracle verbatim.
-    "s_stream_sessions": """
-        WITH flagged AS (
-            SELECT user_id, ts, value,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR ts - LAG(ts) OVER w >= INTERVAL 1 HOUR
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        ),
-        sessions AS (
-            SELECT user_id, ts, value,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                                     ROWS UNBOUNDED PRECEDING) AS session_id
-            FROM flagged
-        )
-        SELECT user_id,
-               MIN(ts) AS session_start,
-               COUNT(*) AS n_events,
-               CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE)
-                   AS total_value
-        FROM sessions
-        GROUP BY user_id, session_id
-        ORDER BY user_id, session_start
-    """,
-    # The engine side EXECUTES the watermarked stream-stream interval
-    # self-join replay; the committed pairs must equal the batch interval
-    # join -- the s_interval_join oracle verbatim.
-    "s_stream_join": """
-        SELECT c.event_id AS click_id,
-               p.event_id AS purchase_id,
-               c.user_id AS user_id,
-               CAST(c.ts AS TIMESTAMP) AS click_ts,
-               CAST(p.ts AS TIMESTAMP) AS purchase_ts,
-               ROUND(p.value, 2) AS purchase_value
-        FROM events c
-        JOIN events p
-          ON c.user_id = p.user_id
-         AND CAST(p.ts AS TIMESTAMP) >= CAST(c.ts AS TIMESTAMP)
-         AND CAST(p.ts AS TIMESTAMP) <= CAST(c.ts AS TIMESTAMP) + INTERVAL 1 DAY
-        WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-        ORDER BY click_id, purchase_id
-    """,
-    # The engine side EXECUTES the append-mode tumbling replay carrying
-    # injected beyond-horizon late rows; the watermark must DROP exactly
-    # those, so the oracle is the daily rollup over the ORIGINAL events
-    # only -- the s_tumbling_daily oracle verbatim.
-    "s_stream_late": """
-        SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
-               event_type,
-               COUNT(*) AS n_events,
-               CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_value
-        FROM events
-        GROUP BY 1, 2
-        ORDER BY 1, 2
-    """,
     # The engine side EXECUTES the applyInPandasWithState replay (integer
     # micro-unit value accumulator: floor(value*1e6 + 0.5), half-up ==
     # SQL ROUND for the fixture's non-negative values); the final
@@ -1041,24 +893,6 @@ ORACLES = {
         FROM events
         GROUP BY user_id
         ORDER BY user_id
-    """,
-    # The engine side EXECUTES the watermarked LEFT OUTER stream-stream
-    # interval join replay (two-sentinel flush of the NULL-side rows);
-    # committed rows, sentinels excluded, must equal the batch left-outer
-    # interval join -- the s_interval_join_outer oracle verbatim.
-    "s_stream_join_outer": """
-        SELECT c.event_id AS click_id,
-               p.event_id AS purchase_id,
-               c.user_id AS user_id,
-               CAST(c.ts AS TIMESTAMP) AS click_ts,
-               CAST(p.ts AS TIMESTAMP) AS purchase_ts,
-               ROUND(p.value, 2) AS purchase_value
-        FROM (SELECT * FROM events WHERE event_type = 'click') c
-        LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-          ON c.user_id = p.user_id
-         AND CAST(p.ts AS TIMESTAMP) >= CAST(c.ts AS TIMESTAMP)
-         AND CAST(p.ts AS TIMESTAMP) <= CAST(c.ts AS TIMESTAMP) + INTERVAL 1 DAY
-        ORDER BY click_id, purchase_id NULLS FIRST
     """,
     # The engine side EXECUTES the complete-mode agg -> sort -> limit
     # replay, foreachBatch overwriting the snapshot per batch; the final
@@ -1074,19 +908,6 @@ ORACLES = {
         ORDER BY SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) DESC,
                  user_id
         LIMIT 10
-    """,
-    # The engine side EXECUTES the two-query-lifetime restart replay
-    # (tiles 1-2, terminate, land tile 3, NEW query on the SAME
-    # checkpoint); accumulated emissions reduce to the batch per-user
-    # rollup -- the s_stateful_counts oracle verbatim.
-    "s_stream_restart": """
-        SELECT user_id,
-               COUNT(*) AS n_events,
-               CAST(ROUND(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT))
-                          / 1000000.0, 2) AS DOUBLE) AS total_value
-        FROM events
-        GROUP BY user_id
-        ORDER BY user_id
     """,
     # The engine side EXECUTES the stream-static broadcast-enrichment
     # replay; the dim is a pure function of user_id, so the oracle
@@ -1165,6 +986,9 @@ ORACLES = {
         WHERE c.event_type = 'click' AND p.event_type = 'purchase'
         ORDER BY click_id, purchase_id
     """,
+    # NULLS FIRST on both engines: Spark's asc default, which
+    # click_purchase_attribution_outer's orderBy states; DuckDB defaults
+    # NULLS LAST, so the oracle says it explicitly.
     "s_interval_join_outer": """
         SELECT c.event_id AS click_id,
                p.event_id AS purchase_id,
@@ -1180,3 +1004,16 @@ ORACLES = {
         ORDER BY click_id, purchase_id NULLS FIRST
     """,
 }
+
+# Each replay key converges to its batch twin's oracle; one line per key
+# names the invariant the replay proves.
+# Session replay: finalized sessions, sentinels excluded, equal the batch.
+ORACLES["s_stream_sessions"] = ORACLES["s_session_window"]
+# Interval-join replay: buffered click state loses and invents no pair.
+ORACLES["s_stream_join"] = ORACLES["s_interval_join"]
+# Late-row replay: the watermark drops every injected beyond-horizon row.
+ORACLES["s_stream_late"] = ORACLES["s_tumbling_daily"]
+# Restart replay: offsets and state survive a new query on one checkpoint.
+ORACLES["s_stream_restart"] = ORACLES["s_stateful_counts"]
+# Outer-join replay: each unmatched click's NULL row emits once, at eviction.
+ORACLES["s_stream_join_outer"] = ORACLES["s_interval_join_outer"]

@@ -205,33 +205,16 @@ def test_streaming_session_windows_equal_batch(spark, tmp_path):
     finalize under. The final watermark (+78d) flushes the +40d
     sentinel's own 1-event session too, so sentinel users are excluded
     before comparing (their flush timing is a stopping-point detail)."""
-    import datetime
-    import time as _time
-
     from delta_lake_stock_pipeline_spark.streaming.windows import (
+        _sentinels,
+        _write_ordered_files,
         session_windows,
     )
 
     src = str(tmp_path / "src")
     events = load_table(spark, SF_DIR, "events")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
     max_ts = events.agg(F.max("ts")).collect()[0][0]
-    for i, days in enumerate([40, 80]):
-        sentinel = spark.createDataFrame(
-            [
-                (
-                    10**9 + i,
-                    max_ts + datetime.timedelta(days=days),
-                    10**9 + i,
-                    "click",
-                    0.0,
-                    "{}",
-                )
-            ],
-            events.schema,
-        )
-        _time.sleep(1.1)
-        sentinel.coalesce(1).write.mode("append").parquet(src)
+    _write_ordered_files([events] + _sentinels(spark, max_ts), src)
 
     got = runtime.run_available_now(
         runtime.session_counts(runtime.events_stream(spark, src)),
@@ -256,16 +239,14 @@ def test_stream_outer_interval_join_evicts_and_emits_nulls(spark, tmp_path):
     farther sentinel gives that watermark its own cleanup batch -- see
     the comment below); the accumulated emissions must equal the batch
     LEFT OUTER join over the fixture exactly."""
-    import datetime
-    import time as _time
-
     from delta_lake_stock_pipeline_spark.streaming.windows import (
+        _sentinels,
+        _write_ordered_files,
         click_purchase_attribution_outer,
     )
 
     src = str(tmp_path / "src")
     events = load_table(spark, SF_DIR, "events")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
     max_ts = events.agg(F.max("ts")).collect()[0][0]
     # Each sentinel file carries a click AND a purchase (on two fresh,
     # distinct users, so neither can ever match anything): the join's
@@ -276,24 +257,9 @@ def test_stream_outer_interval_join_evicts_and_emits_nulls(spark, tmp_path):
     # is applied while processing batch N+1, and availableNow stops
     # after the last data batch): the +80d file gives the +40d
     # watermark its own batch to evict under.
-    for i, days in enumerate([40, 80]):
-        ts = max_ts + datetime.timedelta(days=days)
-        sentinel = spark.createDataFrame(
-            [
-                (10**9 + 2 * i, ts, 10**9 + 2 * i, "click", 0.0, "{}"),
-                (
-                    10**9 + 2 * i + 1,
-                    ts,
-                    10**9 + 2 * i + 1,
-                    "purchase",
-                    0.0,
-                    "{}",
-                ),
-            ],
-            events.schema,
-        )
-        _time.sleep(1.1)  # distinct mtime: the file source orders by it
-        sentinel.coalesce(1).write.mode("append").parquet(src)
+    _write_ordered_files(
+        [events] + _sentinels(spark, max_ts, ("click", "purchase")), src
+    )
 
     stream = runtime.events_stream(spark, src)
     got = runtime.run_available_now(
@@ -487,6 +453,40 @@ def test_write_ordered_batches_pins_admission_order(spark, tmp_path):
     max_first = first.agg(F.max("ts")).collect()[0][0]
     for df in rest:
         assert df.agg(F.min("ts")).collect()[0][0] >= max_first
+
+
+def test_write_ordered_files_continues_after_existing_files(tmp_path):
+    """A second ``_write_ordered_files`` call on the same source dir (the
+    restart replay's shape) must number and stamp its files after the
+    first call's, and leave the first call's stamps alone -- otherwise it
+    overwrites ``part-00000`` and the file source re-reads or reorders
+    batches a previous query already consumed."""
+    import os
+
+    from delta_lake_stock_pipeline_spark.streaming.windows import (
+        _write_ordered_files,
+    )
+
+    tiles = []
+    for i in range(3):
+        tile = tmp_path / f"tile{i}.parquet"
+        tile.write_bytes(f"tile {i}".encode())
+        tiles.append(str(tile))
+    src = str(tmp_path / "src")
+
+    _write_ordered_files(tiles[:2], src)
+    first = {f: os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)}
+    _write_ordered_files(tiles[2:], src)
+
+    names = sorted(os.listdir(src))
+    assert len(names) == 3, names
+    for f, t in first.items():
+        assert os.path.getmtime(os.path.join(src, f)) == t, f
+    (new,) = set(names) - set(first)
+    assert new > max(first)
+    assert os.path.getmtime(os.path.join(src, new)) > max(first.values())
+    with open(os.path.join(src, new), "rb") as fh:
+        assert fh.read() == b"tile 2"
 
 
 def test_registered_streaming_lifecycle_keys_commit_incrementally(spark):
